@@ -52,9 +52,7 @@ object Bench {
     val key = "spark.sql.streaming.stateStore.providerClass"
     for (provider <- Seq[Option[String]](None,
         Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))) {
-      val prev = spark.conf.getOption(key)
-      try {
-        provider.foreach(spark.conf.set(key, _))
+      def warm(): Unit = {
         import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
         import spark.implicits._
@@ -64,13 +62,9 @@ object Bench {
           .writeStream.outputMode("complete").format("memory")
           .queryName(s"graft_warm_${provider.isDefined}").start()
         try q.processAllAvailable() finally q.stop()
-      } catch { case _: Throwable => () }
-      finally {
-        prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
       }
+      try provider.fold(warm())(Scoped.conf(spark, key, _)(warm()))
+      catch { case _: Throwable => () }
     }
   }
 

@@ -2578,12 +2578,7 @@ object Graft {
       val s = joined.sparkSession
       Seq(leftTable, rightTable).foreach { t =>
         s.sql(s"DROP TABLE IF EXISTS `$t`")
-        val dir = new java.io.File(warehouseDir, t)
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        if (dir.exists()) rm(dir)
+        graft.Scoped.rm(s"$warehouseDir/$t")
       }
     }
   }

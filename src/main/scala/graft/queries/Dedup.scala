@@ -208,10 +208,10 @@ object Dedup {
     // JVM-level lock: the exists→write guard alone is check-then-act — two
     // session threads racing it would run overlapping overwrite jobs into
     // the same path (the second deleting files the first just committed).
-    // Cross-SESSION writers are already isolated by artifactBase's
+    // Cross-SESSION writers are already isolated by Scoped.dir's
     // application-id scoping; this lock closes the same-session window.
     buildLock.synchronized {
-      val path = Formats.artifactBase(s, "graft_minhash_sigs", d) + "/sigs"
+      val path = graft.Scoped.dir(s, "graft_minhash_sigs", d) + "/sigs"
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS"))) {
@@ -268,10 +268,10 @@ object Dedup {
     // generation marker, and a screen against the folded result.
     val sigTable = ensureSignatureTable(s, d)
     def storedSigs() = s.read.parquet(sigTable)
-    // artifactBase carries the raw-path md5 disambiguation — without it,
+    // Scoped.dir carries the raw-path md5 disambiguation — without it,
     // /data/sf1 and /data_sf1 sanitize to one key and the second dataset
     // silently screens against the first one's fold-in index
-    val base = Formats.artifactBase(s, "graft_minhash_foldin", d)
+    val base = graft.Scoped.dir(s, "graft_minhash_foldin", d)
     val indexPath = base + "/index"
     val marker = new org.apache.hadoop.fs.Path(base, "_FOLDIN_DONE")
     val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)

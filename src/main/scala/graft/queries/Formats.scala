@@ -8,40 +8,8 @@ import graft.Tables
   * structured JSON parse (`from_json`), typed field extraction, and
   * re-serialization (`to_json`) — round-tripping inside one codegen stage. */
 object Formats {
-  /** Dirs registered here are recursively deleted at JVM exit — staging
-    * trees are app-id-unique (see callers), so each session cleans only its
-    * own tree and concurrent sessions never share a path. */
-  private val cleanupDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   /** Serializes schemaEvolution's generation writes (ADVICE r12). */
   private val evoLock = new Object
-  private[graft] def registerCleanup(dir: String): Unit =
-    if (cleanupDirs.putIfAbsent(dir, java.lang.Boolean.TRUE) == null) {
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(dir))
-      }))
-    }
-
-  /** App-unique, DATASET-unique artifact directory under /tmp/`rootName`:
-    * the sanitized dataset path PLUS an md5 prefix of the raw path —
-    * sanitization alone maps distinct dirs (/data/sf1, /data_sf1) to one
-    * key, silently serving one dataset's artifact for the other. One
-    * derivation shared by every at-rest artifact (IVF index, IVF refresh,
-    * minhash fold-in index) so the disambiguation cannot be forgotten.
-    * Registers `root` for JVM-exit cleanup. */
-  private[graft] def artifactBase(s: org.apache.spark.sql.SparkSession,
-      rootName: String, d: String): String = {
-    val root = s"/tmp/$rootName/${s.sparkContext.applicationId}"
-    registerCleanup(root)
-    val pathHash = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    root + "/" + d.replaceAll("[^A-Za-z0-9.]", "_") + "_" + pathHash
-  }
 
   def jsonRoundtrip(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
@@ -57,11 +25,7 @@ object Formats {
     * losslessness by aggregating text lengths per (lang, format) — any
     * mangled row would shift the sums off the parquet-direct oracle. */
   def formatRoundtrip(s: SparkSession, d: String): DataFrame = {
-    // App-id-unique staging (same scheme as zorderPruneReadback): concurrent
-    // sessions each write their own tree; cleaned up at JVM exit.
-    val base = s"/tmp/graft_fmt_roundtrip/${s.sparkContext.applicationId}/" +
-      d.replaceAll("[^A-Za-z0-9.]", "_")
-    Formats.registerCleanup(s"/tmp/graft_fmt_roundtrip/${s.sparkContext.applicationId}")
+    val base = graft.Scoped.dir(s, "graft_fmt_roundtrip", d)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("text"))
     docs.write.mode("overwrite").option("header", "true").csv(s"$base/csv")
@@ -95,13 +59,13 @@ object Formats {
     * a metastore/catalog and evolves it there; this row demonstrates the
     * file-level mechanics the catalog automates. */
   def schemaEvolution(s: SparkSession, d: String): DataFrame = {
-    val base = artifactBase(s, "graft_schema_evo", d)
+    val base = graft.Scoped.dir(s, "graft_schema_evo", d)
     // build-once guard (ADVICE r12): exists→write alone is check-then-act —
     // two same-session invocations racing it would run overlapping
     // overwrite jobs into the same generations while a concurrent
     // mergeSchema read lists the files (the ensureSignatureTable pattern:
     // JVM lock + a marker written only after both generations committed;
-    // cross-session writers are isolated by artifactBase's app-id scoping)
+    // cross-session writers are isolated by Scoped.dir's app-id scoping)
     evoLock.synchronized {
       val marker = new org.apache.hadoop.fs.Path(base, "_GENS_DONE")
       val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -157,11 +121,7 @@ object Formats {
     * partition's files and the whole table. Results oracle-checked against
     * the unpartitioned parquet. */
   def partitionedWrite(s: SparkSession, d: String): DataFrame = {
-    // App-id-unique staging (same scheme as zorderPruneReadback): concurrent
-    // sessions each write their own tree; cleaned up at JVM exit.
-    val base = s"/tmp/graft_part_write/${s.sparkContext.applicationId}/" +
-      d.replaceAll("[^A-Za-z0-9.]", "_")
-    Formats.registerCleanup(s"/tmp/graft_part_write/${s.sparkContext.applicationId}")
+    val base = graft.Scoped.dir(s, "graft_part_write", d)
     Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"),
         col("l_returnflag"), col("l_linestatus"))
@@ -207,13 +167,10 @@ object Formats {
     * dimensions (PlanAudit-pinned); Round7Spec additionally verifies
     * physical row-group prune-ability from the parquet footers. */
   def zorderPruneReadback(s: SparkSession, d: String): DataFrame = {
-    // Run-unique staging dir (app id), so concurrent sessions over the same
+    // app-id-unique (Scoped.dir), so concurrent sessions over the same
     // dataset can't clobber each other's overwrite-then-read (ADVICE r7);
-    // within a session the path is stable, so re-invocations just overwrite.
-    // The whole app-id tree is removed at JVM exit.
-    val base = s"/tmp/graft_zorder_rb/${s.sparkContext.applicationId}/" +
-      d.replaceAll("[^A-Za-z0-9.]", "_")
-    Formats.registerCleanup(s"/tmp/graft_zorder_rb/${s.sparkContext.applicationId}")
+    // within a session the path is stable, so re-invocations just overwrite
+    val base = graft.Scoped.dir(s, "graft_zorder_rb", d)
     graft.api.Graft.zorderKey(
         Tables.events(s, d).select(col("event_id"), col("user_id"), col("value")),
         "user_id", "value", bits = 16)

@@ -321,10 +321,7 @@ object Modern {
       .repartition(1)
       .localCheckpoint(true)
       .createOrReplaceTempView(view)
-    val confKey = "spark.sql.scripting.enabled"
-    val prev = s.conf.get(confKey, "false")
-    s.conf.set(confKey, "true")
-    try {
+    graft.Scoped.conf(s, "spark.sql.scripting.enabled", "true") {
       // 6 bisection steps over GRID-DERIVED bounds (VERDICT r14 #8: this
       // was the heaviest relational row at 4.1 s, and the cost is the
       // scripting interpreter's per-statement floor × statement count —
@@ -364,6 +361,6 @@ object Modern {
       s.catalog.dropTempView(view)
       s.createDataFrame(
         s.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-    } finally s.conf.set(confKey, prev)
+    }
   }
 }

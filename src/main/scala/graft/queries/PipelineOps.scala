@@ -426,10 +426,10 @@ object PipelineOps {
     * The query writes the bucketed tables to a temp warehouse dir, then
     * joins them through the catalog. */
   def joinBucketed(s: SparkSession, d: String): DataFrame = {
-    // per-run temp warehouse + run-unique table names (Graft.bucketedJoin):
+    // app-id-unique warehouse + run-unique table names (Graft.bucketedJoin):
     // concurrent sessions never collide, and nothing leaks into the catalog —
     // the aggregate is materialized before the tables are dropped
-    val wh = java.nio.file.Files.createTempDirectory("graft_bucketed_q").toString
+    val wh = graft.Scoped.dir(s, "graft_bucketed_q", d)
     val bj = graft.api.Graft.bucketedJoin(
       Tables.lineitem(s, d).select("l_orderkey", "l_quantity"),
       Tables.orders(s, d).select("o_orderkey", "o_orderpriority"),
@@ -439,7 +439,6 @@ object PipelineOps {
       .agg(count(lit(1)).as("n_lines"), round(sum("l_quantity"), 2).as("sum_qty"))
       .localCheckpoint(true)
     bj.drop()
-    new java.io.File(wh).delete()
     out.orderBy("o_orderpriority")
   }
 

@@ -201,7 +201,7 @@ object Similarity {
   private[graft] def ensurePersistedIvf(s: SparkSession, d: String): (String, String) =
     indexBuildLock.synchronized {
     VectorFunctions.register(s)
-    val base = graft.queries.Formats.artifactBase(s, "graft_ivf_index", d)
+    val base = graft.Scoped.dir(s, "graft_ivf_index", d)
     val cPath = base + "/centroids"; val pPath = base + "/postings"
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -241,7 +241,7 @@ object Similarity {
     * fold-in equals the from-scratch assignment. */
   def knnIvfRefresh(s: SparkSession, d: String): DataFrame = {
     VectorFunctions.register(s)
-    val base = graft.queries.Formats.artifactBase(s, "graft_ivf_refresh", d)
+    val base = graft.Scoped.dir(s, "graft_ivf_refresh", d)
     val cPath = base + "/centroids"; val pPath = base + "/postings"
     val marker = new org.apache.hadoop.fs.Path(base, "_REFRESH_DONE")
     val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -328,7 +328,7 @@ object Similarity {
   private[graft] def ensurePersistedPq(s: SparkSession, d: String): (String, String) =
     indexBuildLock.synchronized {
     VectorFunctions.register(s)
-    val base = graft.queries.Formats.artifactBase(s, "graft_pq_model", d)
+    val base = graft.Scoped.dir(s, "graft_pq_model", d)
     val cbPath = base + "/codebooks"; val cdPath = base + "/codes"
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -620,7 +620,7 @@ object Similarity {
   private[graft] def ensurePersistedIvfPq(s: SparkSession, d: String)
       : (String, String, String, String) = indexBuildLock.synchronized {
     VectorFunctions.register(s)
-    val base = graft.queries.Formats.artifactBase(s, "graft_ivfpq_index", d)
+    val base = graft.Scoped.dir(s, "graft_ivfpq_index", d)
     val cPath = base + "/centroids"; val aPath = base + "/assigned"
     val cbPath = base + "/codebooks"; val cdPath = base + "/codes"
     val fs = new org.apache.hadoop.fs.Path(base)

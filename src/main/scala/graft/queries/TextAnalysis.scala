@@ -432,7 +432,7 @@ object TextAnalysis {
     * Serves dsir_select, stream_dsir, and stream_online_curate. */
   private[graft] def ensureDsirModel(s: SparkSession, d: String): String =
     dsirBuildLock.synchronized {
-      val path = Formats.artifactBase(s, "graft_dsir_model", d) + "/model"
+      val path = graft.Scoped.dir(s, "graft_dsir_model", d) + "/model"
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS"))) {

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Faithful re-expression of the reference program
   * (`/root/reference/study/src/main/scala/group/xc/flink/stream/demo1/StreamSocket.scala:12-16`):
@@ -9,11 +8,11 @@ import org.apache.spark.sql.functions._
   * count → print sink, running forever.
   *
   * Mapping (SURVEY.md §2.A): socketTextStream → `format("socket")`;
-  * flatMap(split) → `explode(split)`; keyBy(0).sum(1) → streaming
-  * `groupBy("word").count()` in update mode (per-micro-batch refreshed rows —
-  * the Spark-native equivalent of Flink's per-record emission; state agrees at
-  * every batch boundary); print() → console sink; execute() →
-  * `start().awaitTermination()`.
+  * flatMap(split) + keyBy(0).sum(1) → `Graft.rollingWordCount` (explode of
+  * the split, then a streaming per-word count) in update mode
+  * (per-micro-batch refreshed rows — the Spark-native equivalent of Flink's
+  * per-record emission; state agrees at every batch boundary); print() →
+  * console sink; execute() → `start().awaitTermination()`.
   *
   * Run: `sbt "runMain graft.streaming.SocketWordCount <host> <port>"`
   * (e.g. against `nc -lk 9999`).
@@ -36,11 +35,7 @@ object SocketWordCount {
       .option("port", port)
       .load()
 
-    val counts = lines
-      .select(explode(split(col("value"), " ", -1)).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy("word")
-      .count()
+    val counts = graft.api.Graft.rollingWordCount(lines, "value")
 
     val query = counts.writeStream
       .outputMode("update")

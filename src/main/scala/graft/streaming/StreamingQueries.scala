@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import graft.Scoped
 
 /** Per-key running count+sum on the Spark 4.x transformWithState API — the
   * reference's I6 rolling keyed aggregate as typed arbitrary state, emitting a
@@ -143,28 +144,53 @@ object StreamingQueries {
     // dominates the extra parallelism even on that row's ~0.5M exploded
     // rows; SCALE.md Round-16.) On a cluster this stays whatever the
     // session sets — state partitioning is the scale mechanism.
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    val tuned = math.min(prev.toInt, 2).toString
-    s.conf.set(key, tuned)
-    try {
+    capShuffle(s, 2) {
       val q = stream.writeStream.outputMode(mode).format("memory").queryName(name).start()
       try { q.processAllAvailable() } finally { q.stop() }
       q.awaitTermination()
-    } finally s.conf.set(key, prev)
+    }
     s.table(name)
   }
+
+  /** Drains `stream` through `fn` as real micro-batches: Trigger.AvailableNow
+    * with its checkpoint under `base`/ckpt, returning once every staged file
+    * is committed. The shared runner of the staged-batch loops; `fn` keeps
+    * each batch exactly-once by writing batch_id-keyed overwrites. Same
+    * local-mode knob as runToMemory: each per-batch job shuffles a slice of
+    * a bounded table, so the shuffle width is capped at 4 (on a cluster the
+    * session value stands). */
+  private def runBatches(s: SparkSession, stream: DataFrame, base: String)(
+      fn: (DataFrame, Long) => Unit): Unit = capShuffle(s, 4) {
+    val q = stream.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", base + "/ckpt")
+      .foreachBatch(fn)
+      .start()
+    try q.awaitTermination() finally q.stop()
+  }
+
+  /** Runs `body` with spark.sql.shuffle.partitions capped at `n`. */
+  private def capShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    Scoped.conf(s, key, math.min(s.conf.get(key).toInt, n).toString)(body)
+  }
+
+  /** Runs `body` on the RocksDB state store provider. */
+  private def onRocksDb[T](s: SparkSession)(body: => T): T =
+    Scoped.conf(s, "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   /** Streaming read of a test table. The file source requires a DIRECTORY
     * (its basePath) while the test tables are single parquet files, so the
     * file is exposed through a per-table temp directory via symlink — the
     * shape a production deployment has anyway (a directory of files arriving
-    * over time). Needs an explicit schema; events additionally needs the
-    * ns→NTZ conversion from graft.Tables. */
+    * over time). The link dir is Scoped scratch; its JVM-exit cleanup removes
+    * the link, never the table it points at. Needs an explicit schema;
+    * events additionally needs the ns→NTZ conversion from graft.Tables. */
   private def readStreamTable(s: SparkSession, d: String, name: String): DataFrame = {
     import java.nio.file.{Files, Paths}
     val file = Paths.get(s"$d/$name.parquet")
-    val dir = Paths.get(s"/tmp/graft_stream_src/${d.replaceAll("[^A-Za-z0-9.]", "_")}/$name")
+    val dir = Paths.get(Scoped.dir(s, "graft_stream_src", d), name)
     Files.createDirectories(dir)
     val link = dir.resolve(s"$name.parquet")
     if (!Files.exists(link)) Files.createSymbolicLink(link, file)
@@ -672,11 +698,7 @@ object StreamingQueries {
     * positive.) */
   def streamRollingSumTws(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    onRocksDb(s) {
       val rolled = readStreamTable(s, d, "events")
         .select(col("user_id"), col("value"))
         .as[(Long, Double)]
@@ -688,8 +710,6 @@ object StreamingQueries {
         .groupBy("user_id")
         .agg(max("n").as("n"), round(expr("max_by(total, n)"), 2).as("total"))
         .orderBy("user_id")
-    } finally {
-      prev match { case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key) }
     }
   }
 
@@ -700,31 +720,18 @@ object StreamingQueries {
     * aggregate (shared oracle). A real deployment swaps the store's `upsert`
     * for a Redis/HBase client; the pipeline is unchanged. */
   def streamKvUpsert(s: SparkSession, d: String): DataFrame = {
-    // Sanitizer must strip dots too: a relative dataset path like ".." would
-    // otherwise resolve the scratch dir to /tmp itself and the recursive
-    // delete below would eat unrelated files.
-    val dir = s"/tmp/graft_kv_upsert/${d.replaceAll("[^A-Za-z0-9]", "_")}"
+    val dir = Scoped.dir(s, "graft_kv_upsert", d)
     // clean slate per run so the snapshot reflects exactly this run
-    val root = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(root)
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-      finally walk.close()
-    }
+    Scoped.rm(dir)
     val store = new graft.connectors.ParquetKeyValueStore(dir, "n")
     val agg = readStreamTable(s, d, "events")
       .groupBy("user_id")
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total"))
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, math.min(prev.toInt, 4).toString)
-    try {
+    capShuffle(s, 4) {
       val q = graft.connectors.KeyValueSink.start(agg, store, "user_id",
         "graft_stream_kv_upsert")
       try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set(key, prev)
+    }
     store.snapshot(s).orderBy("user_id")
   }
 
@@ -807,11 +814,7 @@ object StreamingQueries {
   def streamKnnTtl(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     graft.functions.VectorFunctions.register(s)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    onRocksDb(s) {
       val corpus = graft.Tables.embeddings(s, d)
         .select(col("vec_id").as("c_id"), col("embedding").as("cv"), col("label"))
       val queries = readStreamTable(s, d, "embeddings")
@@ -838,8 +841,6 @@ object StreamingQueries {
         .select(col("q_id"), col("rn").cast("int").as("rn"), col("c_id"),
           col("label"), col("cos_sim"))
         .orderBy("q_id", "rn")
-    } finally {
-      prev match { case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key) }
     }
   }
 
@@ -868,13 +869,8 @@ object StreamingQueries {
   def streamKnnTtlEvict(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     graft.functions.VectorFunctions.register(s)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val base = s"/tmp/graft_stream_ttl_evict/${s.sparkContext.applicationId}/" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
+    onRocksDb(s) {
+      val base = Scoped.dir(s, "graft_stream_ttl_evict", d)
       val emb = graft.Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val spec = ((0L to 9L).map(q => (q, q, "2024-01-01 00:00:00", 0)) ++
         Seq((10L, 10L, "2024-01-01 02:00:00", 1),
@@ -910,8 +906,6 @@ object StreamingQueries {
         .select(col("q_id"), col("rn").cast("int").as("rn"), col("c_id"),
           col("label"), col("cos_sim"))
         .orderBy("q_id", "rn")
-    } finally {
-      prev match { case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key) }
     }
   }
 
@@ -933,38 +927,23 @@ object StreamingQueries {
     * knn_ivf's closed-form unroll verbatim (the index answers
     * bit-identically to the in-memory model). */
   def streamKnnIvf(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     graft.functions.VectorFunctions.register(s)
     val (cPath, pPath) = graft.queries.Similarity.ensurePersistedIvf(s, d)
-    val base = s"/tmp/graft_stream_knn_ivf/${s.sparkContext.applicationId}/" +
-      d.replaceAll("[^A-Za-z0-9.]", "_")
+    val base = Scoped.dir(s, "graft_stream_knn_ivf", d)
     val queries = graft.Tables.embeddings(s, d).filter(col("vec_id") < 10)
       .select(col("vec_id"), col("embedding"))
     val srcDir = stageOrderedBatches(queries, base, "vec_id", 2)
     val answers = base + "/answers"
     val stream = s.readStream.schema(queries.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    // same local-mode knob as the other staged-batch loops: each probe
-    // batch joins a handful of query vectors against the pruned postings
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, math.min(prev.toInt, 4).toString)
-    try {
-      val q = stream.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", base + "/ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          // exactly-once: batch_id-keyed OVERWRITE, so a retried batch
-          // rewrites its own partition instead of double-appending answers
-          graft.queries.Similarity.ivfSearch(s,
-              s.read.parquet(cPath), s.read.parquet(pPath),
-              batch.select(col("vec_id").as("q_id"), col("embedding").as("qv")))
-            .write.mode("overwrite").parquet(answers + s"/batch_id=$id")
-          ()
-        }
-        .start()
-      try q.awaitTermination() finally q.stop()
-    } finally s.conf.set(key, prev)
+    runBatches(s, stream, base) { (batch, id) =>
+      // exactly-once: batch_id-keyed OVERWRITE, so a retried batch
+      // rewrites its own partition instead of double-appending answers
+      graft.queries.Similarity.ivfSearch(s,
+          s.read.parquet(cPath), s.read.parquet(pPath),
+          batch.select(col("vec_id").as("q_id"), col("embedding").as("qv")))
+        .write.mode("overwrite").parquet(answers + s"/batch_id=$id")
+    }
     s.read.parquet(answers)
       .select("q_id", "rn", "c_id", "label", "cos_sim")
       .orderBy("q_id", "rn")
@@ -1062,12 +1041,7 @@ object StreamingQueries {
     * loop and the streaming IVF probe. Returns the source directory. */
   private[graft] def stageOrderedBatches(df: DataFrame, base: String,
       bucketCol: String, n: Int): String = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    rm(new java.io.File(base))
-    graft.queries.Formats.registerCleanup(base)
+    Scoped.rm(base)
     val srcDir = new java.io.File(base, "src"); srcDir.mkdirs()
     val t0 = 1700000000000L
     // ONE corpus pass stages every batch (VERDICT r12 task 7): the original
@@ -1106,11 +1080,11 @@ object StreamingQueries {
         if (p.length != 1) sys.error(
           s"empty-batch staging expected one part in $tmp, got ${p.length}")
         java.nio.file.Files.move(p(0).toPath, dst.toPath)
-        rm(tmp)
+        Scoped.rm(tmp.toString)
       }
       dst.setLastModified(t0 + b * 60000L): Unit
     }
-    rm(stage)
+    Scoped.rm(stage.toString)
     srcDir.toString
   }
 
@@ -1122,33 +1096,17 @@ object StreamingQueries {
     * `Graft.xx63GramSql`. Measured sf1 A/B in SCALE.md. */
   private[graft] def streamOnlineDedup(s: SparkSession, d: String,
       gramHashSql: String => String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = s"/tmp/graft_stream_online/${s.sparkContext.applicationId}/" +
-      d.replaceAll("[^A-Za-z0-9.]", "_")
+    val base = Scoped.dir(s, "graft_stream_online", d)
     val docs = graft.Tables.documents(s, d).select(col("doc_id"), col("text"))
-    // three ordered ingest files; clean slate per run (same per-run hygiene
+    // ordered ingest files; clean slate per run (same per-run hygiene
     // as streamKvUpsert)
-    val srcDir = new java.io.File(
-      stageOrderedBatches(docs, base, "doc_id", 2))
+    val srcDir = stageOrderedBatches(docs, base, "doc_id", 2)
     val indexPath = base + "/index"; val flagsPath = base + "/flags"
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-    // same local-mode knob as streamCdcApply/streamPackSequences: each
-    // per-batch job shuffles a tercile of a bounded table — 32 partitions
-    // is pure task overhead here (on a cluster the session value stands)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, math.min(prev.toInt, 4).toString)
-    try {
-      val q = stream.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", base + "/ckpt")
-        .foreachBatch(onlineDedupBatch(s, indexPath, flagsPath, gramHashSql) _)
-        .start()
-      try q.awaitTermination() finally q.stop()
-    } finally s.conf.set(key, prev)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
+    runBatches(s, stream, base)(onlineDedupBatch(s, indexPath, flagsPath, gramHashSql))
     if (fs.exists(new org.apache.hadoop.fs.Path(flagsPath)))
       s.read.parquet(flagsPath)
         .select(col("new_id").as("doc_id"), col("index_id").as("dup_of"),
@@ -1220,9 +1178,7 @@ object StreamingQueries {
     * at-rest hash index, the broadcast eval signatures, and the 256-row
     * model. */
   def streamOnlineCurate(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = s"/tmp/graft_stream_curate/${s.sparkContext.applicationId}/" +
-      d.replaceAll("[^A-Za-z0-9.]", "_")
+    val base = Scoped.dir(s, "graft_stream_curate", d)
     val all = graft.Tables.documents(s, d)
     val stream0 = all.filter(col("doc_id") % 17 =!= 0)
       .select(col("doc_id"), col("text"))
@@ -1238,19 +1194,8 @@ object StreamingQueries {
     val indexPath = base + "/index"; val keptPath = base + "/kept"
     val stream = s.readStream.schema(stream0.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    // same local-mode knob as streamCdcApply: per-batch jobs over a
-    // tercile of a bounded table — cap the shuffle width
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, math.min(prev.toInt, 4).toString)
-    try {
-      val q = stream.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", base + "/ckpt")
-        .foreachBatch(onlineCurateBatch(s, indexPath, keptPath, evalSigs, model) _)
-        .start()
-      try q.awaitTermination() finally q.stop()
-    } finally s.conf.set(key, prev)
+    runBatches(s, stream, base)(
+      onlineCurateBatch(s, indexPath, keptPath, evalSigs, model))
     s.read.parquet(keptPath)
       .select("doc_id", "n_tokens", "llr")
       .orderBy("doc_id")
@@ -1302,18 +1247,12 @@ object StreamingQueries {
     * stream (`keyBy(0).sum(1)`), running on the RocksDB state store provider
     * (declared surface D6 — flink-statebackend-rocksdb, study/pom.xml:70-74). */
   def streamRollingSum(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    onRocksDb(s) {
       val agg = readStreamTable(s, d, "events")
         .groupBy("user_id")
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total"))
       runToMemory(s, agg, "graft_stream_rolling_sum", "complete")
         .orderBy("user_id")
-    } finally {
-      prev match { case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key) }
     }
   }
 
@@ -1335,44 +1274,31 @@ object StreamingQueries {
     * one key-shuffle of |snapshot| + |batch| (at 100 TB the snapshot join
     * would bucket on the key, exactly the partitioned-write layout). */
   def streamCdcApply(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = s"/tmp/graft_stream_cdc/${s.sparkContext.applicationId}/" +
-      d.replaceAll("[^A-Za-z0-9.]", "_")
+    val base = Scoped.dir(s, "graft_stream_cdc", d)
     val log = graft.queries.PipelineOps.cdcLog(s, d)
       .withColumn("__bb", least(col("seq") - 1, lit(1L)))
     val srcDir = stageOrderedBatches(log, base, "__bb", 2)
     val snapBase = base + "/snap"
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, math.min(prev.toInt, 4).toString)
-    try {
-      val stream = s.readStream.schema(log.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val q = stream.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", base + "/ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val rows = batch.toDF().drop("__bb")
-          val merged =
-            if (id == 0) graft.api.Graft.cdcApply(rows, "k", "seq", "op",
-              keepTombstones = true)
-            else graft.api.Graft.cdcApply(
-              s.read.parquet(snapBase + s"/batch_id=${id - 1}")
-                .unionByName(rows),
-              "k", "seq", "op", keepTombstones = true)
-          merged.write.mode("overwrite").parquet(snapBase + s"/batch_id=$id")
-          ()
-        }
-        .start()
-      try q.awaitTermination() finally q.stop()
-      val last = Option(new java.io.File(snapBase).listFiles())
-        .getOrElse(Array.empty)
-        .filter(_.getName.startsWith("batch_id="))
-        .map(_.getName.stripPrefix("batch_id=").toInt).max
-      graft.queries.PipelineOps.cdcRollup(
-        s.read.parquet(snapBase + s"/batch_id=$last")
-          .filter(col("op") =!= "D"))
-    } finally s.conf.set(key, prev)
+    val stream = s.readStream.schema(log.schema)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
+    runBatches(s, stream, base) { (batch, id) =>
+      val rows = batch.drop("__bb")
+      val merged =
+        if (id == 0) graft.api.Graft.cdcApply(rows, "k", "seq", "op",
+          keepTombstones = true)
+        else graft.api.Graft.cdcApply(
+          s.read.parquet(snapBase + s"/batch_id=${id - 1}")
+            .unionByName(rows),
+          "k", "seq", "op", keepTombstones = true)
+      merged.write.mode("overwrite").parquet(snapBase + s"/batch_id=$id")
+    }
+    val last = Option(new java.io.File(snapBase).listFiles())
+      .getOrElse(Array.empty)
+      .filter(_.getName.startsWith("batch_id="))
+      .map(_.getName.stripPrefix("batch_id=").toInt).max
+    graft.queries.PipelineOps.cdcRollup(
+      s.read.parquet(snapBase + s"/batch_id=$last")
+        .filter(col("op") =!= "D"))
   }
 
   /** SEQUENCE PACKING AT INGEST — pack_sequences' global token cumsum run
@@ -1388,42 +1314,29 @@ object StreamingQueries {
     * order. Scale: per-batch work is the two-phase prefix sum over the
     * BATCH only; the cross-batch dependency is one scalar. */
   def streamPackSequences(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = s"/tmp/graft_stream_pack/${s.sparkContext.applicationId}/" +
-      d.replaceAll("[^A-Za-z0-9.]", "_")
+    val base = Scoped.dir(s, "graft_stream_pack", d)
     val docs = graft.Tables.documents(s, d).select(col("doc_id"), col("text"))
     val srcDir = stageOrderedBatches(docs, base, "doc_id", 2)
     val asgBase = base + "/asg"; val carryBase = base + "/carry"
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, math.min(prev.toInt, 4).toString)
-    try {
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val q = stream.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", base + "/ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val carry =
-            if (id == 0) 0L
-            else s.read.parquet(carryBase + s"/batch_id=${id - 1}")
-              .head().getLong(0)
-          val asg = graft.api.Graft.packSequences(batch.toDF(), "doc_id",
-            "text", seqLen = 2048, startOffset = carry)
-            .localCheckpoint(true) // consumed twice: assignments + carry
-          asg.write.mode("overwrite").parquet(asgBase + s"/batch_id=$id")
-          asg.agg((sum("n_tokens") + lit(carry)).as("carry"))
-            .write.mode("overwrite").parquet(carryBase + s"/batch_id=$id")
-          ()
-        }
-        .start()
-      try q.awaitTermination() finally q.stop()
-      s.read.parquet(asgBase)
-        .groupBy("seq_id")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("seq_tokens"),
-          min("doc_id").as("first_doc"))
-        .orderBy("seq_id")
-    } finally s.conf.set(key, prev)
+    val stream = s.readStream.schema(docs.schema)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
+    runBatches(s, stream, base) { (batch, id) =>
+      val carry =
+        if (id == 0) 0L
+        else s.read.parquet(carryBase + s"/batch_id=${id - 1}")
+          .head().getLong(0)
+      val asg = graft.api.Graft.packSequences(batch, "doc_id",
+        "text", seqLen = 2048, startOffset = carry)
+        .localCheckpoint(true) // consumed twice: assignments + carry
+      asg.write.mode("overwrite").parquet(asgBase + s"/batch_id=$id")
+      asg.agg((sum("n_tokens") + lit(carry)).as("carry"))
+        .write.mode("overwrite").parquet(carryBase + s"/batch_id=$id")
+    }
+    s.read.parquet(asgBase)
+      .groupBy("seq_id")
+      .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("seq_tokens"),
+        min("doc_id").as("first_doc"))
+      .orderBy("seq_id")
   }
 
   /** STREAMING SKYLINE: the Pareto front maintained at ingest. The only
@@ -1460,9 +1373,7 @@ object StreamingQueries {
     * with no rows in a batch carries its state forward untouched. Final
     * state == the batch monitor (one fold, one grid), oracle verbatim. */
   def streamEwma(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = s"/tmp/graft_stream_ewma/${s.sparkContext.applicationId}/" +
-      d.replaceAll("[^A-Za-z0-9.]", "_")
+    val base = Scoped.dir(s, "graft_stream_ewma", d)
     val grid = graft.api.Graft.ewmaCounts(
       graft.Tables.events(s, d).select(col("ts"), col("event_type")),
       "ts", "event_type")
@@ -1475,45 +1386,34 @@ object StreamingQueries {
       .select(col("event_type"), col("hour"), col("c"), col("__bb"))
     val srcDir = stageOrderedBatches(bucketed, base, "__bb", 2)
     val stateBase = base + "/state"
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, math.min(prev.toInt, 4).toString)
-    try {
-      val stream = s.readStream.schema(bucketed.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val q = stream.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", base + "/ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val prevState =
-            if (id == 0) None
-            else Some(s.read.parquet(stateBase + s"/batch_id=${id - 1}"))
-          val folded = graft.api.Graft.ewmaFold(
-              batch.toDF().select("event_type", "hour", "c"), prevState,
-              warmupHours = 6)
-            .select(col("event_type"), col("final_ewma").as("s"),
-              col("n_hours").as("i"), col("n_high").as("hi"),
-              col("n_low").as("lo"))
-          val carried = prevState match {
-            case Some(st) => folded.unionByName(
-              st.join(folded, Seq("event_type"), "left_anti"))
-            case None => folded
-          }
-          carried.write.mode("overwrite").parquet(stateBase + s"/batch_id=$id")
-          ()
-        }
-        .start()
-      try q.awaitTermination() finally q.stop()
-      val last = Option(new java.io.File(stateBase).listFiles())
-        .getOrElse(Array.empty)
-        .filter(_.getName.startsWith("batch_id="))
-        .map(_.getName.stripPrefix("batch_id=").toInt).max
-      s.read.parquet(stateBase + s"/batch_id=$last")
-        .select(col("event_type"), col("i").as("n_hours"),
-          col("s").as("final_ewma"), col("hi").as("n_high"),
-          col("lo").as("n_low"))
-        .orderBy("event_type")
-    } finally s.conf.set(key, prev)
+    val stream = s.readStream.schema(bucketed.schema)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
+    runBatches(s, stream, base) { (batch, id) =>
+      val prevState =
+        if (id == 0) None
+        else Some(s.read.parquet(stateBase + s"/batch_id=${id - 1}"))
+      val folded = graft.api.Graft.ewmaFold(
+          batch.select("event_type", "hour", "c"), prevState,
+          warmupHours = 6)
+        .select(col("event_type"), col("final_ewma").as("s"),
+          col("n_hours").as("i"), col("n_high").as("hi"),
+          col("n_low").as("lo"))
+      val carried = prevState match {
+        case Some(st) => folded.unionByName(
+          st.join(folded, Seq("event_type"), "left_anti"))
+        case None => folded
+      }
+      carried.write.mode("overwrite").parquet(stateBase + s"/batch_id=$id")
+    }
+    val last = Option(new java.io.File(stateBase).listFiles())
+      .getOrElse(Array.empty)
+      .filter(_.getName.startsWith("batch_id="))
+      .map(_.getName.stripPrefix("batch_id=").toInt).max
+    s.read.parquet(stateBase + s"/batch_id=$last")
+      .select(col("event_type"), col("i").as("n_hours"),
+        col("s").as("final_ewma"), col("hi").as("n_high"),
+        col("lo").as("n_low"))
+      .orderBy("event_type")
   }
 
   /** THE EXPERIMENT READOUT AT INGEST: per-user conversion state (ONE max

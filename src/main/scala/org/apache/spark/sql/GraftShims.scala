@@ -1,13 +1,21 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.util.Utils
 
 /** Package-access shim: Column ↔ Catalyst Expression conversion for the
-  * engine's native expressions (graft.functions). Spark 4 scopes
-  * `classic.ExpressionUtils` as private[sql], so the bridge lives in this
-  * package — the same technique Spark's own connectors use. Only
-  * conversion; no Spark internals are re-implemented here. */
+  * engine's native expressions (graft.functions), and the session's local
+  * scratch dir for graft.Scoped. Spark 4 scopes `classic.ExpressionUtils`
+  * and `Utils` as private[sql]/private[spark], so the bridge lives in this
+  * package — the same technique Spark's own connectors use. No Spark
+  * internals are re-implemented here. */
 object GraftShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** First of Spark's configured local dirs: SPARK_LOCAL_DIRS, then
+    * spark.local.dir, then java.io.tmpdir. */
+  def localDir(sc: SparkContext): String =
+    Utils.getConfiguredLocalDirs(sc.conf).head.trim
 }

@@ -84,14 +84,7 @@ class AdvancedStateSpec extends SparkSpec {
     // (the in-memory catalog forgets tables across runs; the files persist)
     for (t <- Seq("graft_orders_bkt", "graft_lineitem_bkt")) {
       db.sql(s"DROP TABLE IF EXISTS $t")
-      val dir = new java.io.File(s"/tmp/graft_warehouse/$t")
-      if (dir.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(dir)
-      }
+      Scoped.rm(s"/tmp/graft_warehouse/$t")
     }
     val liteOrders = Tables.orders(db, sf).select("o_orderkey", "o_totalprice")
     val liteLines = Tables.lineitem(db, sf).select("l_orderkey", "l_quantity")

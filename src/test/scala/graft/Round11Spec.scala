@@ -239,8 +239,7 @@ class Round11Spec extends SparkSpec {
     // the firehose really ran as 2 micro-batches (one staged file each —
     // r15 trimmed the third: per-answer union is batching-invariant and
     // one boundary exercises the per-batch probe path identically)
-    val base = s"/tmp/graft_stream_knn_ivf/${spark.sparkContext.applicationId}/" +
-      sf.replaceAll("[^A-Za-z0-9.]", "_")
+    val base = Scoped.dir(spark, "graft_stream_knn_ivf", sf)
     val commits = new java.io.File(base + "/ckpt/commits").listFiles()
       .count(f => f.getName.forall(_.isDigit))
     assert(commits == 2, s"expected 2 committed micro-batches, saw $commits")
@@ -250,8 +249,7 @@ class Round11Spec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val flags1 = streaming.StreamingQueries.streamOnlineDedup(spark, sf)
       .collect().toSeq
-    val base = s"/tmp/graft_stream_online/${spark.sparkContext.applicationId}/" +
-      sf.replaceAll("[^A-Za-z0-9.]", "_")
+    val base = Scoped.dir(spark, "graft_stream_online", sf)
     val indexRows1 = spark.read.parquet(base + "/index").count()
     // simulate the foreachBatch retry: re-run batch 1 from its staged file
     // with the SAME batch id — the batch_id-keyed overwrite must leave both
@@ -272,8 +270,7 @@ class Round11Spec extends SparkSpec {
     val kept1 = streaming.StreamingQueries.streamOnlineCurate(spark, sf)
       .collect().toSeq
     assert(kept1.nonEmpty)
-    val base = s"/tmp/graft_stream_curate/${spark.sparkContext.applicationId}/" +
-      sf.replaceAll("[^A-Za-z0-9.]", "_")
+    val base = Scoped.dir(spark, "graft_stream_curate", sf)
     val indexRows1 = spark.read.parquet(base + "/index").count()
     // rebuild the static artifacts exactly as the operator does, then
     // replay batch 1 with the same id
@@ -316,12 +313,7 @@ class Round11Spec extends SparkSpec {
   test("fold-in marker is the crash boundary: a missing marker forces a full rebuild") {
     // run once to build both index generations and commit the marker
     val first = queries.Dedup.dedupIndexFoldin(spark, sf).collect()
-    val root = s"/tmp/graft_minhash_foldin/${spark.sparkContext.applicationId}"
-    // artifactBase appends an md5 suffix of the raw dataset path — discover
-    // the dir by its sanitized prefix (same pattern as the IVF refresh test)
-    val base = new java.io.File(root).listFiles()
-      .find(_.getName.startsWith(sf.replaceAll("[^A-Za-z0-9.]", "_")))
-      .getOrElse(fail(s"no fold-in dir under $root"))
+    val base = new java.io.File(Scoped.dir(spark, "graft_minhash_foldin", sf))
     val marker = new java.io.File(base, "_FOLDIN_DONE")
     val index = new java.io.File(base, "index")
     assert(marker.exists(), "fold-in must commit its marker")
@@ -343,10 +335,7 @@ class Round11Spec extends SparkSpec {
 
   test("IVF refresh marker: committed index served at rest, missing marker rebuilds") {
     val first = queries.Similarity.knnIvfRefresh(spark, sf).collect()
-    val root = s"/tmp/graft_ivf_refresh/${spark.sparkContext.applicationId}"
-    val baseDir = new java.io.File(root).listFiles()
-      .find(_.getName.startsWith(sf.replaceAll("[^A-Za-z0-9.]", "_")))
-      .getOrElse(fail(s"no refresh dir under $root"))
+    val baseDir = new java.io.File(Scoped.dir(spark, "graft_ivf_refresh", sf))
     val marker = new java.io.File(baseDir, "_REFRESH_DONE")
     assert(marker.exists(), "refresh must commit its marker")
     val second = queries.Similarity.knnIvfRefresh(spark, sf).collect()

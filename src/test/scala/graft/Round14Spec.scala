@@ -287,7 +287,7 @@ class Round14Spec extends SparkSpec {
     // no — use ids that leave bucket 1 empty: 0,2,3,5 mod 3 = {0,2,0,2}
     val df = Seq((0L, "a"), (2L, "b"), (3L, "c"), (5L, "d"))
       .toDF("doc_id", "text")
-    val base = s"/tmp/graft_r14_stage_${System.nanoTime()}"
+    val base = Scoped.dir(spark, "graft_r14_stage", sf)
     val src = streaming.StreamingQueries.stageOrderedBatches(
       df, base, "doc_id", n = 3)
     val files = new java.io.File(src).listFiles().map(_.getName).sorted

@@ -117,7 +117,7 @@ class Round16Spec extends AnyFunSuite {
   test("onlineDedupBatch index-first screen: replay of a batch is " +
       "byte-idempotent and never self-matches") {
     import spark.implicits._
-    val base = s"/tmp/graft_r16_dedup_${System.nanoTime()}"
+    val base = Scoped.dir(spark, "graft_r16_dedup", sf)
     val b0 = Seq((1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "one two three four five six seven")).toDF("doc_id", "text")
     val b1 = Seq((3L, "alpha beta gamma delta epsilon zeta"),

@@ -108,11 +108,11 @@ class Round8Spec extends SparkSpec {
 
   test("dedupIncremental persists the index once and reuses it") {
     // r12: the at-rest index is the SHARED signature artifact
-    // (Dedup.ensureSignatureTable, /tmp/graft_minhash_sigs/<appId>/...),
+    // (Dedup.ensureSignatureTable, Scoped.dir(_, "graft_minhash_sigs", _)),
     // filter-pruned to the index ids — built on first use, untouched after
     val first = graft.queries.Dedup.dedupIncremental(spark, sf).collect()
     val sigRoot = new java.io.File(
-      s"/tmp/graft_minhash_sigs/${spark.sparkContext.applicationId}")
+      Scoped.dir(spark, "graft_minhash_sigs", sf)).getParentFile
     assert(sigRoot.exists(), "shared signature table written on first use")
     def mtimes() = sigRoot.listFiles().flatMap(d =>
       Option(d.listFiles()).getOrElse(Array.empty)).flatMap(d =>
@@ -158,10 +158,14 @@ class Round8Spec extends SparkSpec {
     // behavioral: the staging trees land under the app id, so another
     // session's writes cannot collide with this one's
     val appId = spark.sparkContext.applicationId
+    def appDir(name: String) =
+      new java.io.File(Scoped.dir(spark, name, sf)).getParentFile
     graft.queries.Formats.zorderPruneReadback(spark, sf).collect()
-    assert(new java.io.File(s"/tmp/graft_zorder_rb/$appId").exists())
+    assert(appDir("graft_zorder_rb").getName == appId)
+    assert(appDir("graft_zorder_rb").exists())
     graft.queries.Formats.partitionedWrite(spark, sf).collect()
-    assert(new java.io.File(s"/tmp/graft_part_write/$appId").exists())
+    assert(appDir("graft_part_write").getName == appId)
+    assert(appDir("graft_part_write").exists())
   }
 
   // ---------- linear classifier inference ----------

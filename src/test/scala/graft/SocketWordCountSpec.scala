@@ -2,7 +2,6 @@ package graft
 
 import java.io.PrintWriter
 import java.net.ServerSocket
-import org.apache.spark.sql.functions._
 
 /** End-to-end check of the reference program's socket semantics (I2→I7):
   * a local TCP server feeds lines; the streaming word count's state must
@@ -26,11 +25,9 @@ class SocketWordCountSpec extends SparkSpec {
     feeder.setDaemon(true)
     feeder.start()
 
-    val counts = spark.readStream
-      .format("socket").option("host", "localhost").option("port", port).load()
-      .select(explode(split(col("value"), " ", -1)).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy("word").count()
+    val counts = api.Graft.rollingWordCount(spark.readStream
+      .format("socket").option("host", "localhost").option("port", port).load(),
+      "value")
     val q = counts.writeStream.outputMode("complete")
       .format("memory").queryName("socket_wc").start()
     try {
