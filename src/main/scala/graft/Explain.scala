@@ -1,10 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan of one registry query and
   * time it — `runMain graft.Explain <query> <sfDir>`. The fast loop for
   * plan iteration (the "explain until it's the plan you'd want" rule);
-  * PlanAudit pins the invariants the plans must keep.
+  * PlanAuditSpec pins the invariants the plans must keep.
   *
   * CAVEAT for eagerly-checkpointed operators (the gram/LSH/curate families
   * call localCheckpoint(true) during CONSTRUCTION): their upstream stages
@@ -16,14 +15,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Explain <query> <sfDir>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session("graft-explain")
     val tb = System.nanoTime()
     val df = SparkEntry.queries(args(0))(spark, args(1))
     val buildSec = (System.nanoTime() - tb) / 1e9

@@ -17,6 +17,23 @@ import org.apache.spark.sql.functions._
   * `spark.sql.files.maxPartitionBytes` splitting, not from anything we do here.
   */
 object Tables {
+  /** The one session the mains run on: `local[$SPARK_GRAFT_CPUS]` (default
+    * 4) unless spark-submit already set `spark.master`, one shuffle
+    * partition per core, UTC, no UI, and `nanosAsLong` so `events` loads. */
+  private[graft] def session(appName: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .appName(appName)
+      .master(sys.props.getOrElse("spark.master", s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
@@ -29,7 +46,7 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
   /** events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized reader
     * rejects ([PARQUET_TYPE_ILLEGAL]). With
-    * `spark.sql.legacy.parquet.nanosAsLong=true` (set by Verify/Bench and the
+    * `spark.sql.legacy.parquet.nanosAsLong=true` (set by `session` and the
     * test sessions) the column arrives as LongType nanos; convert to
     * microsecond TIMESTAMP_NTZ here — `DIV 1000` is integer division (floor),
     * matching DuckDB's own nanos→micros truncation, and NTZ matches the

@@ -117,7 +117,7 @@ object Formats {
     * (l_returnflag, l_linestatus), then read back ONE partition and
     * aggregate. The readback filter matches only partition columns, so the
     * scan lists a single directory (`PartitionFilters` in the plan, asserted
-    * by PlanAudit) — at 100 TB this is the difference between touching one
+    * by PlanAuditSpec) — at 100 TB this is the difference between touching one
     * partition's files and the whole table. Results oracle-checked against
     * the unpartitioned parquet. */
   def partitionedWrite(s: SparkSession, d: String): DataFrame = {
@@ -164,7 +164,7 @@ object Formats {
     * match (1 at sf0.01), while hash spreads it across ~all 16 — the
     * row-group-skipping argument made on real written-and-reread files.
     * The readback filter reaches the parquet scan as PushedFilters on BOTH
-    * dimensions (PlanAudit-pinned); Round7Spec additionally verifies
+    * dimensions (PlanAuditSpec-pinned); Round7Spec additionally verifies
     * physical row-group prune-ability from the parquet footers. */
   def zorderPruneReadback(s: SparkSession, d: String): DataFrame = {
     // app-id-unique (Scoped.dir), so concurrent sessions over the same

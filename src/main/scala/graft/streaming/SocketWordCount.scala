@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 /** Faithful re-expression of the reference program
   * (`/root/reference/study/src/main/scala/group/xc/flink/stream/demo1/StreamSocket.scala:12-16`):
   * socket text source → tokenize on single spaces → key by word → rolling
@@ -15,19 +13,13 @@ import org.apache.spark.sql.SparkSession
   * console sink; execute() → `start().awaitTermination()`.
   *
   * Run: `sbt "runMain graft.streaming.SocketWordCount <host> <port>"`
-  * (e.g. against `nc -lk 9999`).
+  * (e.g. against `nc -lk 9999`); under spark-submit its `--master` is kept.
   */
 object SocketWordCount {
   def main(args: Array[String]): Unit = {
     val host = if (args.length > 0) args(0) else "localhost"
     val port = if (args.length > 1) args(1).toInt else 9999
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-socket-wordcount")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session("graft-socket-wordcount")
 
     val lines = spark.readStream
       .format("socket")

@@ -919,7 +919,7 @@ object StreamingQueries {
     * consumers): broadcast centroids pick each query's 3 probe lists, and
     * because the postings table is partitioned by `list_id`, the per-batch
     * probe join prunes the scan to the probed partitions (the dynamic
-    * partition pruning PlanAudit pins for knn_ivf_persisted — identical
+    * partition pruning PlanAuditSpec pins for knn_ivf_persisted — identical
     * physical plan per batch). Per-batch answers append to a result table;
     * each query id arrives exactly once, so the union over batches IS the
     * final answer set — zero streaming state, which is the point: the

@@ -401,21 +401,4 @@ class Round13Spec extends SparkSpec {
     // every purchase row survives (left-join semantics)
     assert(near.size == purchases.count())
   }
-
-  test("profile completeness: every registry row has a frozen per-query profile") {
-    // VERDICT r12 task 4: without this, a brand-new query debuts under the
-    // family-median fallback and its own slow reading never trips the
-    // self-ruling bench's ruler. Enforced for BOTH profile files the bench
-    // reads (sf0.1 and sf1).
-    val registry = SparkEntry.queries.keySet
-    for (file <- Seq("tools/profiles.json", "tools/profiles_sf1.json")) {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new java.io.File(file)).get("profiles")
-      import scala.jdk.CollectionConverters._
-      val keys = node.fieldNames().asScala.toSet
-      val missing = registry -- keys
-      assert(missing.isEmpty,
-        s"$file is missing profiles for registry rows: ${missing.toSeq.sorted}")
-    }
-  }
 }

@@ -5,7 +5,7 @@ Usage: python3 tools/profile_oracles.py <outDir-with-oracle_sql.json> <sfDir> [t
 
 Prints per-oracle wall seconds sorted descending plus the total; an oracle
 that exceeds timeout_s (default 120) is killed and reported as TIMEOUT.
-Run after QuickDump/Verify has refreshed <outDir>/oracle_sql.json.
+Run after graft.Verify has refreshed <outDir>/oracle_sql.json.
 """
 import sys, os, json, time, multiprocessing as mp
 
