@@ -15,7 +15,10 @@ import graft.streaming.StreamingQueries
   *  - deterministic total-order ORDER BY on every query;
   *  - `round(x, n)` on all floating-point aggregates;
   *  - identical output column names and types on both sides (explicit casts
-  *    where DuckDB's natural result type differs, e.g. BIGINT `year()`).
+  *    where DuckDB's natural result type differs, e.g. BIGINT `year()`);
+  *  - integer-exact money sums and HALF_UP share/rate rounding: the Spark
+  *    side takes them from `graft.Exact`, while the oracle SQL here spells
+  *    the same rules out by hand, as the independent reference.
   */
 object SparkEntry {
 

@@ -44,19 +44,21 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
+  def events(s: SparkSession, d: String): DataFrame = eventsTs(load(s, d, "events"))
+
   /** events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized reader
     * rejects ([PARQUET_TYPE_ILLEGAL]). With
     * `spark.sql.legacy.parquet.nanosAsLong=true` (set by `session` and the
     * test sessions) the column arrives as LongType nanos; convert to
     * microsecond TIMESTAMP_NTZ here — `DIV 1000` is integer division (floor),
     * matching DuckDB's own nanos→micros truncation, and NTZ matches the
-    * naive timestamps DuckDB reads, so oracle comparisons line up exactly. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val raw = load(s, d, "events")
+    * naive timestamps DuckDB reads, so oracle comparisons line up exactly.
+    * The batch read above and the stream read of `events` both go through
+    * this one conversion. */
+  private[graft] def eventsTs(raw: DataFrame): DataFrame =
     if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       raw.withColumn("ts", expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)"))
     else raw
-  }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

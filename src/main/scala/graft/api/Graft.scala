@@ -3,7 +3,8 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.VectorFunctions
+import graft.Exact
+import graft.functions.{MinhashSigs, VectorFunctions}
 
 /** The engine's user-facing API: every operator generalized over
   * caller-supplied DataFrames and column names (the registry queries in
@@ -32,19 +33,22 @@ object Graft {
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
 
+  /** SQL for the distinct n-token shingles of the token array `__toks`
+    * (empty when the document has fewer than n tokens). */
+  private def shingleSql(n: Int): String =
+    s"""CASE WHEN size(__toks) >= $n THEN
+       |  array_distinct(transform(sequence(1, size(__toks) - ${n - 1}),
+       |    i -> array_join(slice(__toks, i, $n), ' ')))
+       |ELSE array() END""".stripMargin
+
   /** Distinct n-token shingle ARRAY per document (row-local, no explode):
     * the input to both the exploded `shingles` view and the zero-shuffle
     * MinHash signature. Tokenization is hoisted into a column once — inlining
     * split() in the lambda costs O(tokens²)/doc under codegen. */
   def shingleArray(df: DataFrame, textCol: String, n: Int = 3,
       out: String = "__shingles"): DataFrame = {
-    val shingleExpr =
-      s"""CASE WHEN size(__toks) >= $n THEN
-         |  array_distinct(transform(sequence(1, size(__toks) - ${n - 1}),
-         |    i -> array_join(slice(__toks, i, $n), ' ')))
-         |ELSE array() END""".stripMargin
     df.withColumn("__toks", split(col(textCol), " ", -1))
-      .withColumn(out, expr(shingleExpr))
+      .withColumn(out, expr(shingleSql(n)))
       .drop("__toks")
   }
 
@@ -53,13 +57,8 @@ object Graft {
     * array column) — measured ~2.5× faster under codegen than
     * explode-of-projected-column. */
   def shingles(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame = {
-    val shingleExpr =
-      s"""CASE WHEN size(__toks) >= $n THEN
-         |  array_distinct(transform(sequence(1, size(__toks) - ${n - 1}),
-         |    i -> array_join(slice(__toks, i, $n), ' ')))
-         |ELSE array() END""".stripMargin
     df.withColumn("__toks", split(col(textCol), " ", -1))
-      .withColumn("shingle", explode(expr(shingleExpr)))
+      .withColumn("shingle", explode(expr(shingleSql(n))))
       .drop("__toks", textCol)
   }
 
@@ -90,7 +89,7 @@ object Graft {
       .agg(count(lit(1)).as("n_tokens"),
         count(when(col("__in_vocab").isNull, 1)).as("n_oov"))
       .withColumn("oov_ratio", expr(
-        "CAST((20000L * n_oov + n_tokens) DIV (2L * n_tokens) AS DOUBLE) / 10000.0"))
+        Exact.ratio4("n_oov", "n_tokens")))
   }
 
   /** Okapi BM25 ranking of documents against a fixed term set (Robertson &
@@ -251,7 +250,7 @@ object Graft {
              |  p -> sequence(p, least(p + ${spanLen - 1}, __n - 1))))))"""
             .stripMargin).cast("long").as("n_masked"))
       .withColumn("mask4", expr(
-        "CAST((20000L * n_masked + n_tokens) DIV (2L * n_tokens) AS DOUBLE) / 10000.0"))
+        Exact.ratio4("n_masked", "n_tokens")))
   }
 
   /** TOKENIZER FERTILITY per group (the multilingual-pipeline metric:
@@ -288,11 +287,9 @@ object Graft {
         sum(col("__c") * length(col("__w")).cast("long")).as("n_chars"))
       .select(col(groupCol), col("n_words"), col("n_bpe_tokens"),
         col("n_chars"),
-        expr("""CAST((20000L * n_bpe_tokens + n_words)
-               |  DIV (2L * n_words) AS DOUBLE) / 10000.0""".stripMargin)
+        expr(Exact.ratio4("n_bpe_tokens", "n_words"))
           .as("fertility4"),
-        expr("""CAST((20000L * n_chars + n_bpe_tokens)
-               |  DIV (2L * n_bpe_tokens) AS DOUBLE) / 10000.0""".stripMargin)
+        expr(Exact.ratio4("n_chars", "n_bpe_tokens"))
           .as("chars_per_token4"))
   }
 
@@ -567,10 +564,7 @@ object Graft {
       .withColumn("score", expr(
         // signed integer/integer mean, half-up at 4 decimals, in pure
         // integer arithmetic (ratio4 generalized to a signed numerator)
-        """CAST(CASE WHEN __sum >= 0
-          |  THEN (20000L * __sum + n_tokens) DIV (2L * n_tokens)
-          |  ELSE -((20000L * -__sum + n_tokens) DIV (2L * n_tokens))
-          |END AS DOUBLE) / 10000.0""".stripMargin))
+        s"CAST(${Exact.halfUpSigned("__sum", "n_tokens", 10000L)} AS DOUBLE) / 10000.0"))
       .withColumn("label", when(col("__sum") > 0, lit("keep")).otherwise(lit("drop")))
       .select(col(idCol), col("n_tokens"), col("score"), col("label"))
   }
@@ -1116,7 +1110,7 @@ object Graft {
       .join(sizes.select(col(idCol).as("id_a"), col("__n_sh").as("__sa")), "id_a")
       .join(sizes.select(col(idCol).as("id_b"), col("__n_sh").as("__sb")), "id_b")
       .withColumn("containment", expr(
-        "CAST((20000L * n_common + least(__sa, __sb)) DIV (2L * least(__sa, __sb)) AS DOUBLE) / 10000.0"))
+        Exact.ratio4("n_common", "least(__sa, __sb)")))
       .filter(col("containment") >= minContainment)
       .withColumn("contained_id",
         when(col("__sa") <= col("__sb"), col("id_a")).otherwise(col("id_b")))
@@ -1218,8 +1212,7 @@ object Graft {
       .agg(count(lit(1)).as("n_grams"),
         count_if(col("__df") === 1L).as("__uniq"))
       .select(col(idCol), col("n_grams"),
-        expr("""CAST((20000L * __uniq + n_grams)
-               |  DIV (2L * n_grams) AS DOUBLE) / 10000.0""".stripMargin)
+        expr(Exact.ratio4("__uniq", "n_grams"))
           .as("novelty4"))
   }
 
@@ -1344,8 +1337,7 @@ object Graft {
       .select(col(idCol),
         size(col("__hs")).cast("long").as("n_kgrams"),
         size(col("__sel")).cast("long").as("n_fingerprints"),
-        expr("""CAST((20000L * size(__sel) + size(__hs))
-               |  DIV (2L * size(__hs)) AS DOUBLE) / 10000.0""".stripMargin)
+        expr(Exact.ratio4("size(__sel)", "size(__hs)"))
           .as("density"))
   }
 
@@ -1429,10 +1421,10 @@ object Graft {
       // mean token length in [3,10] ⇔ 3·n ≤ Σlen ≤ 10·n (integer compare)
       .withColumn("__sumlen", col("__gs.sum_len"))
       .withColumn("mean_word_len", expr(
-        "CAST((20000L * __sumlen + n_words) DIV (2L * n_words) AS DOUBLE) / 10000.0"))
+        Exact.ratio4("__sumlen", "n_words")))
       .withColumn("__alpha", col("__gs.n_alpha"))
       .withColumn("alpha_share", expr(
-        "CAST((20000L * __alpha + n_words) DIV (2L * n_words) AS DOUBLE) / 10000.0"))
+        Exact.ratio4("__alpha", "n_words")))
       .withColumn("n_stopwords", col("__gs.n_stop"))
       .withColumn("passes",
         col("n_words").between(minWords, maxWords) &&
@@ -1496,9 +1488,7 @@ object Graft {
       numHashes: Int = 32, shingleN: Int = 3,
       baseHash: Column => Column = xxHash63,
       keepEmpty: Boolean = true): DataFrame = {
-    val P = 2147483647L
-    val as = (0 until numHashes).map(i => 2L * i * i + 3L * i + 1L)
-    val bs = (0 until numHashes).map(i => 7L * i * i + 5L * i + 3L)
+    val P = MinhashSigs.P
     // The groupBy(id) over exploded shingle hashes is deliberate: the shuffle
     // materializes the signature ONCE, and every downstream self-join branch
     // (minhashCandidates joins the table against itself) reuses that exchange
@@ -1511,9 +1501,8 @@ object Graft {
     val hashed = shingles(df.select(col(idCol), col(textCol)), idCol, textCol, shingleN)
       .select(col(idCol), (baseHash(col("shingle")) % P).as("h"))
     val sigs = hashed.groupBy(idCol)
-      .agg(min(expr(s"(${as(0)}L * h + ${bs(0)}L) % ${P}L")).as("__m0"),
-        (1 until numHashes).map(i =>
-          min(expr(s"(${as(i)}L * h + ${bs(i)}L) % ${P}L")).as(s"__m$i")): _*)
+      .agg(min(expr(permSql(0))).as("__m0"),
+        (1 until numHashes).map(i => min(expr(permSql(i))).as(s"__m$i")): _*)
       .select(col(idCol), array((0 until numHashes).map(i => col(s"__m$i")): _*).as("sig"))
     // Re-attach ids whose shingle set was empty (< shingleN tokens): NULL sig.
     // `keepEmpty = false` skips that join — REQUIRED on a streaming frame
@@ -1522,6 +1511,10 @@ object Graft {
     // filter NULL signatures anyway, so absent == NULL there.
     if (keepEmpty) df.select(col(idCol)).join(sigs, Seq(idCol), "left") else sigs
   }
+
+  /** SQL for MinHash permutation i of the gram hash `h`: (aᵢ·h + bᵢ) mod P. */
+  private def permSql(i: Int): String =
+    s"(${MinhashSigs.a(i)}L * h + ${MinhashSigs.b(i)}L) % ${MinhashSigs.P}L"
 
   /** SQL fragment twin of the Column hash `xxHash63` (abs(xxhash64)), for
     * hashing inside a higher-order lambda. Parity matters: `xxhashGramSql`
@@ -1548,17 +1541,9 @@ object Graft {
   def minhashSignatureRowLocal(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 32, shingleN: Int = 3,
       gramHashSql: String => String = xx63GramSql): DataFrame = {
-    val P = 2147483647L
-    val as = (0 until numHashes).map(i => 2L * i * i + 3L * i + 1L)
-    val bs = (0 until numHashes).map(i => 7L * i * i + 5L * i + 3L)
-    val n = shingleN
-    val shingleExpr =
-      s"""CASE WHEN size(__toks) >= $n THEN
-         |  array_distinct(transform(sequence(1, size(__toks) - ${n - 1}),
-         |    i -> array_join(slice(__toks, i, $n), ' ')))
-         |ELSE array() END""".stripMargin
+    val P = MinhashSigs.P
     val mins = (0 until numHashes).map(i =>
-      s"array_min(transform(__hs, h -> (${as(i)}L * h + ${bs(i)}L) % ${P}L))")
+      s"array_min(transform(__hs, h -> ${permSql(i)}))")
       .mkString("array(", ", ", ")")
     // The two canonical gram hashes route through the NATIVE expressions
     // (graft.functions): md5h60_array / xx63_array for the per-gram digest
@@ -1567,9 +1552,10 @@ object Graft {
     // document (one mod-P transform + one array_min per permutation),
     // which after the digest moved native became THE residual cost of the
     // streaming ingest rows (stream_online_dedup 5.7 s profile). Both
-    // natives are value-identical to the lambda form (minhash_sigs bakes
-    // the same aᵢ/bᵢ/P family — suite-pinned), so no oracle moves. An
-    // unrecognized custom hash fragment keeps the general lambda path.
+    // natives are value-identical to the lambda form (minhash_sigs reads
+    // the same MinhashSigs aᵢ/bᵢ/P family — suite-pinned), so no oracle
+    // moves. An unrecognized custom hash fragment keeps the general lambda
+    // path.
     val sigCol =
       if (gramHashSql eq md5GramSql) {
         graft.functions.VectorFunctions.register(df.sparkSession)
@@ -1580,7 +1566,7 @@ object Graft {
       } else expr(mins)
     df.select(col(idCol), col(textCol))
       .withColumn("__toks", split(col(textCol), " ", -1))
-      .withColumn("__sh", expr(shingleExpr))
+      .withColumn("__sh", expr(shingleSql(shingleN)))
       .filter(size(col("__sh")) > 0)
       .withColumn("__hs", expr(s"transform(__sh, g -> ${gramHashSql("g")} % ${P}L)"))
       .select(col(idCol), sigCol.as("sig"))
@@ -1801,12 +1787,8 @@ object Graft {
         count_if(col("__j") >= tau && col("__est") < tau).as("n_fn"))
       .select(col("n_pairs"), col("n_true"), col("n_pred"),
         col("n_tp"), col("n_fp"), col("n_fn"),
-        expr("""CAST((20000L * n_tp + greatest(n_pred, 1L))
-               |  DIV (2L * greatest(n_pred, 1L)) AS DOUBLE) / 10000.0"""
-          .stripMargin).as("precision4"),
-        expr("""CAST((20000L * n_tp + greatest(n_true, 1L))
-               |  DIV (2L * greatest(n_true, 1L)) AS DOUBLE) / 10000.0"""
-          .stripMargin).as("recall4"))
+        expr(Exact.ratio4("n_tp", "greatest(n_pred, 1L)")).as("precision4"),
+        expr(Exact.ratio4("n_tp", "greatest(n_true, 1L)")).as("recall4"))
   }
 
   /** BAND-CONFIGURATION SWEEP of `minhashScreenEval` — precision/recall for
@@ -1894,12 +1876,8 @@ object Graft {
       .select(col("bands"), col("rows_per_band"), col("n_pairs"),
         col("n_true"), col("n_pred"), col("n_tp"), col("n_fp"),
         (col("n_true") - col("n_tp")).as("n_fn"),
-        expr("""CAST((20000L * n_tp + greatest(n_pred, 1L))
-               |  DIV (2L * greatest(n_pred, 1L)) AS DOUBLE) / 10000.0"""
-          .stripMargin).as("precision4"),
-        expr("""CAST((20000L * n_tp + greatest(n_true, 1L))
-               |  DIV (2L * greatest(n_true, 1L)) AS DOUBLE) / 10000.0"""
-          .stripMargin).as("recall4"))
+        expr(Exact.ratio4("n_tp", "greatest(n_pred, 1L)")).as("precision4"),
+        expr(Exact.ratio4("n_tp", "greatest(n_true, 1L)")).as("recall4"))
   }
 
   // ---------- distinct counting at scale ----------
@@ -3013,9 +2991,7 @@ object Graft {
         // a graph with no open wedges (e.g. a perfect matching) has a
         // zero denominator: its clustering coefficient is 0 by convention,
         // not NULL (Spark int DIV 0) / error (DuckDB // 0)
-        expr("""CASE WHEN __ow = 0 THEN 0.0 ELSE
-               |  CAST((20000L * 3L * n_triangles + __ow)
-               |    DIV (2L * __ow) AS DOUBLE) / 10000.0 END""".stripMargin)
+        expr(s"CASE WHEN __ow = 0 THEN 0.0 ELSE ${Exact.ratio4("3L * n_triangles", "__ow")} END")
           .as("clustering4"))
   }
 
@@ -3066,8 +3042,7 @@ object Graft {
         count_if(col("__occ") > 1L).as("n_dup_pars"),
         count_if(col("__k") === col("__keep")).as("n_kept"))
       .select(col(idCol), col("n_pars"), col("n_dup_pars"), col("n_kept"),
-        expr("""CAST((20000L * n_kept + n_pars)
-               |  DIV (2L * n_pars) AS DOUBLE) / 10000.0""".stripMargin)
+        expr(Exact.ratio4("n_kept", "n_pars"))
           .as("kept4"))
   }
 
@@ -3119,8 +3094,7 @@ object Graft {
         count_if(col("__docs") >= minDocs.toLong).as("n_boiler"))
       .select(col(idCol), col("n_pars"), col("n_boiler"),
         (col("n_pars") - col("n_boiler")).as("n_kept"),
-        expr("""CAST((20000L * n_boiler + n_pars)
-               |  DIV (2L * n_pars) AS DOUBLE) / 10000.0""".stripMargin)
+        expr(Exact.ratio4("n_boiler", "n_pars"))
           .as("boiler4"))
   }
 
@@ -3176,13 +3150,8 @@ object Graft {
     * run it inside the scan, before anything pairwise. */
   def repetitionMetrics(df: DataFrame, textCol: String): DataFrame = {
     val toks = split(col(textCol), " ", -1)
-    // Every ratio here is integer/integer, so 4-decimal HALF_UP rounding is
-    // computed in PURE INTEGER arithmetic — round4(p/q) = (20000p + q) DIV
-    // (2q) / 10000 — which is bit-identical in any engine. round(double, 4)
-    // flaked when a ratio landed on a representation boundary (ADVICE r4;
-    // same cross-engine class as the q9 money sums the Exact helper fixed).
-    def ratio4(p: String, q: String): String =
-      s"CAST((20000L * ($p) + ($q)) DIV (2L * ($q)) AS DOUBLE) / 10000.0"
+    // Every ratio here is integer/integer: Exact.ratio4's integer HALF_UP
+    // rule, bit-identical in any engine.
     // top_token_count is the native one-pass twin of the lambda pyramid
     // array_max(transform(array_distinct(__toks), t -> size(filter(__toks,
     // x -> x = t)))) — that form cost O(distinct·n) INTERPRETED evaluations
@@ -3194,10 +3163,10 @@ object Graft {
     df.withColumn("__toks", toks)
       .withColumn("n_tokens", size(col("__toks")).cast("long"))
       .withColumn("n_distinct", size(array_distinct(col("__toks"))).cast("long"))
-      .withColumn("dup_ratio", expr(ratio4("n_tokens - n_distinct", "n_tokens")))
+      .withColumn("dup_ratio", expr(Exact.ratio4("n_tokens - n_distinct", "n_tokens")))
       .withColumn("mean_tok_len", expr(
-        ratio4(s"length(`$textCol`) - (n_tokens - 1)", "n_tokens")))
-      .withColumn("top_token_frac", expr(ratio4(
+        Exact.ratio4(s"length(`$textCol`) - (n_tokens - 1)", "n_tokens")))
+      .withColumn("top_token_frac", expr(Exact.ratio4(
         "top_token_count(__toks)", "n_tokens")))
       .drop("__toks")
   }
@@ -3534,7 +3503,7 @@ object Graft {
           .otherwise(col("__base") +
             when(col("__fr") <= col("__left"), lit(1L)).otherwise(lit(0L))))
       .withColumn("fill_share4", expr(
-        "CAST((20000L * alloc + avail) DIV (2L * avail) AS DOUBLE) / 10000.0"))
+        Exact.ratio4("alloc", "avail")))
     out.select(col(keyCol), col("avail"), col("weight"), col("saturated"),
       col("alloc"), col("fill_share4"))
   }
@@ -3592,8 +3561,7 @@ object Graft {
         sum("__nt").as("n_tokens"),
         expr("bit_xor(__h)").as("content_xor"))
       .withColumn("fill_share4", expr(
-        s"CAST((20000L * n_tokens + ${tokensPerShard}L) DIV " +
-          s"(2L * ${tokensPerShard}L) AS DOUBLE) / 10000.0"))
+        Exact.ratio4("n_tokens", s"${tokensPerShard}L")))
       // densify: the frame here is the shard GRID (one row per populated
       // raw shard), so the global dense_rank window is grid-sized
       .withColumn("shard_id",
@@ -3753,8 +3721,7 @@ object Graft {
     grid.withColumn("__tot", sum("n_paragraphs").over(
         Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
       .select(col("depth"), col("n_fingerprints"), col("n_paragraphs"),
-        expr("""CAST((20000L * n_paragraphs + __tot)
-               |  DIV (2L * __tot) AS DOUBLE) / 10000.0""".stripMargin)
+        expr(Exact.ratio4("n_paragraphs", "__tot"))
           .as("corpus_share"))
   }
 
@@ -3817,11 +3784,9 @@ object Graft {
       .crossJoin(broadcast(tot))
       .select((col("__tau").cast("double") / 10000.0).as("tau"),
         col("n_docs_kept"), col("tok_kept"),
-        expr("""CAST((20000L * n_docs_kept + __td)
-               |  DIV (2L * __td) AS DOUBLE) / 10000.0""".stripMargin)
+        expr(Exact.ratio4("n_docs_kept", "__td"))
           .as("doc_share"),
-        expr("""CAST((20000L * tok_kept + __tt)
-               |  DIV (2L * __tt) AS DOUBLE) / 10000.0""".stripMargin)
+        expr(Exact.ratio4("tok_kept", "__tt"))
           .as("tok_share"))
   }
 
@@ -3860,15 +3825,10 @@ object Graft {
     val kw = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
     dom
-      .withColumn("__qd", expr(
-        """CASE WHEN __s >= 0 THEN (20000L * __s + n_tokens) DIV (2L * n_tokens)
-          |ELSE -((20000L * -__s + n_tokens) DIV (2L * n_tokens)) END"""
-          .stripMargin))
+      .withColumn("__qd", expr(Exact.halfUpSigned("__s", "n_tokens", 10000L)))
       .withColumn("__sg", sum("__s").over(kw))
       .withColumn("__ng", sum("n_tokens").over(kw))
-      .withColumn("__qg", expr(
-        """CASE WHEN __sg >= 0 THEN (20000L * __sg + __ng) DIV (2L * __ng)
-          |ELSE -((20000L * -__sg + __ng) DIV (2L * __ng)) END""".stripMargin))
+      .withColumn("__qg", expr(Exact.halfUpSigned("__sg", "__ng", 10000L)))
       .withColumn("__ex", col("__qg") - col("__qd"))
       .withColumn("__f", greatest(lit(1000000L) + col("__ex"), lit(0L)))
       .withColumn("__raw", col("n_docs") * col("__f"))
@@ -3877,11 +3837,9 @@ object Graft {
       .select(col(domainCol), col("n_docs"), col("n_tokens"),
         (col("__qd").cast("double") / 10000.0).as("domain_score"),
         col("__ex").as("excess"),
-        expr("""CAST((20000L * n_docs + __d0)
-               |  DIV (2L * __d0) AS DOUBLE) / 10000.0""".stripMargin)
+        expr(Exact.ratio4("n_docs", "__d0"))
           .as("w_before"),
-        expr("""CAST((20000L * __raw + __r0)
-               |  DIV (2L * __r0) AS DOUBLE) / 10000.0""".stripMargin)
+        expr(Exact.ratio4("__raw", "__r0"))
           .as("w_after"))
   }
 
@@ -3907,8 +3865,7 @@ object Graft {
       .agg(count(lit(1)).as("n_docs"), sum("__nt").as("real_tokens"))
       .withColumn("padded_tokens", col("n_docs") * col("cap"))
       .withColumn("waste", expr(
-        """CAST((20000L * (padded_tokens - real_tokens) + padded_tokens)
-          |  DIV (2L * padded_tokens) AS DOUBLE) / 10000.0""".stripMargin))
+        Exact.ratio4("padded_tokens - real_tokens", "padded_tokens")))
       .withColumn("__rpb", greatest(expr(s"${batchTokens}L DIV cap"), lit(1L)))
       .withColumn("n_batches", expr("(n_docs + __rpb - 1L) DIV __rpb"))
       .select(col("cap"), col("n_docs"), col("real_tokens"),
@@ -4061,8 +4018,7 @@ object Graft {
     val w = Window.partitionBy("true_label")
     cm.withColumn("__rt", sum("n").over(w))
       .select(col("true_label"), col("pred_label"), col("n"),
-        expr("""CAST((20000L * n + __rt) DIV (2L * __rt) AS DOUBLE)
-               | / 10000.0""".stripMargin).as("row_share"))
+        expr(Exact.ratio4("n", "__rt")).as("row_share"))
   }
 
   /** TRAILING-WINDOW event-rate anomaly flags — the ingest-monitoring
@@ -4141,9 +4097,8 @@ object Graft {
         max("__occ").as("max_occ"),
         sum(expr("(__occ * (__occ - 1L)) DIV 2L")).as("pair_mass"))
       .select(col("band"), col("n_buckets"), col("max_occ"), col("pair_mass"),
-        expr("""CASE WHEN pair_mass > 0
-               |  THEN CAST((20000L * ((max_occ * (max_occ - 1L)) DIV 2L) + pair_mass)
-               |    DIV (2L * pair_mass) AS DOUBLE) / 10000.0
+        expr(s"""CASE WHEN pair_mass > 0
+               |  THEN ${Exact.ratio4("(max_occ * (max_occ - 1L)) DIV 2L", "pair_mass")}
                |  ELSE 0.0 END""".stripMargin).as("top_share"))
   }
 
@@ -4161,10 +4116,7 @@ object Graft {
       (length(col(textCol)) -
         length(regexp_replace(col(textCol), re, ""))).cast("long")
     def share(c: String): Column = expr(
-      s"""CASE WHEN n_chars > 0
-         |  THEN CAST((20000L * $c + n_chars) DIV (2L * n_chars) AS DOUBLE)
-         |    / 10000.0
-         |  ELSE 0.0 END""".stripMargin)
+      s"CASE WHEN n_chars > 0 THEN ${Exact.ratio4(c, "n_chars")} ELSE 0.0 END")
     docs.select(col(groupCol),
         length(col(textCol)).cast("long").as("__cl"),
         classCount("[A-Za-z]").as("__let"),
@@ -4248,8 +4200,7 @@ object Graft {
         expr(s"CAST(count_if(__ad > ${k}D * mad) AS BIGINT)").as("n_outliers"))
       .select(col(groupCol), col("n_docs"), col("med"), col("mad"),
         col("n_outliers"),
-        expr("""CAST((20000L * n_outliers + n_docs)
-               |  DIV (2L * n_docs) AS DOUBLE) / 10000.0""".stripMargin)
+        expr(Exact.ratio4("n_outliers", "n_docs"))
           .as("outlier_share4"))
   }
 
@@ -4280,8 +4231,7 @@ object Graft {
         .agg(count(lit(1)).as("n_distinct"), sum("__c").as("n_total"))
         .select(col(groupCol), lit(n).as("n"), col("n_total"),
           col("n_distinct"),
-          expr("""CAST((20000L * n_distinct + n_total)
-                 |  DIV (2L * n_total) AS DOUBLE) / 10000.0""".stripMargin)
+          expr(Exact.ratio4("n_distinct", "n_total"))
             .as("distinct_share4"))
     }.reduce(_ unionByName _)
   }
@@ -4313,15 +4263,13 @@ object Graft {
         expr("CAST(count_if(passes) AS BIGINT)").as("__np"))
       // conf/acc in integer 1e-4 units (the qualityDrift rounding chain;
       // __qs ≥ 0 here so the unsigned form suffices)
-      .withColumn("__conf_i", expr("(2L * __qs + n_docs) DIV (2L * n_docs)"))
-      .withColumn("__acc_i",
-        expr("(20000L * __np + n_docs) DIV (2L * n_docs)"))
+      .withColumn("__conf_i", expr(Exact.halfUp("__qs", "n_docs")))
+      .withColumn("__acc_i", expr(Exact.halfUp("__np", "n_docs", 10000L)))
       .withColumn("__gap_i", abs(col("__conf_i") - col("__acc_i")))
     val ece = perBin
       .agg(sum(col("n_docs") * col("__gap_i")).as("__gs"),
         sum("n_docs").as("__nt"))
-      .select(expr(
-        "CAST((2L * __gs + __nt) DIV (2L * __nt) AS DOUBLE) / 10000.0")
+      .select(expr(s"CAST(${Exact.halfUp("__gs", "__nt")} AS DOUBLE) / 10000.0")
         .as("ece4"))
     perBin.crossJoin(broadcast(ece))
       .select(col("bin"), col("n_docs"),
@@ -4366,8 +4314,7 @@ object Graft {
       .join(novel, Seq(groupCol), "left")
       .withColumn("n_novel", coalesce(col("n_novel"), lit(0L)))
       .select(col(groupCol), col("n_distinct"), col("n_novel"),
-        expr("""CAST((20000L * n_novel + n_distinct)
-               |  DIV (2L * n_distinct) AS DOUBLE) / 10000.0""".stripMargin)
+        expr(Exact.ratio4("n_novel", "n_distinct"))
           .as("novelty_share4"))
   }
 
@@ -4396,8 +4343,7 @@ object Graft {
       .withColumn("n_tokens", expr(s"${tokensPerParam}L * n_params"))
       .select(col("budget_exp"), col("n_params"), col("n_tokens"),
         col("corpus_tokens"),
-        expr("""CAST((20000L * n_tokens + corpus_tokens)
-               |  DIV (2L * corpus_tokens) AS DOUBLE) / 10000.0""".stripMargin)
+        expr(Exact.ratio4("n_tokens", "corpus_tokens"))
           .as("epochs_needed4"),
         expr(s"n_tokens > ${maxEpochs}L * corpus_tokens")
           .as("data_constrained"))
@@ -4504,9 +4450,7 @@ object Graft {
         col("merged_v1"), col("n_occ_v1"),
         (col("merged_v0") === col("merged_v1")).as("rank_agree"),
         col("n_common"),
-        expr(s"""CAST((20000L * n_common + (${2 * budget}L - n_common))
-               |  DIV (2L * (${2 * budget}L - n_common)) AS DOUBLE) / 10000.0"""
-          .stripMargin).as("jaccard4"))
+        expr(Exact.ratio4("n_common", s"${2 * budget}L - n_common")).as("jaccard4"))
   }
 
   /** QUALITY × LENGTH joint distribution — the 2-D curation dashboard
@@ -4531,8 +4475,7 @@ object Graft {
     val total = cells.agg(sum("n_docs").as("__t"))
     cells.crossJoin(broadcast(total))
       .select(col("q_bin"), col("len_bucket"), col("n_docs"),
-        expr("""CAST((20000L * n_docs + __t) DIV (2L * __t) AS DOUBLE)
-               | / 10000.0""".stripMargin).as("share4"))
+        expr(Exact.ratio4("n_docs", "__t")).as("share4"))
   }
 
   /** WEIGHTED-LEXICON content screen — the wordlist gate every curation
@@ -4582,7 +4525,7 @@ object Graft {
   def lexiconRollup(docScores: DataFrame, groupCol: String,
       tauBp: Int): DataFrame = {
     val perDoc = docScores.withColumn("__ru", expr(
-      "CASE WHEN __nt > 0 THEN (20000L * __wsum + __nt) DIV (2L * __nt) ELSE 0L END"))
+      s"CASE WHEN __nt > 0 THEN ${Exact.halfUp("__wsum", "__nt", 10000L)} ELSE 0L END"))
     perDoc.groupBy(groupCol)
       .agg(count(lit(1)).as("n_docs"),
         sum("__hits").as("n_hits"),
@@ -4592,8 +4535,7 @@ object Graft {
         sum("__ru").as("__units"))
       .select(col(groupCol), col("n_docs"), col("n_hits"),
         col("weighted_hits"), col("n_flagged"),
-        expr("""CAST((20000L * n_flagged + n_docs) DIV (2L * n_docs)
-               |  AS DOUBLE) / 10000.0""".stripMargin).as("flagged_share4"),
+        expr(Exact.ratio4("n_flagged", "n_docs")).as("flagged_share4"),
         expr("round(CAST(__units AS DOUBLE) / (CAST(n_docs AS DOUBLE) * 10000.0D), 6)")
           .as("mean_rate6"))
   }
@@ -4622,7 +4564,7 @@ object Graft {
     val total = buckets.agg(sum("n_rows").as("__t"))
     buckets.crossJoin(broadcast(total))
       .select(col("k_bucket"), col("n_classes"), col("n_rows"), col("k_min"),
-        expr("CAST((20000L * n_rows + __t) DIV (2L * __t) AS DOUBLE) / 10000.0")
+        expr(Exact.ratio4("n_rows", "__t"))
           .as("rows_share4"))
   }
 
@@ -4881,7 +4823,7 @@ object Graft {
     grid.crossJoin(broadcast(total))
       .select(col("shard_before"), col("shard_after"), col("n_docs"),
         (col("shard_before") =!= col("shard_after")).as("moved"),
-        expr("CAST((20000L * n_docs + __tot) DIV (2L * __tot) AS DOUBLE) / 10000.0")
+        expr(Exact.ratio4("n_docs", "__tot"))
           .as("share4"))
   }
 
@@ -4966,10 +4908,9 @@ object Graft {
           .as("n_chunked"))
       .select(col("max_len"), col("n_docs"), col("n_tokens"), col("n_seqs"),
         col("pad_tokens"),
-        expr("""CAST((20000L * pad_tokens + n_seqs * max_len)
-               |  DIV (2L * n_seqs * max_len) AS DOUBLE) / 10000.0""".stripMargin)
+        expr(Exact.ratio4("pad_tokens", "n_seqs * max_len"))
           .as("waste_share4"),
-        expr("CAST((20000L * n_chunked + n_docs) DIV (2L * n_docs) AS DOUBLE) / 10000.0")
+        expr(Exact.ratio4("n_chunked", "n_docs"))
           .as("chunked_share4"))
   }
 
@@ -5078,7 +5019,7 @@ object Graft {
           .as("n_union"))
       .withColumn("n_intersect", col("n_a") + col("n_b") - col("n_union"))
       .withColumn("jaccard4", expr(
-        "CAST((20000L * n_intersect + n_union) DIV (2L * n_union) AS DOUBLE) / 10000.0"))
+        Exact.ratio4("n_intersect", "n_union")))
   }
 
   /** GREEDY LPT shard→worker balance (Graham '69 longest-processing-time,
@@ -5221,7 +5162,7 @@ object Graft {
       .agg(sum(when(col("bin") >= col("thr_bin"), col("c"))
         .otherwise(lit(0L))).as("__keep"))
       .withColumn("cal_keep_share4", expr(
-        "CAST((20000L * __keep + n_cal) DIV (2L * n_cal) AS DOUBLE) / 10000.0"))
+        Exact.ratio4("__keep", "n_cal")))
       .select(col("n_cal"), col("k"), col("thr_bin"), col("cal_keep_share4"))
     val testBins = conformalBinned(test, textCol, bins)
     broadcast(calKeep).crossJoin(testBins)
@@ -5230,7 +5171,7 @@ object Graft {
         sum(when(col("bin") >= col("thr_bin"), col("c"))
           .otherwise(lit(0L))).as("__tkeep"))
       .withColumn("test_keep_share4", expr(
-        "CAST((20000L * __tkeep + n_test) DIV (2L * n_test) AS DOUBLE) / 10000.0"))
+        Exact.ratio4("__tkeep", "n_test")))
       .select(col("n_cal"), col("k"), col("thr_bin"), col("cal_keep_share4"),
         col("n_test"), col("test_keep_share4"))
   }
@@ -5352,7 +5293,7 @@ object Graft {
       .select(col("split"), col("n_events"), col("n_users"),
         col("__ov").as("users_in_both"),
         when(col("split") === "test", expr(
-          "CAST((20000L * __ov + n_users) DIV (2L * n_users) AS DOUBLE) / 10000.0"))
+          Exact.ratio4("__ov", "n_users")))
           .otherwise(lit(null).cast("double")).as("leak_share4"))
   }
 
@@ -5445,9 +5386,8 @@ object Graft {
         round(col("__sw").cast("double") / 1048576.0, 6).as("w_sum6"),
         round(col("__sw").cast("double") * col("__sw").cast("double")
           / col("__sw2").cast("double"), 6).as("ess6"),
-        expr("""CAST((20000L * CAST(round(CAST(__sw AS DOUBLE)
-          * CAST(__sw AS DOUBLE) / CAST(__sw2 AS DOUBLE)) AS BIGINT)
-          + n_docs) DIV (2L * n_docs) AS DOUBLE) / 10000.0""")
+        expr(Exact.ratio4("""CAST(round(CAST(__sw AS DOUBLE)
+          * CAST(__sw AS DOUBLE) / CAST(__sw2 AS DOUBLE)) AS BIGINT)""", "n_docs"))
           .as("ess_share4"))
   }
 
@@ -5522,8 +5462,7 @@ object Graft {
       .agg(max("__type_total").as("n_types"), max("__cov").as("covered_tokens"),
         max("__tok_total").as("total_tokens"))
       .withColumn("oov_share4", expr(
-        """CAST((20000L * (total_tokens - covered_tokens) + total_tokens)
-          |  DIV (2L * total_tokens) AS DOUBLE) / 10000.0""".stripMargin))
+        Exact.ratio4("total_tokens - covered_tokens", "total_tokens")))
   }
 
   /** T-CLOSENESS audit (Li '07) — the third leg of the privacy triple
@@ -5590,8 +5529,7 @@ object Graft {
     val tot = folds.groupBy("__g").agg(count(lit(1)).as("__n"))
     per.join(tot, "__g")
       .select(col("fold"), col("__g").as(strataCol), col("n_docs"),
-        expr("""CAST((20000L * n_docs + __n) DIV (2L * __n)
-               |  AS DOUBLE) / 10000.0""".stripMargin).as("share4"))
+        expr(Exact.ratio4("n_docs", "__n")).as("share4"))
   }
 
   /** PAGERANK (Brin–Page '98) by power iteration, INTEGER-QUANTIZED for
@@ -5673,7 +5611,7 @@ object Graft {
         round(col("__iqr"), 4).as("iqr4"))
       .agg(sum(when(col("__out"), 1L).otherwise(0L)).as("n_outliers"))
       .withColumn("outlier_share4", expr(
-        "CAST((20000L * n_outliers + n_rows) DIV (2L * n_rows) AS DOUBLE) / 10000.0"))
+        Exact.ratio4("n_outliers", "n_rows")))
   }
 
   /** ACTIVITY STREAKS via gaps-and-islands: distinct active days per

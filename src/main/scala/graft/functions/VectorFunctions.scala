@@ -353,14 +353,18 @@ case class MinhashSigs(left: Expression, right: Expression)
 }
 
 object MinhashSigs {
+  /** The permutation family every MinHash path uses:
+    * hᵢ(x) = (aᵢ·x + bᵢ) mod P, P = 2³¹−1. */
   val P = 2147483647L
+  def a(i: Int): Long = 2L * i * i + 3L * i + 1L
+  def b(i: Int): Long = 7L * i * i + 5L * i + 3L
   // called from generated code
   def sigs(arr: ArrayData, n: Int): ArrayData = {
     val as = new Array[Long](n); val bs = new Array[Long](n)
     var i = 0
     while (i < n) {
-      as(i) = 2L * i * i + 3L * i + 1L
-      bs(i) = 7L * i * i + 5L * i + 3L
+      as(i) = a(i)
+      bs(i) = b(i)
       i += 1
     }
     val out = new Array[Long](n)

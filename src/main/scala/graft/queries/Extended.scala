@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Exact, Tables}
 
 /** Round-2 widening of the relational surface (SURVEY.md §2.C "full relational
   * algebra" — declared via the reference's Table-planner dependency,

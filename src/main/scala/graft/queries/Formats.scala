@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Exact, Tables}
 
 /** Format/serde surface (declared D8 — flink-json, study/pom.xml:169-174):
   * structured JSON parse (`from_json`), typed field extraction, and

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Exact, Tables}
 
 /** Round-4 pipeline operators: the cross-document / cross-run machinery a
   * training-data pipeline runs AFTER the per-document scoring and candidate
@@ -462,7 +462,7 @@ object PipelineOps {
         coalesce(col("n_sampled"), lit(0L)).as("n_sampled"),
         coalesce(col("tok_volume"), lit(0L)).as("tok_volume"))
       .withColumn("achieved4", expr(
-        "CAST((20000L * n_sampled + n_docs) DIV (2L * n_docs) AS DOUBLE) / 10000.0"))
+        Exact.ratio4("n_sampled", "n_docs")))
       .orderBy("lang")
   }
 
@@ -637,8 +637,7 @@ object PipelineOps {
         .crossJoin(broadcast(nTrain))
         .select(lit(signal).as("signal"), col("n_flagged_train"),
           col("n_eval_hit"),
-          expr("""CAST((20000L * n_flagged_train + __nt) DIV
-                 |  (2L * __nt) AS DOUBLE) / 10000.0""".stripMargin)
+          expr(Exact.ratio4("n_flagged_train", "__nt"))
             .as("flag_rate4"))
     def fp(part: DataFrame, out: String) = part.select(
       col("doc_id").as(out), md5(lower(trim(col("text")))).as("__fp"))
@@ -777,9 +776,7 @@ object PipelineOps {
       .select(col("lang"), expr("avail DIV 4L").as("avail_tokens"),
         col("weight").as("n_docs"), col("saturated").as("capped"),
         col("alloc"),
-        expr("""CAST((20000L * alloc + (avail DIV 4L))
-               |  DIV (2L * (avail DIV 4L)) AS DOUBLE) / 10000.0"""
-          .stripMargin).as("epochs4"))
+        expr(Exact.ratio4("alloc", "avail DIV 4L")).as("epochs4"))
       .orderBy("lang")
   }
 
@@ -854,9 +851,7 @@ object PipelineOps {
         .groupBy("source")
         .agg(count(lit(1)).as(nc), sum("__qi").as("__qs"))
         .withColumn(mc, expr(
-          s"""CAST(CASE WHEN __qs >= 0 THEN (2L * __qs + $nc) DIV (2L * $nc)
-             |ELSE -((2L * -__qs + $nc) DIV (2L * $nc)) END AS DOUBLE)
-             | / 10000.0""".stripMargin))
+          s"CAST(${Exact.halfUpSigned("__qs", nc)} AS DOUBLE) / 10000.0"))
         .drop("__qs")
     perSource(v0, "n_v0", "mean_q_v0")
       .join(perSource(v1, "n_v1", "mean_q_v1"), "source")

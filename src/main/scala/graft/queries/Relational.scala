@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Exact, Tables}
 
 /** Batch relational core — the declared Table-API/SQL surface of the reference
   * (`/root/reference/study/pom.xml:147-166`, flink-table-planner et al.)
@@ -13,7 +13,8 @@ import graft.Tables
   * Conventions shared with the DuckDB oracle (driver correctness gate):
   *  - every query ends in a deterministic total-order `orderBy`;
   *  - double aggregates are wrapped in `round(_, n)` so ulp-level differences
-  *    in summation order between engines cannot flip the hash;
+  *    in summation order between engines cannot flip the hash; money sums
+  *    and integer ratios go through `graft.Exact`, which makes them exact;
   *  - every computed column is aliased identically in the Spark plan and the
   *    oracle SQL.
   *

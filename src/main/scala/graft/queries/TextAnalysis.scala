@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Exact, Tables}
 
 /** Text-analysis operators for an LLM-training-data pipeline (driver-mandated
   * extension surface, SURVEY.md §2.C): per-corpus stats, token counting,
@@ -89,8 +89,7 @@ object TextAnalysis {
           sum("__m").as("n_matches"))
         .select(col("source"), lit(rule).as("rule"), col("n_docs_hit"),
           col("n_matches"),
-          expr("""CAST((20000L * n_docs_hit + __n)
-                 |  DIV (2L * __n) AS DOUBLE) / 10000.0""".stripMargin)
+          expr(Exact.ratio4("n_docs_hit", "__n"))
             .as("hit_rate"))
     }.reduce(_ unionByName _)
       .orderBy("source", "rule")
@@ -364,8 +363,7 @@ object TextAnalysis {
         sum("__nt").as("tok_volume"),
         round(sum(floor(col("__q") * 1048576.0)).cast("double")
           / count(lit(1)).cast("double") / 1048576.0, 4).as("mean_quality"),
-        expr("""CAST((20000L * count_if(__q >= 0.5D) + count(1))
-               |  DIV (2L * count(1)) AS DOUBLE) / 10000.0""".stripMargin)
+        expr(Exact.ratio4("count_if(__q >= 0.5D)", "count(1)"))
           .as("keep_share"))
       .orderBy("source", "lang")
 
@@ -517,13 +515,11 @@ object TextAnalysis {
         count_if(!col("a") && col("b")).as("n01"))
       .select(col("pair"), col("n_docs"), col("n11"), col("n00"),
         col("n10"), col("n01"),
-        expr("""CAST((20000L * (n11 + n00) + n_docs)
-               |  DIV (2L * n_docs) AS DOUBLE) / 10000.0""".stripMargin)
+        expr(Exact.ratio4("n11 + n00", "n_docs"))
           .as("agree4"),
-        expr("""CAST((20000L * ((n11 + n10) * (n11 + n01)
-               |         + (n00 + n01) * (n00 + n10)) + n_docs * n_docs)
-               |  DIV (2L * n_docs * n_docs) AS DOUBLE) / 10000.0"""
-          .stripMargin).as("expected_agree4"))
+        expr(Exact.ratio4(
+          "(n11 + n10) * (n11 + n01) + (n00 + n01) * (n00 + n10)",
+          "n_docs * n_docs")).as("expected_agree4"))
       .orderBy("pair")
   }
 
@@ -578,7 +574,7 @@ object TextAnalysis {
         sum(when(col("passes") && col("score") >= col("thr_score")
           && col("nll") <= col("thr_nll"), 1L).otherwise(0L)).as("n_keep"))
       .withColumn("keep_share4", expr(
-        "CAST((20000L * n_keep + n_scored) DIV (2L * n_scored) AS DOUBLE) / 10000.0"))
+        Exact.ratio4("n_keep", "n_scored")))
       .orderBy("source")
   }
 

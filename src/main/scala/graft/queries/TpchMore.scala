@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Exact, Tables}
 
 /** The rest of the TPC-H query shapes (Q2, Q7-Q9, Q11-Q22), adapted to the
   * fixture star schema (FIXTURES.md). The reference's Table-API dependency

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
-import graft.Scoped
+import graft.{Exact, Scoped}
 
 /** Per-key running count+sum on the Spark 4.x transformWithState API — the
   * reference's I6 rolling keyed aggregate as typed arbitrary state, emitting a
@@ -196,9 +196,7 @@ object StreamingQueries {
     if (!Files.exists(link)) Files.createSymbolicLink(link, file)
     val path = dir.toString
     val raw = s.readStream.schema(s.read.parquet(path).schema).parquet(path)
-    if (name == "events" && raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-      raw.withColumn("ts", expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)"))
-    else raw
+    if (name == "events") graft.Tables.eventsTs(raw) else raw
   }
 
   /** The reference program on bounded input: streaming word count
@@ -283,8 +281,7 @@ object StreamingQueries {
     runToMemory(s, agg, "graft_stream_boiler", "complete")
       .select(col("doc_id"), col("n_pars"), col("n_boiler"),
         (col("n_pars") - col("n_boiler")).as("n_kept"),
-        expr("""CAST((20000L * n_boiler + n_pars)
-               |  DIV (2L * n_pars) AS DOUBLE) / 10000.0""".stripMargin)
+        expr(Exact.ratio4("n_boiler", "n_pars"))
           .as("boiler4"))
       .orderBy("doc_id")
   }
@@ -316,7 +313,7 @@ object StreamingQueries {
         coalesce(col("n_sampled"), lit(0L)).as("n_sampled"),
         coalesce(col("tok_volume"), lit(0L)).as("tok_volume"))
       .withColumn("achieved4", expr(
-        "CAST((20000L * n_sampled + n_docs) DIV (2L * n_docs) AS DOUBLE) / 10000.0"))
+        Exact.ratio4("n_sampled", "n_docs")))
       .orderBy("lang")
   }
 
@@ -424,8 +421,7 @@ object StreamingQueries {
     runToMemory(s, agg, "graft_stream_confgate", "complete")
       .select(col("source"), lit(thrBin).as("thr_bin"), col("n_docs"),
         col("n_kept"),
-        expr("""CAST((20000L * n_kept + n_docs) DIV (2L * n_docs)
-               |  AS DOUBLE) / 10000.0""".stripMargin).as("kept_share4"))
+        expr(Exact.ratio4("n_kept", "n_docs")).as("kept_share4"))
       .orderBy("source")
   }
 
@@ -475,7 +471,7 @@ object StreamingQueries {
         sum(when(col("n_oov") * 5L > col("n_tokens"), 1L).otherwise(0L))
           .as("n_flagged"))
       .withColumn("flagged_share4", expr(
-        "CAST((20000L * n_flagged + n_docs) DIV (2L * n_docs) AS DOUBLE) / 10000.0"))
+        Exact.ratio4("n_flagged", "n_docs")))
       .orderBy("source")
   }
 

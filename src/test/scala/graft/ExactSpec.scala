@@ -1,0 +1,91 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+
+/** The Exact helpers must make rounded sums order-independent and integer
+  * ratios rounded HALF_UP, both equal to an exact BigDecimal model — the
+  * property the oracle gate's stability rests on after the round-4
+  * hardening sweep. Every check evaluates the helpers' own SQL. */
+class ExactSpec extends SparkSpec {
+  import spark.implicits._
+
+  test("sumRound2 over dec() equals a BigDecimal model and ignores row order") {
+    val rnd = new scala.util.Random(31L)
+    // money-like 2-decimal doubles, the fixture columns' shape
+    val vals = Seq.fill(5000)(math.round(rnd.nextDouble() * 1e7) / 100.0)
+    val model = vals.map(v => BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP))
+      .sum.setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+    def run(seq: Seq[Double], partitions: Int): Double =
+      spark.createDataset(seq).repartition(partitions).toDF("v")
+        .agg(Exact.sumRound2(Exact.dec(col("v"))).as("s"))
+        .collect().head.getDouble(0)
+
+    val a = run(vals, 3)
+    val b = run(rnd.shuffle(vals), 7)
+    assert(a == model, s"$a != model $model")
+    assert(b == model, "order/partitioning changed an exact decimal sum")
+  }
+
+  test("dec() recovers every 2-decimal double exactly") {
+    val vals = (0 until 10000).map(i => i / 100.0)
+    val recovered = spark.createDataset(vals).toDF("v")
+      .select(Exact.dec(col("v")).cast("double").as("r"), col("v"))
+      .filter(col("r") =!= col("v")).count()
+    assert(recovered == 0L)
+  }
+
+  test("ratio4 house formula equals BigDecimal HALF_UP rounding on random ratios") {
+    // the integer rounding rule behind every oracled share/rate column must
+    // equal HALF_UP of p/q: at 4 decimals (ratio4), as an integer (halfUp),
+    // and for numerators of either sign (halfUpSigned, which like BigDecimal
+    // HALF_UP rounds half away from zero)
+    val pairGen = for {
+      p <- Gen.chooseNum(0L, 2000000L)
+      q <- Gen.chooseNum(1L, 2000000L)
+    } yield (p, q)
+    val pairs = Gen.listOfN(4000, pairGen).apply(Gen.Parameters.default, Seed(7L)).get
+    val got = pairs.toDF("p", "q").selectExpr(
+        Exact.ratio4("p", "q"),
+        Exact.halfUp("p", "q"),
+        Exact.halfUpSigned("p", "q", 10000L),
+        Exact.halfUpSigned("-p", "q", 10000L))
+      .as[(Double, Long, Long, Long)].collect()
+    def model(p: Long, q: Long, decimals: Int): BigDecimal =
+      (BigDecimal(p) / BigDecimal(q)).setScale(decimals, BigDecimal.RoundingMode.HALF_UP)
+    pairs.zip(got).foreach { case ((p, q), (r4, unscaled, pos, neg)) =>
+      val expect = model(p, q, 4).toDouble
+      assert(r4 == expect, s"ratio4($p, $q): $r4 != $expect")
+      assert(unscaled == model(p, q, 0).toLongExact, s"halfUp($p, $q): $unscaled")
+      assert(pos == (model(p, q, 4) * 10000).toLongExact, s"halfUpSigned($p, $q): $pos")
+      assert(neg == (model(-p, q, 4) * 10000).toLongExact, s"halfUpSigned(-$p, $q): $neg")
+    }
+  }
+
+  test("the rounding rule is spelled only in graft/Exact.scala " +
+      "(the oracle SQL in graft/SparkEntry.scala keeps its own copies)") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root.resolve("graft")),
+      s"sources not found under ${root.toAbsolutePath}")
+    assertThrows[ClassNotFoundException](Class.forName("graft.queries.Exact$"))
+    val allowed = Set("graft/Exact.scala", "graft/SparkEntry.scala")
+    val rule = """20000L|ELSE -\(\(|DIV \(2L \*""".r
+    val walk = Files.walk(root)
+    val files: List[Path] =
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    assert(files.exists(_.endsWith(Paths.get("graft/Exact.scala"))))
+    val hits = for {
+      f <- files
+      rel = root.relativize(f).iterator.asScala.mkString("/")
+      if !allowed(rel)
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if rule.findFirstIn(line).isDefined
+    } yield s"$rel:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString(s"\n${hits.size} copies:\n", "\n", ""))
+  }
+}

@@ -214,22 +214,4 @@ class PropertySpec extends SparkSpec {
       }
     }
   }
-
-  test("ratio4 house formula equals BigDecimal HALF_UP rounding on random ratios") {
-    // (20000p + q) DIV (2q) / 10⁴ — the integer rounding rule behind every
-    // oracled share/rate column — must equal 4-decimal HALF_UP of p/q
-    val pairGen = for {
-      p <- Gen.chooseNum(0L, 2000000L)
-      q <- Gen.chooseNum(1L, 2000000L)
-    } yield (p, q)
-    val pairs = sample(Gen.listOfN(4000, pairGen), 7L)
-    val got = pairs.toDF("p", "q")
-      .selectExpr("CAST((20000L * p + q) DIV (2L * q) AS DOUBLE) / 10000.0")
-      .as[Double].collect()
-    pairs.zip(got).foreach { case ((p, q), g) =>
-      val expect = (BigDecimal(p) / BigDecimal(q))
-        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(g == expect, s"ratio4($p, $q): $g != $expect")
-    }
-  }
 }

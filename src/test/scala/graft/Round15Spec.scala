@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 additions: the perceptual image fingerprint + near-dup join
   * (the r14 verdict's one thin modality), plus pins for this round's
@@ -10,17 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * knn_graph band width, retrievalMetrics descending rank convention is
   * pinned in Round14Spec's updated hand-worked test).
   */
-class Round15Spec extends AnyFunSuite {
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .appName("graft-round15")
-    .getOrCreate()
-  private val sf = "/root/testdata/sf0.001"
-
+class Round15Spec extends SparkSpec {
   test("imageDedup: planted perturbed twins are caught as near-dups, " +
       "exact text dups at Hamming 0, unrelated pairs absent") {
     import spark.implicits._

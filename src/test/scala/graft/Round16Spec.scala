@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 additions: the `minhash_sigs` native expression (all 32
   * permutation minima in one compiled pass) pinned byte-identical to the
@@ -12,17 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (signatures computed once, screened from the re-read artifact) pinned
   * against the r15 flags output shape.
   */
-class Round16Spec extends AnyFunSuite {
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .appName("graft-round16")
-    .getOrCreate()
-  private val sf = "/root/testdata/sf0.001"
-
+class Round16Spec extends SparkSpec {
   private def lambdaSigs(n: Int): String = {
     val P = 2147483647L
     (0 until n).map { i =>

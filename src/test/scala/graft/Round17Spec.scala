@@ -1,19 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Encoders, SparkSession}
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Encoders
 
 /** Round-17 optimization parity pins: the rewritten internals must be
   * bit-identical to the shapes they replaced. */
-class Round17Spec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("round17")
-    .getOrCreate()
+class Round17Spec extends SparkSpec {
 
   test("FixedPointVecSum equals the exploded fixed-point mean formula") {
     val s = spark
