@@ -19,24 +19,34 @@ object Verify {
     if (names.isEmpty) SparkEntry.queries.keys.toSeq else names.distinct
   }
 
+  /** Dumps every named row, keeps going past a failed one, always writes
+    * oracle_sql.json, and returns the names that failed. */
   private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String,
-      names: Seq[String]): Unit = {
+      names: Seq[String]): Seq[String] = {
     new java.io.File(outDir).mkdirs()
-    names.foreach { name =>
-      try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = names.filter { name =>
+      try {
+        SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        false
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        true
       }
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       new ObjectMapper().writeValueAsString(SparkEntry.oracleSql.asJava))
+    failed
   }
 
+  /** Throws, naming every failed row, so a failure ends the run non-zero. */
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query...]")
     val names = select(args.drop(2).toSeq)
     val spark = Tables.session("graft-verify")
-    try dump(spark, args(0), args(1), names) finally spark.stop()
+    val failed = try dump(spark, args(0), args(1), names) finally spark.stop()
+    if (failed.nonEmpty)
+      throw new IllegalStateException(
+        s"${failed.size} of ${names.size} rows failed: ${failed.mkString(", ")}")
   }
 }

@@ -185,8 +185,9 @@ object StreamingQueries {
     * file is exposed through a per-table temp directory via symlink — the
     * shape a production deployment has anyway (a directory of files arriving
     * over time). The link dir is Scoped scratch; its JVM-exit cleanup removes
-    * the link, never the table it points at. Needs an explicit schema;
-    * events additionally needs the ns→NTZ conversion from graft.Tables. */
+    * the link, never the table it points at. Needs an explicit schema,
+    * which is the file's memoized one from graft.Tables; events
+    * additionally needs the ns→NTZ conversion from graft.Tables. */
   private def readStreamTable(s: SparkSession, d: String, name: String): DataFrame = {
     import java.nio.file.{Files, Paths}
     val file = Paths.get(s"$d/$name.parquet")
@@ -195,7 +196,7 @@ object StreamingQueries {
     val link = dir.resolve(s"$name.parquet")
     if (!Files.exists(link)) Files.createSymbolicLink(link, file)
     val path = dir.toString
-    val raw = s.readStream.schema(s.read.parquet(path).schema).parquet(path)
+    val raw = s.readStream.schema(graft.Tables.schema(s, d, name)).parquet(path)
     if (name == "events") graft.Tables.eventsTs(raw) else raw
   }
 

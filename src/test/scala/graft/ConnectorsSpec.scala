@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.connectors._
@@ -11,9 +11,13 @@ import graft.connectors._
 class ConnectorsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A fresh, existing scratch dir under the session's Scoped tree. */
+  private def scratch(name: String): String =
+    Files.createDirectories(Paths.get(Scoped.dir(spark, name, "connectors"))).toString
+
   test("ParquetKeyValueStore keeps last write per key across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_kv").toString + "/store"
+    val dir = scratch("graft_kv") + "/store"
     val store = new ParquetKeyValueStore(dir, orderCol = "version")
     val input = MemoryStream[(String, Long, Double)]
     val q = KeyValueSink.start(
@@ -42,7 +46,7 @@ class ConnectorsSpec extends SparkSpec {
   }
 
   test("JDBC write→read round trip on embedded Derby (incl. partitioned read)") {
-    val db = Files.createTempDirectory("graft_derby").toString + "/db"
+    val db = scratch("graft_derby") + "/db"
     val url = s"jdbc:derby:$db;create=true"
     val src = Tables.nation(spark, sf).select("n_nationkey", "n_name", "n_regionkey")
     Jdbc.write(src, url, "nation_rt", org.apache.spark.sql.SaveMode.Overwrite)
@@ -59,7 +63,7 @@ class ConnectorsSpec extends SparkSpec {
 
   test("streaming foreachBatch JDBC upsert keeps last write per key (Derby)") {
     implicit val sqlCtx = spark.sqlContext
-    val db = Files.createTempDirectory("graft_derby_kv").toString + "/db"
+    val db = scratch("graft_derby_kv") + "/db"
     val url = s"jdbc:derby:$db;create=true"
     val store = new JdbcKeyValueStore(url, "kv_rt", orderCol = "version")
     val input = MemoryStream[(String, Long, Double)]
@@ -86,7 +90,7 @@ class ConnectorsSpec extends SparkSpec {
   }
 
   test("csv/json/orc round-trip preserves the data") {
-    val base = Files.createTempDirectory("graft_fmt").toString
+    val base = scratch("graft_fmt")
     val src = Tables.events(spark, sf)
       .select("event_id", "user_id", "event_type", "value")
       .filter(col("event_id") < 100)

@@ -16,7 +16,8 @@ class RecoverySpec extends SparkSpec {
 
   test("stateful streaming query resumes exactly-once from its checkpoint") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_recovery").toString
+    val base =
+      Files.createDirectories(Paths.get(Scoped.dir(spark, "graft_recovery", "resume"))).toString
     val srcDir = s"$base/src"; val ckpt = s"$base/ckpt"
     Files.createDirectories(Paths.get(srcDir))
 
@@ -60,7 +61,8 @@ class RecoverySpec extends SparkSpec {
 
   test("Trigger.AvailableNow drains all input then terminates on its own") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_availnow").toString
+    val base =
+      Files.createDirectories(Paths.get(Scoped.dir(spark, "graft_availnow", "drain"))).toString
     Seq(("a", 1L), ("b", 2L), ("a", 3L)).toDF("word", "n")
       .repartition(1).write.mode("append").json(s"$base/src")
     val q = spark.readStream.schema("word STRING, n BIGINT").json(s"$base/src")

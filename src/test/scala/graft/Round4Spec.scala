@@ -40,7 +40,7 @@ class Round4Spec extends SparkSpec {
       (3L, s"totally different start yet $tail"),
       (4L, "an unrelated singleton document entirely")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_r4").toFile.getAbsolutePath
+    val dir = Scoped.dir(spark, "graft_r4", "dedup_clusters")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = PipelineOps.dedupClusters(spark, dir)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -61,7 +61,7 @@ class Round4Spec extends SparkSpec {
       // user 4: signup+view, clickless -> stage 2
       (4L, "signup", ts("2024-01-01 08:00:00")), (4L, "view", ts("2024-01-01 08:30:00"))
     ).toDF("user_id", "event_type", "ts")
-    val dir = java.nio.file.Files.createTempDirectory("graft_r4f").toFile.getAbsolutePath
+    val dir = Scoped.dir(spark, "graft_r4f", "funnel")
     events.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val stages = PipelineOps.funnelAnalysis(spark, dir)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap

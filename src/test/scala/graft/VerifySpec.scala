@@ -25,4 +25,17 @@ class VerifySpec extends SparkSpec {
     assert(e.getMessage.contains("no_such_query"))
     assert(!Files.exists(Paths.get(out)))
   }
+
+  // Last in the suite: Verify.main stops the session it ran on.
+  test("a failed row is returned by dump and makes main throw, naming it") {
+    val empty = Scoped.dir(spark, "graft_verify_spec", "empty_sf")
+    Files.createDirectories(Paths.get(empty))
+    val out = Scoped.dir(spark, "graft_verify_spec", "failed")
+    assert(Verify.dump(spark, empty, out, Seq("word_count")) == Seq("word_count"))
+    assert(Files.exists(Paths.get(out, "oracle_sql.json")))
+    val e = intercept[IllegalStateException] {
+      Verify.main(Array(empty, out, "word_count"))
+    }
+    assert(e.getMessage.contains("word_count"))
+  }
 }
