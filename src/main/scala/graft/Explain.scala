@@ -15,13 +15,13 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Explain <query> <sfDir>")
-    val spark = Tables.session("graft-explain")
-    val tb = System.nanoTime()
-    val df = SparkEntry.queries(args(0))(spark, args(1))
-    val buildSec = (System.nanoTime() - tb) / 1e9
-    df.explain("formatted")
-    val t0 = System.nanoTime(); val n = df.count()
-    println(f"rows=$n build=$buildSec%.3fs count=${(System.nanoTime() - t0) / 1e9}%.3fs")
-    spark.stop()
+    Tables.withSession("graft-explain") { spark =>
+      val tb = System.nanoTime()
+      val df = SparkEntry.queries(args(0))(spark, args(1))
+      val buildSec = (System.nanoTime() - tb) / 1e9
+      df.explain("formatted")
+      val t0 = System.nanoTime(); val n = df.count()
+      println(f"rows=$n build=$buildSec%.3fs count=${(System.nanoTime() - t0) / 1e9}%.3fs")
+    }
   }
 }

@@ -49,6 +49,15 @@ object Tables {
     spark
   }
 
+  /** Runs `body` on `session(appName)`, then stops that session only if this
+    * call created it: a main called in a JVM that already runs a session (a
+    * test suite, a notebook) leaves the caller's session running. */
+  private[graft] def withSession[T](appName: String)(body: SparkSession => T): T = {
+    val existing = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    val spark = session(appName)
+    try body(spark) finally if (!existing.exists(_ eq spark)) spark.stop()
+  }
+
   private case class FileKey(path: String, mtime: Long, length: Long)
   private val schemas = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[FileKey, StructType]]())

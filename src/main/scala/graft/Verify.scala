@@ -43,8 +43,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query...]")
     val names = select(args.drop(2).toSeq)
-    val spark = Tables.session("graft-verify")
-    val failed = try dump(spark, args(0), args(1), names) finally spark.stop()
+    val failed = Tables.withSession("graft-verify")(dump(_, args(0), args(1), names))
     if (failed.nonEmpty)
       throw new IllegalStateException(
         s"${failed.size} of ${names.size} rows failed: ${failed.mkString(", ")}")

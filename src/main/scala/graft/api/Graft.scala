@@ -767,97 +767,159 @@ object Graft {
     g => s"CAST(conv(substring(md5($g), 1, 15), 16, 10) AS BIGINT)"
 
   /** 64-bit SimHash signature per document (Charikar '02): sign of per-bit
-    * sums of ±1 contributions from each token occurrence's base hash. One
-    * row-local contribution array + ONE groupBy(idCol) of 64 positional sums
-    * (map-side partials shrink the shuffle to |docs|·64 longs). With the
+    * sums of ±1 contributions from each token occurrence's base hash —
+    * `simhashSignature` at k = 1, w = 64, output column `simhash`. With the
     * default raw-xxhash64 base all 64 bits carry signal; with `md5Hash60`
     * the top 4 bits are structurally 0 (a 60-bit SimHash — same semantics,
     * cross-engine verifiable). */
   def simhash64(df: DataFrame, idCol: String, textCol: String,
-      baseHash: Column => Column = xxhash64(_)): DataFrame = {
+      baseHash: Column => Column = xxhash64(_)): DataFrame =
+    simhashSignature(df, idCol, textCol, Seq(baseHash -> "simhash"), 64)
+
+  /** SimHash candidate pairs with a RECALL GUARANTEE at `maxHamming` over a
+    * `bits`-wide one-long signature — `simhashPairs` at k = 1, w = `bits`
+    * (see there for the blocking, the layering and its scale limits).
+    * Output: (id_a, id_b, sig_a, hamming), `sig_a` being id_a's signature. */
+  def simhashCandidates(sig: DataFrame, idCol: String,
+      sigCol: String = "simhash", maxHamming: Int = 12,
+      bits: Int = 60): DataFrame =
+    simhashPairs(sig, idCol, Seq(sigCol), bits, maxHamming)
+      .select(col("id_a"), col("id_b"), col("__sig0").as("sig_a"), col("hamming"))
+
+  /** Second 60-bit md5-derived hash, INDEPENDENT of md5Hash60: hex chars
+    * 16-30 of the same digest (md5Hash60 takes 1-15). Cross-engine exact —
+    * DuckDB mirror is ('0x' || substring(md5(x), 16, 15))::BIGINT. Used as
+    * the hi-half base hash of the cross-engine-verifiable 120-bit SimHash. */
+  def md5Hash60b(c: Column): Column =
+    // the native md5-60 expression at its second half; see the parity note
+    // on md5Hash60
+    org.apache.spark.sql.GraftShims.column(
+      graft.functions.Md5Hash60Expr(org.apache.spark.sql.GraftShims.expression(c), 1))
+
+  /** WIDE SimHash signature: TWO independent base hashes per token give a
+    * 2·`bitsPerHalf`-bit signature carried as two longs (`sim_lo`,
+    * `sim_hi`) — `simhashSignature` at k = 2, w = `bitsPerHalf`, the scale
+    * fix of simhashPairs' note. Defaults are the production pair (raw
+    * xxhash64 + a salted twin, 128 bits, Spark-only); the ORACLED registry
+    * row passes the two md5 halves (md5Hash60/md5Hash60b, 120 bits) so
+    * DuckDB can rebuild both signatures exactly. */
+  def simhash128(df: DataFrame, idCol: String, textCol: String,
+      baseHashLo: Column => Column = xxhash64(_),
+      baseHashHi: Column => Column = c => xxhash64(lit("graft-hi"), c),
+      bitsPerHalf: Int = 64): DataFrame =
+    simhashSignature(df, idCol, textCol,
+      Seq(baseHashLo -> "sim_lo", baseHashHi -> "sim_hi"), bitsPerHalf)
+
+  /** Pigeonhole candidate pairs over the two-long wide signature —
+    * `simhashPairs` at k = 2, w = `bitsPerHalf`, so blocks may straddle the
+    * lo/hi boundary. Output: (id_a, id_b, hamming). */
+  def simhashCandidatesWide(sig: DataFrame, idCol: String,
+      loCol: String = "sim_lo", hiCol: String = "sim_hi",
+      maxHamming: Int = 12, bitsPerHalf: Int = 60): DataFrame =
+    simhashPairs(sig, idCol, Seq(loCol, hiCol), bitsPerHalf, maxHamming)
+      .select(col("id_a"), col("id_b"), col("hamming"))
+
+  /** The one SimHash signature builder (simhash64: k = 1, simhash128:
+    * k = 2). Layout: a k·w-bit signature carried as k longs; long j holds
+    * bits j·w .. j·w + w − 1 of the concatenation in its low w bits, and
+    * each long has its own base hash (`hashes(j)`, output column named
+    * beside it). Shape: one token explode, ONE groupBy(idCol) of the token
+    * count `n` plus k·w positional bit counts (map-side partials shrink the
+    * shuffle to |docs|·k·w longs), then one projection to the k longs. */
+  private def simhashSignature(df: DataFrame, idCol: String, textCol: String,
+      hashes: Seq[(Column => Column, String)], w: Int): DataFrame = {
     val tokens = df
       .select(col(idCol), explode(split(col(textCol), " ", -1)).as("token"))
       .filter(length(col("token")) > 0)
-      .withColumn("h", baseHash(col("token")))
+      .select(col(idCol) +: hashes.zipWithIndex.map { case ((h, _), j) =>
+        h(col("token")).as(s"h$j") }: _*)
     // Per bit b, sum of ±1 contributions over token occurrences is positive
-    // iff 2·(count of set bits) > n_tokens — so aggregate 64 plain bit-counts
-    // plus one row count, all direct codegen'd expressions. (An earlier form
-    // built a 64-long contribution ARRAY per token row before aggregating;
-    // dropping that per-row allocation measured ~35% faster end-to-end.)
+    // iff 2·(count of set bits) > n_tokens — so aggregate k·w plain
+    // bit-counts plus one row count, all direct codegen'd expressions. (An
+    // earlier form built a 64-long contribution ARRAY per token row before
+    // aggregating; dropping that per-row allocation measured ~35% faster
+    // end-to-end.)
+    val counts = for (j <- hashes.indices; b <- 0 until w)
+      yield sum(expr(s"shiftright(h$j, $b) & 1L")).as(s"c${j}_$b")
+    def long(j: Int): Column = expr((0 until w).map(b =>
+      s"CASE WHEN 2 * c${j}_$b > n THEN shiftleft(CAST(1 AS BIGINT), $b) ELSE CAST(0 AS BIGINT) END")
+      .mkString(" + "))
     tokens
       .groupBy(idCol)
-      .agg(count(lit(1)).as("n"),
-        (0 until 64).map(b =>
-          sum(expr(s"shiftright(h, $b) & 1L")).as(s"c$b")): _*)
-      .select(col(idCol), expr(
-        (0 until 64).map(b => s"CASE WHEN 2 * c$b > n THEN shiftleft(CAST(1 AS BIGINT), $b) ELSE CAST(0 AS BIGINT) END")
-          .mkString(" + ")).as("simhash"))
+      .agg(count(lit(1)).as("n"), counts: _*)
+      .select(col(idCol) +: hashes.zipWithIndex.map { case ((_, name), j) =>
+        long(j).as(name) }: _*)
   }
 
-  /** SimHash candidate pairs with a RECALL GUARANTEE at `maxHamming`:
-    * split the `bits`-wide signature into `maxHamming + 1` contiguous
+  /** The one SimHash candidates builder (simhashCandidates: k = 1,
+    * simhashCandidatesWide: k = 2) over the simhashSignature layout: the
+    * k longs `sigCols`, each holding w bits of a k·w-bit signature.
+    * Output: (id_a, id_b, __sig0 .. __sig{k-1} = id_a's signature longs,
+    * hamming), every pair within Hamming `maxHamming` exactly once.
+    *
+    * RECALL GUARANTEE: split the k·w bits into `maxHamming + 1` contiguous
     * blocks (as even as possible); by pigeonhole, two signatures within
     * Hamming distance `maxHamming` differ in at most `maxHamming` blocks,
     * so at least ONE block matches exactly — candidates = pairs sharing
     * any (block, block-value) key, then the exact Hamming filter keeps the
-    * real ones. (The r9 single 12-bit-prefix block missed any pair whose
-    * differing bits fell in the prefix; this is the standard multi-block
-    * fix, property-tested against the exact all-pairs Hamming join.)
+    * real ones (property-tested against the exact all-pairs Hamming join at
+    * k = 1 and k = 2). A block key is the block's bits of the
+    * concatenation: each long a block overlaps contributes its slice,
+    * shifted to the slice's place in the key, so a block may straddle two
+    * longs; at k = 1 the key is one shift-and-mask. Mask guard: a 64-bit
+    * slice (w = 64, few blocks) gets the mask -1L, because (1L << 64) wraps
+    * to 1 and the mask would be 0 — every key equal, the block join
+    * all-pairs, silently (the Hamming gate still filters).
     *
-    * Shape: one slim (id, blk, key) explode — (maxHamming+1)·|docs| rows
-    * of three ints — a per-(blk, key) bucket self-join, DISTINCT id
-    * pairs (a pair can share several blocks), then ONE signature
-    * re-attach for the Hamming readout. Never all-pairs.
+    * Layering (exact-dedup-before-LSH): the block join runs on DISTINCT
+    * SIGNATURES, so identical texts collapse to one representative and
+    * their Hamming-0 pairs come from one output-bound equi-join on all k
+    * longs. The bucket self-join keeps each pair once under a lexicographic
+    * `<` over the k longs, gates on Hamming (sum of per-long
+    * bit_count(xor), codegen'd in the join projection) BEFORE distinct
+    * (distinct-first measured 10× slower: it shuffled every bucket
+    * collision), and expands to document pairs only after the gate — so a
+    * 10×-replicated corpus pays the SAME block join as its
+    * distinct-signature core (sf1's 50k docs hold 4,967 distinct
+    * signatures, exactly sf0.1's). Never all-pairs.
     *
-    * The block join runs on DISTINCT SIGNATURES, not documents: identical
-    * texts (and boilerplate families that simhash to the same value)
-    * collapse to one representative before any pairing, their
-    * Hamming-0 pairs come from one output-bound equi-join, and the
-    * cross-signature candidates expand back to document pairs only AFTER
-    * the Hamming gate — so a 10×-replicated corpus pays the SAME block
-    * join as its distinct-signature core (measured: sf1's 50k docs hold
-    * 4,967 distinct signatures — exactly sf0.1's), and candidate volume
-    * is bounded by distinct-signature density, with everything beyond it
-    * output-bound. This is the exact-dedup-before-LSH layering every
-    * production near-dup pipeline runs.
-    *
-    * Scale honesty: each block carries bits/(maxHamming+1) key bits —
+    * Scale honesty: each block carries k·w/(maxHamming+1) key bits —
     * 60-bit signatures at maxHamming=12 give ~4.6-bit blocks, fine at
     * benchmark scale but too coarse for 10^10 DISTINCT signatures (bucket
     * occupancy ~D/2^4.6 goes quadratic in D). At 100 TB either widen the
-    * signature (128/256-bit SimHash keeps the SAME code path: blocks of
-    * 128/13 ≈ 9.8 bits) or tighten maxHamming so each block holds ≥
-    * log2(D) bits; both are parameter changes, not plan changes.
-    * (r16 negative result: the other recall-preserving layout —
-    * GPH/HmSearch ball enumeration over FEWER, WIDER blocks, e.g. 6×10
-    * bits with the ≤2-error ball's 56 XOR probes — examines ~26M unordered
-    * candidate pairs at sf0.1 vs this cover's 28.6M: no cut, because the
-    * signature bits are CORRELATED on this corpus and the skewed wide
-    * buckets absorb the enumeration's probes; SCALE.md Round-16. The
-    * occupancy knob stays signature width, i.e. dedupSimhashWide.) */
-  def simhashCandidates(sig: DataFrame, idCol: String,
-      sigCol: String = "simhash", maxHamming: Int = 12,
-      bits: Int = 60): DataFrame = {
+    * signature (k = 2: blocks of 120/13 ≈ 9.2 bits) or tighten maxHamming
+    * so each block holds ≥ log2(D) bits; both are parameter changes, not
+    * plan changes. (r16 negative result: the other recall-preserving
+    * layout — GPH/HmSearch ball enumeration over FEWER, WIDER blocks, e.g.
+    * 6×10 bits with the ≤2-error ball's 56 XOR probes — examines ~26M
+    * unordered candidate pairs at sf0.1 vs this cover's 28.6M: no cut,
+    * because the signature bits are CORRELATED on this corpus and the
+    * skewed wide buckets absorb the enumeration's probes; SCALE.md
+    * Round-16. The occupancy knob stays signature width, i.e.
+    * dedupSimhashWide.) */
+  private def simhashPairs(sig: DataFrame, idCol: String, sigCols: Seq[String],
+      w: Int, maxHamming: Int): DataFrame = {
     val nBlocks = maxHamming + 1
+    val bits = sigCols.size * w
     // Materialize the signature table ONCE: the upstream signature
-    // computation (token explode + per-doc 64 bit-sums) is the query's
+    // computation (token explode + per-doc bit-sums) is the query's
     // dominant cost, and the join branches below would each recompute it
     // from the scan (ReuseExchange doesn't fire through the
-    // BroadcastExchange wrap). O(N)·16-byte state — the at-rest shape a
+    // BroadcastExchange wrap). O(N)·8k-byte state — the at-rest shape a
     // production run would persist anyway (cf. the minhash index table).
     val sigM = sig.localCheckpoint(true)
-    // 1. Hamming-0 pairs: one equi-join on the signature value —
-    //    output-bound (every row it emits IS a reported pair).
+    def sameSig(a: String, b: String): Column =
+      sigCols.map(c => col(s"$a.$c") === col(s"$b.$c")).reduce(_ && _)
+    // 1. Hamming-0 pairs: one equi-join on all k longs — output-bound
+    //    (every row it emits IS a reported pair).
     val intra = sigM.as("za").join(sigM.as("zb"),
-        col(s"za.$sigCol") === col(s"zb.$sigCol") &&
-        col(s"za.$idCol") < col(s"zb.$idCol"))
-      .select(col(s"za.$idCol").as("id_a"), col(s"zb.$idCol").as("id_b"),
-        col(s"za.$sigCol").as("sig_a"), lit(0).cast("int").as("hamming"))
-    // 2. Candidate SIGNATURE pairs via the pigeonhole blocks, Hamming
-    //    gate inside the join projection (codegen), dedup AFTER the gate
-    //    (a pair can share several blocks; distinct-before-filter
-    //    measured 10× slower — it shuffled every bucket collision).
-    val reps = sigM.select(col(sigCol)).distinct().localCheckpoint(true)
+        sameSig("za", "zb") && col(s"za.$idCol") < col(s"zb.$idCol"))
+      .select(Seq(col(s"za.$idCol").as("id_a"), col(s"zb.$idCol").as("id_b")) ++
+        sigCols.indices.map(j => col(s"za.${sigCols(j)}").as(s"__sig$j")) :+
+        lit(0).cast("int").as("hamming"): _*)
+    // 2. Candidate SIGNATURE pairs via the pigeonhole blocks over the
+    //    distinct signatures.
+    val reps = sigM.select(sigCols.map(col): _*).distinct().localCheckpoint(true)
     // Contiguous blocks: first `extra` get base+1 bits, the rest `base`.
     // (Negative result, r10: an ENTROPY-AWARE layout — per-bit bias
     // measured over distinct signatures, bits dealt round-robin by bias
@@ -869,147 +931,55 @@ object Graft {
     val base = bits / nBlocks; val extra = bits % nBlocks
     val lens = (0 until nBlocks).map(b => if (b < extra) base + 1 else base)
     val offsets = lens.scanLeft(0)(_ + _)
-    val keyCols = (0 until nBlocks).map { b =>
-      struct(lit(b).as("blk"),
-        shiftright(col(sigCol), offsets(b))
-          .bitwiseAND(lit((1L << lens(b)) - 1L)).as("key"))
-    }
-    val keys = reps.select(col(sigCol), explode(array(keyCols: _*)).as("bk"))
-      .select(col(sigCol), col("bk.blk").as("blk"), col("bk.key").as("key"))
-    val sigPairs = keys.as("ka").join(keys.as("kb"),
-        col("ka.blk") === col("kb.blk") && col("ka.key") === col("kb.key") &&
-        col(s"ka.$sigCol") < col(s"kb.$sigCol"))
-      .select(col(s"ka.$sigCol").as("__sa"), col(s"kb.$sigCol").as("__sb"),
-        bit_count(col(s"ka.$sigCol").bitwiseXOR(col(s"kb.$sigCol")))
-          .cast("int").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-    // 3. Expand surviving signature pairs to document pairs — two joins
-    //    whose output rows are exactly the reported pairs.
-    val cross = sigPairs
-      .join(sigM.select(col(idCol).as("__ia"), col(sigCol).as("__sa")), "__sa")
-      .join(sigM.select(col(idCol).as("__ib"), col(sigCol).as("__sb")), "__sb")
-      .select(least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"),
-        when(col("__ia") < col("__ib"), col("__sa")).otherwise(col("__sb"))
-          .as("sig_a"),
-        col("hamming"))
-    intra.unionByName(cross)
-  }
-
-  /** Second 60-bit md5-derived hash, INDEPENDENT of md5Hash60: hex chars
-    * 16-30 of the same digest (md5Hash60 takes 1-15). Cross-engine exact —
-    * DuckDB mirror is ('0x' || substring(md5(x), 16, 15))::BIGINT. Used as
-    * the hi-half base hash of the cross-engine-verifiable 120-bit SimHash. */
-  def md5Hash60b(c: Column): Column =
-    // native twin of md5Hash60 for the hi half (hex chars 16-30); see the
-    // parity note there
-    org.apache.spark.sql.GraftShims.column(
-      graft.functions.Md5Hash60bExpr(org.apache.spark.sql.GraftShims.expression(c)))
-
-  /** WIDE SimHash signature: TWO independent base hashes per token give a
-    * 2·`bitsPerHalf`-bit signature carried as two longs (`sim_lo`,
-    * `sim_hi`) — the parameter-level scale fix the 64-bit path's own note
-    * names: at 10^10 DISTINCT signatures the 60-bit pigeonhole blocks
-    * (60/13 ≈ 4.6 bits) go quadratic, while 120-bit blocks carry 120/13 ≈
-    * 9.2 bits each, pushing the quadratic knee out by ~2^60. Same one-pass
-    * aggregation shape as simhash64: one token explode, ONE groupBy of
-    * 2·bitsPerHalf positional bit-count sums (map-side partials shrink the
-    * shuffle to |docs|·(2·bitsPerHalf) longs). Defaults are the production
-    * pair (raw xxhash64 + a salted twin, 128 bits, Spark-only); the ORACLED
-    * registry row passes the two md5 halves (md5Hash60/md5Hash60b, 120
-    * bits) so DuckDB can rebuild both signatures exactly. */
-  def simhash128(df: DataFrame, idCol: String, textCol: String,
-      baseHashLo: Column => Column = xxhash64(_),
-      baseHashHi: Column => Column = c => xxhash64(lit("graft-hi"), c),
-      bitsPerHalf: Int = 64): DataFrame = {
-    val tokens = df
-      .select(col(idCol), explode(split(col(textCol), " ", -1)).as("token"))
-      .filter(length(col("token")) > 0)
-      .withColumn("hl", baseHashLo(col("token")))
-      .withColumn("hh", baseHashHi(col("token")))
-    def half(src: String, pre: String) = (0 until bitsPerHalf).map(b =>
-      sum(expr(s"shiftright($src, $b) & 1L")).as(s"$pre$b"))
-    def sig(pre: String) = expr((0 until bitsPerHalf).map(b =>
-      s"CASE WHEN 2 * $pre$b > n THEN shiftleft(CAST(1 AS BIGINT), $b) ELSE CAST(0 AS BIGINT) END")
-      .mkString(" + "))
-    tokens
-      .groupBy(idCol)
-      .agg(count(lit(1)).as("n"), half("hl", "l") ++ half("hh", "u"): _*)
-      .select(col(idCol), sig("l").as("sim_lo"), sig("u").as("sim_hi"))
-  }
-
-  /** Pigeonhole candidate pairs over the two-long wide signature — the
-    * same guaranteed-recall machinery as simhashCandidates (maxHamming+1
-    * disjoint blocks covering all bits ⇒ any pair within the cutoff shares
-    * at least one block exactly), generalized to a 2·bitsPerHalf-bit
-    * signature: a block whose bit range straddles the lo/hi boundary is
-    * extracted from both longs and stitched (`loPart | hiPart << loLen`).
-    * Identical layering to the 64-bit path: Hamming-0 via one equi-join on
-    * both halves, block join over DISTINCT signatures, exact
-    * two-long-Hamming gate inside the join projection, expansion to doc
-    * pairs only after the gate. Output: (id_a, id_b, hamming). */
-  def simhashCandidatesWide(sig: DataFrame, idCol: String,
-      loCol: String = "sim_lo", hiCol: String = "sim_hi",
-      maxHamming: Int = 12, bitsPerHalf: Int = 60): DataFrame = {
-    val nBlocks = maxHamming + 1
-    val bits = 2 * bitsPerHalf
-    val sigM = sig.localCheckpoint(true)
-    val intra = sigM.as("za").join(sigM.as("zb"),
-        col(s"za.$loCol") === col(s"zb.$loCol") &&
-        col(s"za.$hiCol") === col(s"zb.$hiCol") &&
-        col(s"za.$idCol") < col(s"zb.$idCol"))
-      .select(col(s"za.$idCol").as("id_a"), col(s"zb.$idCol").as("id_b"),
-        lit(0).cast("int").as("hamming"))
-    val reps = sigM.select(col(loCol), col(hiCol)).distinct().localCheckpoint(true)
-    val base = bits / nBlocks; val extra = bits % nBlocks
-    val lens = (0 until nBlocks).map(b => if (b < extra) base + 1 else base)
-    val offsets = lens.scanLeft(0)(_ + _)
-    // (1L << 64) wraps to 1 under Scala's mod-64 shift, which would turn a
-    // 64-bit-wide block's mask into 0 and collapse the pigeonhole prescreen
-    // into an all-pairs join (silently — the exact Hamming gate still
-    // filters, only the blocking dies). 64-bit blocks are reachable with
-    // bitsPerHalf = 64 and few blocks, so mask width 64 gets -1L explicitly.
+    // the mask guard (scaladoc): (1L << 64) wraps to 1
     def maskOf(len: Int): Long = if (len >= 64) -1L else (1L << len) - 1L
+    // Block b covers bits [o, o + len) of the concatenation; long j holds
+    // bits [j·w, (j+1)·w). Each overlap [from, to) is one slice.
     def blockKey(b: Int): Column = {
-      val o = offsets(b); val len = lens(b)
-      val loLen = math.max(0, math.min(len, bitsPerHalf - o))
-      val hiLen = len - loLen
-      val loPart: Column =
-        if (loLen > 0) shiftright(col(loCol), o).bitwiseAND(lit(maskOf(loLen)))
-        else lit(0L)
-      val hiPart: Column =
-        if (hiLen > 0) shiftright(col(hiCol), math.max(0, o - bitsPerHalf))
-          .bitwiseAND(lit(maskOf(hiLen)))
-        else lit(0L)
-      loPart.bitwiseOR(shiftleft(hiPart, loLen))
+      val o = offsets(b); val end = o + lens(b)
+      sigCols.indices.flatMap { j =>
+        val from = math.max(o, j * w); val to = math.min(end, (j + 1) * w)
+        if (from >= to) None
+        else {
+          val slice = shiftright(col(sigCols(j)), from - j * w)
+            .bitwiseAND(lit(maskOf(to - from)))
+          Some(if (from == o) slice else shiftleft(slice, from - o))
+        }
+      }.reduce(_ bitwiseOR _)
     }
     val keyCols = (0 until nBlocks).map(b =>
       struct(lit(b).as("blk"), blockKey(b).as("key")))
     val keys = reps
-      .select(col(loCol), col(hiCol), explode(array(keyCols: _*)).as("bk"))
-      .select(col(loCol), col(hiCol),
-        col("bk.blk").as("blk"), col("bk.key").as("key"))
+      .select(sigCols.map(col) :+ explode(array(keyCols: _*)).as("bk"): _*)
+      .select(sigCols.map(col) ++
+        Seq(col("bk.blk").as("blk"), col("bk.key").as("key")): _*)
+    // lexicographic ka < kb over the k longs: each pair once
+    def less(j: Int): Column = {
+      val a = col(s"ka.${sigCols(j)}"); val b = col(s"kb.${sigCols(j)}")
+      if (j == sigCols.size - 1) a < b else a < b || (a === b && less(j + 1))
+    }
+    val hamming = sigCols.map(c =>
+      bit_count(col(s"ka.$c").bitwiseXOR(col(s"kb.$c")))).reduce(_ + _)
     val sigPairs = keys.as("ka").join(keys.as("kb"),
         col("ka.blk") === col("kb.blk") && col("ka.key") === col("kb.key") &&
-        (col(s"ka.$loCol") < col(s"kb.$loCol") ||
-         (col(s"ka.$loCol") === col(s"kb.$loCol") &&
-          col(s"ka.$hiCol") < col(s"kb.$hiCol"))))
-      .select(col(s"ka.$loCol").as("__la"), col(s"ka.$hiCol").as("__ha"),
-        col(s"kb.$loCol").as("__lb"), col(s"kb.$hiCol").as("__hb"),
-        (bit_count(col(s"ka.$loCol").bitwiseXOR(col(s"kb.$loCol"))) +
-         bit_count(col(s"ka.$hiCol").bitwiseXOR(col(s"kb.$hiCol"))))
-          .cast("int").as("hamming"))
+        less(0))
+      .select(sigCols.indices.map(j => col(s"ka.${sigCols(j)}").as(s"__a$j")) ++
+        sigCols.indices.map(j => col(s"kb.${sigCols(j)}").as(s"__b$j")) :+
+        hamming.cast("int").as("hamming"): _*)
       .filter(col("hamming") <= maxHamming) // distinct sigs ⇒ hamming ≥ 1
       .distinct()
+    // 3. Expand surviving signature pairs to document pairs — two joins
+    //    whose output rows are exactly the reported pairs.
+    def side(s: String): DataFrame = sigM.select(col(idCol).as(s"__i$s") +:
+      sigCols.indices.map(j => col(sigCols(j)).as(s"__$s$j")): _*)
     val cross = sigPairs
-      .join(sigM.select(col(idCol).as("__ia"),
-        col(loCol).as("__la"), col(hiCol).as("__ha")), Seq("__la", "__ha"))
-      .join(sigM.select(col(idCol).as("__ib"),
-        col(loCol).as("__lb"), col(hiCol).as("__hb")), Seq("__lb", "__hb"))
-      .select(least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"),
-        col("hamming"))
+      .join(side("a"), sigCols.indices.map(j => s"__a$j"))
+      .join(side("b"), sigCols.indices.map(j => s"__b$j"))
+      .select(Seq(least(col("__ia"), col("__ib")).as("id_a"),
+        greatest(col("__ia"), col("__ib")).as("id_b")) ++
+        sigCols.indices.map(j => when(col("__ia") < col("__ib"), col(s"__a$j"))
+          .otherwise(col(s"__b$j")).as(s"__sig$j")) :+
+        col("hamming"): _*)
     intra.unionByName(cross)
   }
 

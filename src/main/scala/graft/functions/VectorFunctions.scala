@@ -101,23 +101,25 @@ object RollingHash {
   * ::BIGINT` — the engine's cross-engine base hash (Graft.md5Hash60) as ONE
   * native expression. The composed form pays three allocations per value
   * even under codegen (digest → 32-char hex UTF8String → substring slice →
-  * conv's radix parse); this computes the digest and takes bits 127..68
-  * directly ((first-8-bytes big-endian) >>> 4 = the first 15 hex nibbles).
-  * Bit-identical to the composed form and to the DuckDB
-  * ('0x' || substring(md5(s), 1, 15))::BIGINT twin — every md5-oracled
-  * operator keeps its hash matches (pinned by Round11Spec + the full gate). */
-case class Md5Hash60Expr(child: Expression) extends UnaryExpression {
+  * conv's radix parse); this computes the digest and takes its 60 bits
+  * directly. `half` 1 is `md5h60b` (Graft.md5Hash60b, the hi-half base hash
+  * of the 120-bit SimHash): hex chars 16-30 of the same digest.
+  * Bit-identical to the composed forms and to the DuckDB
+  * ('0x' || substring(md5(s), 1 + 15·half, 15))::BIGINT twins — every
+  * md5-oracled operator keeps its hash matches (pinned by Round11Spec + the
+  * full gate). */
+case class Md5Hash60Expr(child: Expression, half: Int = 0) extends UnaryExpression {
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     if (child.dataType == StringType)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"md5h60 requires a STRING input, got ${child.dataType.catalogString}")
+      s"$prettyName requires a STRING input, got ${child.dataType.catalogString}")
   override def dataType: DataType = LongType
-  override def prettyName: String = "md5h60"
+  override def prettyName: String = if (half == 0) "md5h60" else "md5h60b"
   override def nullSafeEval(v: Any): Any =
-    Md5Hash60Expr.hash(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    Md5Hash60Expr.hash(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], half)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Md5Hash60Expr.hash($c)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.Md5Hash60Expr.hash($c, $half)")
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -127,45 +129,17 @@ object Md5Hash60Expr {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
-  // called from generated code
-  def hash(s: org.apache.spark.unsafe.types.UTF8String): Long = {
+  // called from generated code. With the digest's bytes 0-7 and 8-15 read
+  // big-endian as `hi` and `lo`: half 0 is hex chars 1-15 (bits 127..68,
+  // hi >>> 4), half 1 is hex chars 16-30 (bits 67..8: the low nibble of
+  // byte 7, then bytes 8..14)
+  def hash(s: org.apache.spark.unsafe.types.UTF8String, half: Int): Long = {
     val md = digests.get()
     md.reset()
-    val d = md.digest(s.getBytes)
-    var b = 0L
-    var j = 0
-    while (j < 8) { b = (b << 8) | (d(j) & 0xffL); j += 1 }
-    b >>> 4
+    val d = java.nio.ByteBuffer.wrap(md.digest(s.getBytes))
+    val hi = d.getLong(0)
+    if (half == 0) hi >>> 4 else ((hi & 0x0fL) << 56) | (d.getLong(8) >>> 8)
   }
-  // hex chars 16-30 of the same digest (Graft.md5Hash60b): the low nibble
-  // of byte 7 followed by bytes 8..14 — 15 nibbles = 60 bits
-  def hashB(s: org.apache.spark.unsafe.types.UTF8String): Long = {
-    val md = digests.get()
-    md.reset()
-    val d = md.digest(s.getBytes)
-    var b = (d(7) & 0x0fL) << 56
-    var j = 8
-    while (j < 15) { b |= (d(j) & 0xffL) << (8 * (14 - j)); j += 1 }
-    b
-  }
-}
-
-/** Scalar twin for the hi half of the 120-bit SimHash (Graft.md5Hash60b):
-  * hex chars 16-30 of the digest as a 60-bit long. */
-case class Md5Hash60bExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"md5h60b requires a STRING input, got ${child.dataType.catalogString}")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "md5h60b"
-  override def nullSafeEval(v: Any): Any =
-    Md5Hash60Expr.hashB(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Md5Hash60Expr.hashB($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Per-element md5-60 over a string array: `md5h60_array(arr)` ≡
@@ -238,21 +212,9 @@ case class Md5Hash60Array(child: Expression) extends UnaryExpression
 }
 
 object Md5Hash60Array {
-  private val digests = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
   // called from generated code
   def hashAll(arr: ArrayData): ArrayData =
-    StringArrayHashExpr.mapHash(arr, { s =>
-      val md = digests.get()
-      md.reset()
-      val d = md.digest(s.getBytes)
-      var b = 0L
-      var j = 0
-      while (j < 8) { b = (b << 8) | (d(j) & 0xffL); j += 1 }
-      b >>> 4
-    })
+    StringArrayHashExpr.mapHash(arr, Md5Hash60Expr.hash(_, 0))
 }
 
 /** Positional n-gram fingerprints over a token-hash array:
@@ -742,8 +704,8 @@ object VectorFunctions {
       (exprs: Seq[Expression]) => RollingHash(exprs.head)),
     ("md5h60", classOf[Md5Hash60Expr],
       (exprs: Seq[Expression]) => Md5Hash60Expr(exprs.head)),
-    ("md5h60b", classOf[Md5Hash60bExpr],
-      (exprs: Seq[Expression]) => Md5Hash60bExpr(exprs.head)),
+    ("md5h60b", classOf[Md5Hash60Expr],
+      (exprs: Seq[Expression]) => Md5Hash60Expr(exprs.head, 1)),
     ("md5h60_array", classOf[Md5Hash60Array],
       (exprs: Seq[Expression]) => Md5Hash60Array(exprs.head)),
     ("ngram_fps", classOf[NgramFps],
@@ -777,12 +739,18 @@ object VectorFunctions {
         .BloomFilterMightContain(exprs(0), exprs(1))))
 
   /** Idempotently registers the native functions in the session's function
-    * registry so queries can use them via `expr(...)` / SQL. */
-  def register(spark: SparkSession): Unit =
+    * registry so queries can use them via `expr(...)` / SQL. A name already
+    * bound to its builder here is left alone (a replacement logs a WARN, and
+    * the operators call this on every build); a foreign function under one
+    * of these names is replaced. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "scala_udf")
+      if (!registry.lookupFunctionBuilder(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(name)).exists(_ eq builder))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
+  }
 }
 
 /** SparkSessionExtensions entry point: lets a deployment load the engine's

@@ -166,7 +166,8 @@ object Multimodal {
     * that read sample column 0 of row 0, so the join provably catches
     * near (not just identical) images. img_id = 2·doc_id (+1 for twins).
     *
-    * Near-dup join: Graft.simhashCandidates' pigeonhole blocks (4 blocks
+    * Near-dup join: Graft.simhashCandidates, the one-long call of the
+    * SimHash core Graft.simhashPairs: pigeonhole blocks (4 blocks
     * of 12 bits at maxHamming 3 — recall at the cutoff GUARANTEED; the
     * planted twins sit at ≤ 2, and 12-bit blocks keep bucket occupancy
     * ~N/4096 where a Hamming-6 cutoff's ~7-bit blocks went quadratic at

@@ -131,6 +131,27 @@ class ExtensionSpec extends SparkSpec {
       s"extension path drifted: missing ${names -- injected}, extra ${injected -- names}")
   }
 
+  test("a second register() replaces nothing; a foreign function under a graft name is replaced") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    val s = spark.newSession()
+    val registry = s.sessionState.functionRegistry
+    val names = functions.VectorFunctions.builders.map(_._1)
+    functions.VectorFunctions.register(s)
+    // each replacement stores a new ExpressionInfo: the same object means untouched
+    val infos = names.map(n => registry.lookupFunction(FunctionIdentifier(n)).get)
+    functions.VectorFunctions.register(s)
+    names.zip(infos).foreach { case (n, info) =>
+      assert(registry.lookupFunction(FunctionIdentifier(n)).get eq info,
+        s"the second register() replaced $n")
+    }
+    registry.createOrReplaceTempFunction("vec_dot",
+      (_: Seq[Expression]) => Literal(0.0), "scala_udf")
+    functions.VectorFunctions.register(s)
+    assert(s.sql("SELECT vec_dot(CAST(array(1, 2) AS ARRAY<FLOAT>), " +
+      "CAST(array(3, 4) AS ARRAY<FLOAT>))").head().getDouble(0) == 11.0)
+  }
+
   test("rolling_hash matches a by-hand polynomial fold") {
     functions.VectorFunctions.register(spark)
     def ref(s: String): Long = {

@@ -26,7 +26,6 @@ class VerifySpec extends SparkSpec {
     assert(!Files.exists(Paths.get(out)))
   }
 
-  // Last in the suite: Verify.main stops the session it ran on.
   test("a failed row is returned by dump and makes main throw, naming it") {
     val empty = Scoped.dir(spark, "graft_verify_spec", "empty_sf")
     Files.createDirectories(Paths.get(empty))
@@ -37,5 +36,7 @@ class VerifySpec extends SparkSpec {
       Verify.main(Array(empty, out, "word_count"))
     }
     assert(e.getMessage.contains("word_count"))
+    // main ran on the suite's session, so it must leave it running
+    assert(!spark.sparkContext.isStopped)
   }
 }
