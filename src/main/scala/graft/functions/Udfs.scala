@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoder
@@ -9,10 +9,10 @@ import graft.Tables
 
 /** UDF/UDAF registration surface (declared D7 — the Table API's
   * UDF/UDAF/UDTF registration, study/pom.xml:147-166):
-  *  - a scalar UDF via `spark.udf.register` (note: scalar Scala UDFs are
-  *    opaque to codegen — prefer native expressions like VecDot in hot paths;
-  *    this exists to cover the registration API);
-  *  - a typed `Aggregator[IN, BUF, OUT]` registered through `functions.udaf`
+  *  - a scalar UDF, bound as `spark.udf.register` binds it (note: scalar
+  *    Scala UDFs are opaque to codegen — prefer native expressions like
+  *    VecDot in hot paths; this exists to cover the registration API);
+  *  - a typed `Aggregator[IN, BUF, OUT]` made a UDAF by `functions.udaf`
   *    (geometric mean), which runs as a proper partial/final aggregate.
   */
 case class GeoMeanBuf(var logSum: Double, var n: Long)
@@ -32,15 +32,14 @@ object GeoMean extends Aggregator[Double, GeoMeanBuf, Double] {
 }
 
 object Udfs {
-  private def register(s: SparkSession): Unit = {
-    s.udf.register("geomean", udaf(GeoMean))
-    s.udf.register("clip", (x: Double, lo: Double, hi: Double) =>
-      math.min(math.max(x, lo), hi))
-  }
+  // Built once, so a later call sees its own binding (VectorFunctions.bind).
+  private val geomean = GraftShims.udfBuilder("geomean", udaf(GeoMean))
+  private val clip = GraftShims.udfBuilder("clip",
+    udf((x: Double, lo: Double, hi: Double) => math.min(math.max(x, lo), hi)))
 
   /** Typed-Aggregator UDAF: geometric mean of order value per status. */
   def udafGeomean(s: SparkSession, d: String): DataFrame = {
-    register(s)
+    VectorFunctions.bind(s, "geomean", geomean)
     Tables.orders(s, d).createOrReplaceTempView("graft_orders_udaf")
     s.sql(
       """SELECT o_orderstatus, count(1) AS n,
@@ -51,7 +50,7 @@ object Udfs {
 
   /** Scalar registered UDF: clip event values into [50, 150]. */
   def udfClip(s: SparkSession, d: String): DataFrame = {
-    register(s)
+    VectorFunctions.bind(s, "clip", clip)
     Tables.events(s, d).createOrReplaceTempView("graft_events_udf")
     s.sql(
       """SELECT event_type, count(1) AS n,

@@ -743,13 +743,17 @@ object VectorFunctions {
     * bound to its builder here is left alone (a replacement logs a WARN, and
     * the operators call this on every build); a foreign function under one
     * of these names is replaced. */
-  def register(spark: SparkSession): Unit = {
+  def register(spark: SparkSession): Unit =
+    builders.foreach { case (name, _, builder) => bind(spark, name, builder) }
+
+  /** Binds `name` to `builder` in the session's function registry unless it
+    * is already bound to that very builder. */
+  private[functions] def bind(spark: SparkSession, name: String,
+      builder: Seq[Expression] => Expression): Unit = {
     val registry = spark.sessionState.functionRegistry
-    builders.foreach { case (name, _, builder) =>
-      if (!registry.lookupFunctionBuilder(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name)).exists(_ eq builder))
-        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
+    if (!registry.lookupFunctionBuilder(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(name)).exists(_ eq builder))
+      registry.createOrReplaceTempFunction(name, builder, "scala_udf")
   }
 }
 

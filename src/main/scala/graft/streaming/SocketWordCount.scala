@@ -12,6 +12,10 @@ package graft.streaming
   * per-record emission; state agrees at every batch boundary); print() →
   * console sink; execute() → `start().awaitTermination()`.
   *
+  * Each micro-batch writes its offset log, commit log and state deltas
+  * through `graft.NioLocalFs` (the program's `core-site.xml`), so it forks
+  * no `chmod` or `readlink` process per file.
+  *
   * Run: `sbt "runMain graft.streaming.SocketWordCount <host> <port>"`
   * (e.g. against `nc -lk 9999`); under spark-submit its `--master` is kept.
   */

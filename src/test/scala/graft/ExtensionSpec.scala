@@ -152,6 +152,28 @@ class ExtensionSpec extends SparkSpec {
       "CAST(array(3, 4) AS ARRAY<FLOAT>))").head().getDouble(0) == 11.0)
   }
 
+  test("Udfs bind each function where it is used, once; a foreign binding is replaced") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    val s = spark.newSession()
+    val registry = s.sessionState.functionRegistry
+    def info(name: String) = registry.lookupFunction(FunctionIdentifier(name))
+    functions.Udfs.udafGeomean(s, sf)
+    assert(info("clip").isEmpty, "udafGeomean bound clip")
+    val geomean = info("geomean").get
+    functions.Udfs.udafGeomean(s, sf)
+    functions.Udfs.udfClip(s, sf)
+    assert(info("geomean").get eq geomean, "geomean was bound again")
+    val clip = info("clip").get
+    functions.Udfs.udfClip(s, sf)
+    assert(info("clip").get eq clip, "clip was bound again")
+    registry.createOrReplaceTempFunction("clip", (_: Seq[Expression]) => Literal(0.0), "scala_udf")
+    assert(functions.Udfs.udfClip(s, sf).collect().toSeq ==
+      functions.Udfs.udfClip(spark, sf).collect().toSeq)
+    assert(functions.Udfs.udafGeomean(s, sf).collect().toSeq ==
+      functions.Udfs.udafGeomean(spark, sf).collect().toSeq)
+  }
+
   test("rolling_hash matches a by-hand polynomial fold") {
     functions.VectorFunctions.register(spark)
     def ref(s: String): Long = {
