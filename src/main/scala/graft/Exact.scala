@@ -34,6 +34,31 @@ import org.apache.spark.sql.functions._
   * as the independent reference the gate compares against. The fragments
   * parenthesize their operands and nothing else, so a call site parses to
   * the same Catalyst tree as the inline text it replaced.
+  *
+  * The 2⁻²⁰ grid (`Grid`, `onGrid`, `gridMean4`). A double that feeds a
+  * sum, a mean or a threshold becomes the integer floor(x·2²⁰) first;
+  * integers add exactly in any order, and one closing divide by 2²⁰ brings
+  * the result back. Scaling by 2²⁰ is an exponent shift, never a rounding,
+  * so the floor and the one correctly rounded divide are the only
+  * roundings: the result does not depend on partial-aggregation order (so
+  * not on partitioning or batching), and DuckDB reproduces it bit for bit,
+  * which is what lets the oracle mirror the whole `kmeans` loop. The scale
+  * has one name, but each site keeps its rounding form (`floor` then a
+  * cast, or a truncating `CAST(… AS BIGINT)`) and its literal type, since
+  * the type decides the arithmetic: `GridD` is the DSL double, `Grid` the
+  * BIGINT, `GridDec` the SQL DECIMAL literal (an integral value divided by
+  * it is a decimal division) and `GridDbl` the SQL DOUBLE literal (see
+  * `Graft.pmiBigrams`). `onGrid` floors x·2²⁰, casts to DOUBLE and divides
+  * by 2²⁰; `gridMean4` sums floor(x·2²⁰) as BIGINT, divides by the count
+  * and by 2²⁰, and rounds to 4 decimals. The vector form is
+  * `graft.functions.FixedPointVecSum` and its `centroids` builder.
+  *
+  * Score bins (`scoreBin`): a score q ∈ [0, 1] lands in cell
+  * min(floor(q·bins), bins − 1), a BIGINT, with q = 1 in the last cell.
+  *
+  * As with the ratio rule, the oracle SQL keeps its own copies, and each
+  * helper gives the same Catalyst tree, literal types included, as the
+  * inline text it replaced.
   */
 private[graft] object Exact {
 
@@ -58,4 +83,27 @@ private[graft] object Exact {
   /** SQL for p/q rounded HALF_UP to 4 decimals, as DOUBLE (p ≥ 0, q > 0). */
   def ratio4(p: String, q: String): String =
     s"CAST(${halfUp(p, q, 10000L)} AS DOUBLE) / 10000.0"
+
+  /** 2²⁰: units per 1.0 on the fixed-point grid, as a BIGINT. */
+  final val Grid = 1048576L
+  /** [[Grid]] as a double (the DSL literal `1048576.0`). */
+  final val GridD = 1048576.0
+  /** [[Grid]] as a SQL DECIMAL literal. */
+  final val GridDec = "1048576.0"
+  /** [[Grid]] as a SQL DOUBLE literal. */
+  final val GridDbl = "1048576.0D"
+
+  /** x floored onto the 2⁻²⁰ grid, as DOUBLE: floor(x·2²⁰) / 2²⁰. */
+  def onGrid(x: Column): Column =
+    floor(x * lit(GridD)).cast("double") / lit(GridD)
+
+  /** The group mean of x on the 2⁻²⁰ grid, rounded to 4 decimals: an exact
+    * integer sum of floor(x·2²⁰), divided by the count, then by 2²⁰. */
+  def gridMean4(x: Column): Column =
+    round(sum(floor(x * GridD)).cast("double")
+      / count(lit(1)).cast("double") / GridD, 4)
+
+  /** The cell of score q ∈ [0, 1] on a `bins`-cell grid, as BIGINT. */
+  def scoreBin(q: Column, bins: Int): Column =
+    least(floor(q * bins).cast("long"), lit(bins - 1L))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Exact
-import graft.functions.{MinhashSigs, VectorFunctions}
+import graft.functions.{FixedPointVecSum, MinhashSigs, VectorFunctions}
 
 /** The engine's user-facing API: every operator generalized over
   * caller-supplied DataFrames and column names (the registry queries in
@@ -130,7 +130,7 @@ object Graft {
       .join(dl, idCol)
       .crossJoin(broadcast(stats))
       .withColumn("__c", expr(
-        s"""(floor(ln((CAST(__n AS DOUBLE) - __df + 0.5) / (__df + 0.5) + 1.0) * 1048576.0) / 1048576.0)
+        s"""(floor(ln((CAST(__n AS DOUBLE) - __df + 0.5) / (__df + 0.5) + 1.0) * ${Exact.GridDec}) / ${Exact.GridDec})
            |  * (__tf * (${dlit(k1)} + 1.0))
            |  / (__tf + (${dlit(k1)} * ((1.0 - ${dlit(b)}) + ((${dlit(b)} * __dl) / (CAST(__tot AS DOUBLE) / CAST(__n AS DOUBLE))))))""".stripMargin))
     contrib
@@ -385,12 +385,12 @@ object Graft {
       .crossJoin(broadcast(vocab))
       .withColumn("__nllq", expr(
         s"""CAST(-floor(ln((CAST(__cbg AS DOUBLE) + $addK.0)
-           |  / (CAST(__cctx AS DOUBLE) + $addK.0 * CAST(__v AS DOUBLE))) * 1048576.0) AS BIGINT)"""
+           |  / (CAST(__cctx AS DOUBLE) + $addK.0 * CAST(__v AS DOUBLE))) * ${Exact.GridDec}) AS BIGINT)"""
           .stripMargin))
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_bigrams"), sum("__nllq").as("__sumq"))
       .select(col(idCol), col("n_bigrams"),
-        round((col("__sumq").cast("double") / 1048576.0) / col("n_bigrams"), 4)
+        round((col("__sumq").cast("double") / Exact.GridD) / col("n_bigrams"), 4)
           .as("nll"))
   }
 
@@ -452,9 +452,9 @@ object Graft {
     counts.crossJoin(broadcast(totals))
       .select(col("__b"),
         (floor(log((col("__ct") + 1).cast("double")
-            / (col("__tt") + buckets).cast("double")) * 1048576.0).cast("long")
+            / (col("__tt") + buckets).cast("double")) * Exact.GridD).cast("long")
           - floor(log((col("__cs") + 1).cast("double")
-            / (col("__ts") + buckets).cast("double")) * 1048576.0).cast("long"))
+            / (col("__ts") + buckets).cast("double")) * Exact.GridD).cast("long"))
           .as("__lrq"))
   }
 
@@ -473,7 +473,7 @@ object Graft {
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_tokens"), sum("__lrq").as("llr_q"))
       .select(col(idCol), col("n_tokens"), col("llr_q"),
-        round(col("llr_q").cast("double") / 1048576.0, 4).as("llr"))
+        round(col("llr_q").cast("double") / Exact.GridD, 4).as("llr"))
 
   /** Per-stratum distribution report — KL(P_s ‖ P_corpus) and Shannon
     * entropy H(P_s) of each stratum's unigram distribution vs the whole
@@ -503,9 +503,9 @@ object Graft {
     val ctot = cw.agg(sum("__cw").as("__ct"))
     cgw.join(cg, "__g").join(broadcast(cw), "__tok").crossJoin(broadcast(ctot))
       .withColumn("__ls", floor(log(col("__c").cast("double")
-        / col("__cg").cast("double")) * 1048576.0).cast("long"))
+        / col("__cg").cast("double")) * Exact.GridD).cast("long"))
       .withColumn("__lc", floor(log(col("__cw").cast("double")
-        / col("__ct").cast("double")) * 1048576.0).cast("long"))
+        / col("__ct").cast("double")) * Exact.GridD).cast("long"))
       .groupBy(col("__g"))
       .agg(sum("__c").as("n_tokens"),
         count(lit(1)).as("n_types"),
@@ -513,9 +513,9 @@ object Graft {
         sum(-col("__c") * col("__ls")).as("__hu"))
       .select(col("__g").as(strataCol), col("n_tokens"), col("n_types"),
         round(col("__klu").cast("double") / col("n_tokens").cast("double")
-          / 1048576.0, 6).as("kl_vs_corpus"),
+          / Exact.GridD, 6).as("kl_vs_corpus"),
         round(col("__hu").cast("double") / col("n_tokens").cast("double")
-          / 1048576.0, 6).as("entropy"))
+          / Exact.GridD, 6).as("entropy"))
   }
 
   /** Heuristic document quality in [0, 1]: length (50%), non-punctuation
@@ -610,11 +610,11 @@ object Graft {
       .join(uni.select(col("__t").as("b"), col("__c").as("__cb")), "b")
       .crossJoin(broadcast(total))
       .withColumn("pmi", expr(
-        // 1048576.0D: the plain decimal literal would type the division
+        // GridDbl, the DOUBLE literal: GridDec would type the division
         // DECIMAL, not DOUBLE (SQL literal typing, unlike the Scala DSL)
-        """CAST(floor(ln(CAST(n_pair AS DOUBLE) * CAST(__n AS DOUBLE)
-          |  / (CAST(__ca AS DOUBLE) * CAST(__cb AS DOUBLE))) * 1048576.0D) AS DOUBLE)
-          |  / 1048576.0D""".stripMargin))
+        s"""CAST(floor(ln(CAST(n_pair AS DOUBLE) * CAST(__n AS DOUBLE)
+          |  / (CAST(__ca AS DOUBLE) * CAST(__cb AS DOUBLE))) * ${Exact.GridDbl}) AS DOUBLE)
+          |  / ${Exact.GridDbl}""".stripMargin))
       .orderBy(col("pmi").desc, col("a").asc, col("b").asc)
       .limit(topK)
       .select(col("a"), col("b"), col("n_pair"), col("pmi"))
@@ -660,12 +660,12 @@ object Graft {
       ranks = dirW.join(ranks, col("src") === col("node"))
         .select(col("dst"),
           floor(col("w").cast("double") / col("wdeg").cast("double")
-            * col("r") * 1048576.0).cast("long").as("__c"))
+            * col("r") * Exact.GridD).cast("long").as("__c"))
         .groupBy(col("dst"))
         .agg(sum("__c").as("__s"))
         .select(col("dst").as("node"),
           (lit(1.0) - lit(damping)
-            + lit(damping) * (col("__s").cast("double") / lit(1048576.0))).as("r"))
+            + lit(damping) * (col("__s").cast("double") / lit(Exact.GridD))).as("r"))
         .localCheckpoint(true)
     }
     ranks.select(col("node").as("word"), round(col("r"), 6).as("score"))
@@ -2147,24 +2147,12 @@ object Graft {
         s"unknown init mode '$other' (first-k | farthest-first)")
     })
       .localCheckpoint(true)
-    // Lloyd means in ONE aggregation (round 17, guide §2.3/§4): the
-    // fixed-point vector sum accumulates Σ floor(v·2²⁰) per dimension in a
-    // compiled loop with map-side combine — where the previous shape
-    // posexploded every vector into `dim` rows through a groupBy(c_id, i)
-    // mean plus a second collect_list shuffle. Long sums are exact and the
-    // division sequence below ((sums/n)/2²⁰, then FLOAT cast) is the
-    // identical IEEE op order, so centroids are bit-identical — the
-    // unrolled-CTE oracles (knn_ivf and friends) freeze exactly this.
-    val vsum = udaf(new graft.functions.FixedPointVecSum,
-      org.apache.spark.sql.Encoders.product[graft.functions.VecSample])
+    // Lloyd means in ONE aggregation per iteration (FixedPointVecSum):
+    // bit-identical to the exploded per-dimension fixed-point mean that the
+    // unrolled-CTE oracles (knn_ivf and friends) freeze.
     for (_ <- 1 to iters) {
-      val means = nearest(centroids, trainVecs)
-        .groupBy("c_id")
-        .agg(vsum(col(vecCol)).as("__fs"))
-        .select(col("c_id"), expr(
-          """transform(__fs.sums, s -> CAST(CAST(s AS DOUBLE)
-            |  / CAST(__fs.n AS DOUBLE) / CAST(1048576 AS DOUBLE) AS FLOAT))"""
-            .stripMargin).as("centroid"))
+      val means = FixedPointVecSum.centroids(nearest(centroids, trainVecs),
+        Seq("c_id"), vecCol)
       // a centroid that attracted no vectors this round vanishes from the
       // groupBy output — without this left join the model would silently run
       // with k-1 lists from then on. Empty clusters KEEP their previous
@@ -2326,8 +2314,8 @@ object Graft {
       .select(col("__id"), (col("__i0") + 1).as("__i"),
         col("__x").cast("double").as("__x"))
     val mean = elems.groupBy("__i")
-      .agg((sum(floor(col("__x") * 1048576.0)).cast("double")
-        / lit(n.toDouble) / 1048576.0).as("__m"))
+      .agg((sum(floor(col("__x") * Exact.GridD)).cast("double")
+        / lit(n.toDouble) / Exact.GridD).as("__m"))
     val centered = elems.join(broadcast(mean), "__i")
       .select(col("__id"), col("__i"), (col("__x") - col("__m")).as("__d"))
     val left = centered.select(col("__id"), col("__i"), col("__d").as("__di"))
@@ -2335,8 +2323,8 @@ object Graft {
       col("__i").as("__j"), col("__d").as("__dj"))
     val cov = left.join(right, col("__id") === col("__id2"))
       .groupBy("__i", "__j")
-      .agg((sum(floor(col("__di") * col("__dj") * 1048576.0)).cast("double")
-        / lit(n.toDouble) / 1048576.0).as("__c"))
+      .agg((sum(floor(col("__di") * col("__dj") * Exact.GridD)).cast("double")
+        / lit(n.toDouble) / Exact.GridD).as("__c"))
       .localCheckpoint(true)
     var state = spark.range(1, dim + 1)
       .select(col("id").as("__j"), lit(0.125).as("__v"),
@@ -2344,11 +2332,11 @@ object Graft {
     for (_ <- 1 to iters) {
       val w = cov.join(broadcast(state.select(col("__j"), col("__v"))), "__j")
         .groupBy(col("__i"))
-        .agg((sum(floor(col("__c") * col("__v") * 1048576.0)).cast("double")
-          / 1048576.0).as("__w"))
+        .agg((sum(floor(col("__c") * col("__v") * Exact.GridD)).cast("double")
+          / Exact.GridD).as("__w"))
       val norm = w.agg(
-        sqrt(sum(floor(col("__w") * col("__w") * 1048576.0)).cast("double")
-          / 1048576.0).as("__norm"))
+        sqrt(sum(floor(col("__w") * col("__w") * Exact.GridD)).cast("double")
+          / Exact.GridD).as("__norm"))
       state = w.crossJoin(broadcast(norm))
         .select(col("__i").as("__j"), (col("__w") / col("__norm")).as("__v"),
           col("__norm"))
@@ -2436,19 +2424,10 @@ object Graft {
       .filter(col("__rn") <= k)
       .select(col(groupCol), col(idCol).as("c_id"), col(vecCol).as("centroid"))
       .localCheckpoint(true)
-    // Same one-aggregation Lloyd means as `kmeans` (round 17): fixed-point
-    // vector sum with the group key riding the aggregate — bit-identical
-    // centroids, one shuffle per iteration instead of an explode plus two.
-    val vsum = udaf(new graft.functions.FixedPointVecSum,
-      org.apache.spark.sql.Encoders.product[graft.functions.VecSample])
+    // the `kmeans` Lloyd means, with the group key riding the aggregate
     for (_ <- 1 to iters) {
-      val means = nearest(centroids, trainVecs)
-        .groupBy(col(groupCol), col("c_id"))
-        .agg(vsum(col(vecCol)).as("__fs"))
-        .select(col(groupCol), col("c_id"), expr(
-          """transform(__fs.sums, s -> CAST(CAST(s AS DOUBLE)
-            |  / CAST(__fs.n AS DOUBLE) / CAST(1048576 AS DOUBLE) AS FLOAT))"""
-            .stripMargin).as("centroid"))
+      val means = FixedPointVecSum.centroids(nearest(centroids, trainVecs),
+        Seq(groupCol, "c_id"), vecCol)
       centroids = centroids
         .select(col(groupCol), col("c_id"), col("centroid").as("__prev"))
         .join(means, Seq(groupCol, "c_id"), "left")
@@ -3001,7 +2980,7 @@ object Graft {
         .as(Seq("__pi", "__p")))
       .select(col(idCol), col("__pi"), baseHash(col("__p")).as("fp"))
     val occ = pars.withColumn("__k",
-      col(idCol) * lit(1048576L) + col("__pi"))
+      col(idCol) * lit(1L << 20) + col("__pi"))
       // two-consumer barrier: the fp stats and the join back both read occ
       .localCheckpoint(true)
     val stats = occ.groupBy("fp")
@@ -3719,7 +3698,7 @@ object Graft {
         lit(6000000L)), lit(0L)))
       // integer shift, not `/`: the 60-bit hash exceeds double's exact range
       .withColumn("__u", shiftright(md5Hash60(col(idCol).cast("string")), 40))
-      .filter(col("__u") * 6000000L < col("__p") * 1048576L)
+      .filter(col("__u") * 6000000L < col("__p") * Exact.Grid)
       .select(col(idCol), col("n_tokens"), col("score"),
         (col("__p").cast("double") / 6000000.0).as("keep_prob"))
 
@@ -3963,18 +3942,8 @@ object Graft {
   def centroidClassify(vecs: DataFrame, idCol: String, vecCol: String,
       labelCol: String): DataFrame = {
     VectorFunctions.register(vecs.sparkSession)
-    // one-aggregation fixed-point centroid (round 17): same rewrite as the
-    // kmeans Lloyd means — bit-identical values, no explode, one shuffle
-    val vsum = udaf(new graft.functions.FixedPointVecSum,
-      org.apache.spark.sql.Encoders.product[graft.functions.VecSample])
-    val cent = vecs
-      .select(col(labelCol).as("c_id"), col(vecCol))
-      .groupBy("c_id")
-      .agg(vsum(col(vecCol)).as("__fs"))
-      .select(col("c_id"), expr(
-        """transform(__fs.sums, s -> CAST(CAST(s AS DOUBLE)
-          |  / CAST(__fs.n AS DOUBLE) / CAST(1048576 AS DOUBLE) AS FLOAT))"""
-          .stripMargin).as("centroid"))
+    val cent = FixedPointVecSum.centroids(
+      vecs.select(col(labelCol).as("c_id"), col(vecCol)), Seq("c_id"), vecCol)
     val dist =
       s"""vec_dot(`$vecCol`, `$vecCol`) - 2 * vec_dot(`$vecCol`, centroid)
          | + vec_dot(centroid, centroid)""".stripMargin
@@ -4137,8 +4106,7 @@ object Graft {
         sum("__w").as("n_words"),
         sum("__s").as("n_sentences"),
         sum("__v").as("n_vowel_groups"),
-        round(sum(floor(col("__f") * 1048576.0)).cast("double")
-          / count(lit(1)).cast("double") / 1048576.0, 4).as("mean_flesch"))
+        Exact.gridMean4(col("__f")).as("mean_flesch"))
   }
 
   /** ROBUST length outliers per group — median/MAD instead of mean/σ (the
@@ -4225,8 +4193,7 @@ object Graft {
         textCol, minWords = minWords)
       .select(col(idCol), col("passes"))
     val perBin = scored.join(gold, Seq(idCol))
-      .withColumn("bin",
-        least(floor(col("__q") * bins).cast("long"), lit(bins - 1L)))
+      .withColumn("bin", Exact.scoreBin(col("__q"), bins))
       .groupBy("bin")
       .agg(count(lit(1)).as("n_docs"),
         sum(floor(col("__q") * 10000.0).cast("long")).as("__qs"),
@@ -4332,16 +4299,8 @@ object Graft {
   def seedSelect(vecs: DataFrame, idCol: String, vecCol: String,
       seedPred: Column, topK: Int = 100): DataFrame = {
     graft.functions.VectorFunctions.register(vecs.sparkSession)
-    // one-aggregation fixed-point centroid (round 17, the kmeans rewrite):
-    // bit-identical seed centroid, no explode, one global aggregate
-    val vsum = udaf(new graft.functions.FixedPointVecSum,
-      org.apache.spark.sql.Encoders.product[graft.functions.VecSample])
-    val cent = vecs.filter(seedPred)
-      .agg(vsum(col(vecCol)).as("__fs"))
-      .select(expr(
-        """transform(__fs.sums, s -> CAST(CAST(s AS DOUBLE)
-          |  / CAST(__fs.n AS DOUBLE) / CAST(1048576 AS DOUBLE) AS FLOAT))"""
-          .stripMargin).as("__cent"))
+    val cent = FixedPointVecSum.centroids(vecs.filter(seedPred), Nil, vecCol,
+      "__cent")
     val scored = vecs.crossJoin(broadcast(cent))
       .withColumn("__cos", expr(
         s"""vec_dot(`$vecCol`, __cent)
@@ -4436,8 +4395,7 @@ object Graft {
       .withColumn("__nt", expr(
         s"CAST(size(filter(split(`$textCol`, ' ', -1), " +
           "x -> length(x) > 0)) AS BIGINT)"))
-      .withColumn("q_bin",
-        least(floor(col("__q") * bins).cast("long"), lit(bins - 1L)))
+      .withColumn("q_bin", Exact.scoreBin(col("__q"), bins))
       .withColumn("len_bucket",
         expr(s"(__nt DIV ${bucketTokens}L) * ${bucketTokens}L"))
       .groupBy("q_bin", "len_bucket")
@@ -4708,7 +4666,7 @@ object Graft {
       // entropy term: floor(2^20 · p·ln p) per source, integer-summed
       // (p·ln p → 0 as p → 0: an all-empty source contributes nothing)
       .withColumn("__ei", expr(
-        """CASE WHEN __t = 0 THEN 0L ELSE CAST(floor(1048576.0D
+        s"""CASE WHEN __t = 0 THEN 0L ELSE CAST(floor(${Exact.GridDbl}
           |  * (CAST(__t AS DOUBLE) / CAST(__tot AS DOUBLE))
           |  * ln(CAST(__t AS DOUBLE) / CAST(__tot AS DOUBLE)))
           |  AS BIGINT) END""".stripMargin))
@@ -4724,7 +4682,7 @@ object Graft {
           .as("hhi6"),
         expr("round(CAST(n_tokens AS DOUBLE) * CAST(n_tokens AS DOUBLE) / CAST(__s2 AS DOUBLE), 6)")
           .as("effective6"),
-        expr("round(-CAST(__e AS DOUBLE) / 1048576.0D, 6)").as("entropy6"),
+        expr(s"round(-CAST(__e AS DOUBLE) / ${Exact.GridDbl}, 6)").as("entropy6"),
         expr("""round(CAST(2L * __rs - (n_sources + 1L) * n_tokens AS DOUBLE)
                |  / CAST(n_sources * n_tokens AS DOUBLE), 6)""".stripMargin)
           .as("gini6"))
@@ -4897,13 +4855,8 @@ object Graft {
     * (gen, bin) counts → grid cumsums. */
   def ksDrift(gen0: DataFrame, gen1: DataFrame, textCol: String,
       bins: Int = 4096): DataFrame = {
-    def binned(df: DataFrame, tag: Int): DataFrame =
-      qualityScore(df.filter(length(col(textCol)) > 0)
-          .select(col(textCol)), textCol, out = "__q")
-        .select(least(floor(col("__q") * bins).cast("long"),
-          lit(bins - 1L)).as("bin"))
-        .groupBy("bin").agg(count(lit(1)).as(s"__c$tag"))
-    val joined = binned(gen0, 0).join(binned(gen1, 1), Seq("bin"), "full")
+    val joined = psiBinned(gen0, textCol, bins, "__c0")
+      .join(psiBinned(gen1, textCol, bins, "__c1"), Seq("bin"), "full")
       .select(col("bin"),
         coalesce(col("__c0"), lit(0L)).as("__c0"),
         coalesce(col("__c1"), lit(0L)).as("__c1"))
@@ -4948,7 +4901,7 @@ object Graft {
         .as("token"))
       .groupBy("token").agg(count(lit(1)).as("c"))
       .withColumn("__wq", expr(
-        """CAST(floor(1048576.0D * sqrt(sqrt(
+        s"""CAST(floor(${Exact.GridDbl} * sqrt(sqrt(
           |  CAST(c AS DOUBLE) * CAST(c AS DOUBLE) * CAST(c AS DOUBLE))))
           |  AS BIGINT)""".stripMargin))
     val total = vocab.agg(sum("__wq").as("__tm"),
@@ -5055,8 +5008,7 @@ object Graft {
         textCol, minWords = minWords)
       .select(col(idCol), col("passes"))
     val g = scored.join(gold, Seq(idCol))
-      .withColumn("bin",
-        least(floor(col("__q") * bins).cast("long"), lit(bins - 1L)))
+      .withColumn("bin", Exact.scoreBin(col("__q"), bins))
       .groupBy("bin")
       .agg(count(lit(1)).as("n"),
         expr("CAST(count_if(passes) AS BIGINT)").as("p"))
@@ -5098,12 +5050,7 @@ object Graft {
   /** The binned-score half of [[conformalGate]]: (bin, count) on the
     * fixed grid — row-local, so it runs unchanged on a stream. */
   def conformalBinned(df: DataFrame, textCol: String,
-      bins: Int): DataFrame =
-    qualityScore(df.filter(length(col(textCol)) > 0).select(col(textCol)),
-        textCol, out = "__q")
-      .select(least(floor(col("__q") * bins).cast("long"),
-        lit(bins - 1L)).as("bin"))
-      .groupBy("bin").agg(count(lit(1)).as("c"))
+      bins: Int): DataFrame = psiBinned(df, textCol, bins, "c")
 
   /** The threshold half of [[conformalGate]]: one row
     * (n_cal, k, thr_bin) — the versioned artifact a stream gate
@@ -5169,15 +5116,15 @@ object Graft {
       psiGrid(psiBinned(gen0, textCol, bins, "__c0"),
         psiBinned(gen1, textCol, bins, "__c1"), bins), bins)
 
-  /** The row-local half of [[psiDrift]]: (bin, count) on the constant
-    * grid — runs unchanged on a stream (the stream twin's only state is
-    * this grouped count). */
+  /** The row-local half of [[psiDrift]], [[ksDrift]] and
+    * [[conformalGate]]: (bin, count as `cName`) on the constant grid, one
+    * row per occupied cell — runs unchanged on a stream (the stream
+    * twin's only state is this grouped count). */
   def psiBinned(df: DataFrame, textCol: String, bins: Int,
       cName: String): DataFrame =
     qualityScore(df.filter(length(col(textCol)) > 0).select(col(textCol)),
         textCol, out = "__q")
-      .select(least(floor(col("__q") * bins).cast("long"),
-        lit(bins - 1L)).as("bin"))
+      .select(Exact.scoreBin(col("__q"), bins).as("bin"))
       .groupBy("bin").agg(count(lit(1)).as(cName))
 
   /** Full-grid join of the two binned halves (empty cells → 0). */
@@ -5198,9 +5145,9 @@ object Graft {
       .withColumn("__p1", (col("c1") + lit(1L)).cast("double")
         / (col("__n1") + lit(bins.toLong)).cast("double"))
       .withColumn("__lq",
-        floor(log(col("__p1") / col("__p0")) * 1048576.0).cast("long"))
+        floor(log(col("__p1") / col("__p0")) * Exact.GridD).cast("long"))
       .withColumn("psi6", round((col("__p1") - col("__p0"))
-        * col("__lq").cast("double") / 1048576.0, 6))
+        * col("__lq").cast("double") / Exact.GridD, 6))
     val tot = p.agg(sum("psi6").as("__t"))
     p.crossJoin(broadcast(tot))
       .select(col("bin"), col("c0"), col("c1"), col("psi6"),
@@ -5347,13 +5294,13 @@ object Graft {
         textCol, out = "__q")
       .withColumn("__p", least(greatest(col("__q"), lit(0.05)), lit(0.95)))
       .withColumn("__wq",
-        floor(col("__p") / (lit(1.0) - col("__p")) * 1048576.0).cast("long"))
+        floor(col("__p") / (lit(1.0) - col("__p")) * Exact.GridD).cast("long"))
     scored.groupBy("__g")
       .agg(count(lit(1)).as("n_docs"),
         sum("__wq").as("__sw"),
         sum((col("__wq") * col("__wq")).cast("decimal(38,0)")).as("__sw2"))
       .select(col("__g").as(strataCol), col("n_docs"),
-        round(col("__sw").cast("double") / 1048576.0, 6).as("w_sum6"),
+        round(col("__sw").cast("double") / Exact.GridD, 6).as("w_sum6"),
         round(col("__sw").cast("double") * col("__sw").cast("double")
           / col("__sw2").cast("double"), 6).as("ess6"),
         expr(Exact.ratio4("""CAST(round(CAST(__sw AS DOUBLE)
@@ -5383,14 +5330,14 @@ object Graft {
     val c1 = c12.groupBy("__g", "__w1").agg(sum("__c12").as("__c1"))
     c12.join(c1, Seq("__g", "__w1"))
       .withColumn("__ls", floor(log(col("__c12").cast("double")
-        / col("__c1").cast("double")) * 1048576.0).cast("long"))
+        / col("__c1").cast("double")) * Exact.GridD).cast("long"))
       .groupBy("__g")
       .agg(sum("__c12").as("n_bigrams"),
         count(lit(1)).as("n_pair_types"),
         sum(-col("__c12") * col("__ls")).as("__hu"))
       .select(col("__g").as(strataCol), col("n_bigrams"), col("n_pair_types"),
         round(col("__hu").cast("double") / col("n_bigrams").cast("double")
-          / 1048576.0, 6).as("h6"))
+          / Exact.GridD, 6).as("h6"))
   }
 
   /** VOCABULARY-SIZE sweep — the choose-V artifact for tokenizer/vocab
@@ -5537,8 +5484,8 @@ object Graft {
       .localCheckpoint(true)
     val n = nodes.count()
     require(n > 0, "pagerank needs a non-empty graph")
-    val baseU = (3L * 1048576L) / (20L * n)
-    var pr = nodes.withColumn("__pru", lit(1048576L / n))
+    val baseU = (3L * Exact.Grid) / (20L * n)
+    var pr = nodes.withColumn("__pru", lit(Exact.Grid / n))
     for (_ <- 1 to iters) {
       val contrib = eDeg
         .join(pr.withColumnRenamed("node", "__src"), "__src")
@@ -5553,7 +5500,7 @@ object Graft {
       .select(row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy(col("__pru").desc, col("node").asc)).cast("int").as("rank"),
         col("node"),
-        round(col("__pru").cast("double") / 1048576.0, 6).as("pr6"))
+        round(col("__pru").cast("double") / Exact.GridD, 6).as("pr6"))
   }
 
   /** ROBUST per-group scaling report (median/IQR + Tukey fences): the
@@ -5733,7 +5680,7 @@ object Graft {
       if (n == 1) col("__O1").cast("double") / col("__C1").cast("double")
       else (col(s"__O$n") + lit(1L)).cast("double") /
         (col(s"__C$n") + lit(1L)).cast("double")
-    def q(c: Column): Column = floor(c * lit(1048576.0)).cast("double") / lit(1048576.0)
+    import Exact.{onGrid => q}
     val bp = when(col("__tc") >= col("__tr"), lit(1.0))
       .otherwise(q(exp(lit(1.0) - col("__tr").cast("double") / col("__tc").cast("double"))))
     val meanLog = (q(log(p(1))) + q(log(p(2))) + q(log(p(3))) + q(log(p(4)))) / lit(4.0)
@@ -5855,7 +5802,7 @@ object Graft {
   def retrievalMetrics(run: DataFrame, qidCol: String, scoreCol: String,
       relCol: String, strataCol: String, k: Int = 10,
       relThreshold: Int = 2): DataFrame = {
-    def q(c: Column): Column = floor(c * lit(1048576.0)).cast("double") / lit(1048576.0)
+    import Exact.{onGrid => q}
     def w(rankCol: Column): Column = q(lit(1.0) / log2(rankCol.cast("double") + lit(1.0)))
     val byScore = Window.partitionBy(col(qidCol))
       .orderBy(col(scoreCol).desc, col(relCol).asc)
@@ -6032,25 +5979,14 @@ object Graft {
   def labelNoiseAudit(vecs: DataFrame, idCol: String, vecCol: String,
       labelCol: String): DataFrame = {
     VectorFunctions.register(vecs.sparkSession)
-    // one-aggregation fixed-point per-class centroid (round 17): same
-    // rewrite as the kmeans Lloyd means — bit-identical, no explode
-    val vsum = udaf(new graft.functions.FixedPointVecSum,
-      org.apache.spark.sql.Encoders.product[graft.functions.VecSample])
-    val cent = vecs
-      .select(col(labelCol).as("c_id"), col(vecCol))
-      .groupBy("c_id")
-      .agg(vsum(col(vecCol)).as("__fs"))
-      .select(col("c_id"), expr(
-        """transform(__fs.sums, s -> CAST(CAST(s AS DOUBLE)
-          |  / CAST(__fs.n AS DOUBLE) / CAST(1048576 AS DOUBLE) AS FLOAT))"""
-          .stripMargin).as("centroid"))
+    val cent = FixedPointVecSum.centroids(
+      vecs.select(col(labelCol).as("c_id"), col(vecCol)), Seq("c_id"), vecCol)
     val dist =
       s"""vec_dot(`$vecCol`, `$vecCol`) - 2 * vec_dot(`$vecCol`, centroid)
          | + vec_dot(centroid, centroid)""".stripMargin
     val dq = vecs.crossJoin(broadcast(cent))
       .select(col(idCol).as("__id"), col(labelCol).as("given"), col("c_id"),
-        (floor(expr(dist) * lit(1048576.0)).cast("double") / lit(1048576.0))
-          .as("__dq"))
+        Exact.onGrid(expr(dist)).as("__dq"))
     val thresholds = dq.filter(col("given") === col("c_id"))
       .groupBy("c_id")
       .agg((sum("__dq") / count(lit(1)).cast("double")).as("__t"),
@@ -6091,8 +6027,7 @@ object Graft {
       .agg(sum(when(col("__c") > 1, col("__c")).otherwise(0L)).as("__dup_docs"))
     // language mix: H = ln(n) - Σ c·qln(c) / n on the 2^-20 grid
     val langs = base.groupBy("__s", "__l").agg(count(lit(1)).as("__c"))
-    def qln(c: Column): Column =
-      floor(log(c) * lit(1048576.0)).cast("double") / lit(1048576.0)
+    def qln(c: Column): Column = Exact.onGrid(log(c))
     val mix = langs.groupBy("__s")
       .agg(countDistinct(col("__l")).as("n_langs"),
         sum(col("__c")).as("__n"),
@@ -6167,8 +6102,7 @@ object Graft {
     * normalization. Output: (stratum, n, mi6, h_a6). */
   def mutualInformation(df: DataFrame, aCol: String, bCol: String,
       strataCol: String): DataFrame = {
-    def qln(c: Column): Column =
-      floor(log(c) * lit(1048576.0)).cast("double") / lit(1048576.0)
+    def qln(c: Column): Column = Exact.onGrid(log(c))
     val ab = df.groupBy(col(strataCol).as("__s"), col(aCol).as("__a"),
       col(bCol).as("__b")).agg(count(lit(1)).as("__c"))
     val a = ab.groupBy("__s", "__a").agg(sum("__c").as("__ca"))
@@ -6442,20 +6376,11 @@ object Graft {
   def embeddingDrift(vecs: DataFrame, idCol: String, vecCol: String,
       labelCol: String, genCol: String): DataFrame = {
     VectorFunctions.register(vecs.sparkSession)
-    // one-aggregation fixed-point per-label centroid (round 17): the kmeans
-    // rewrite — n comes from the same aggregate's member count (identical
-    // to the old per-dimension count for the fixed-dim vectors)
-    val vsum = udaf(new graft.functions.FixedPointVecSum,
-      org.apache.spark.sql.Encoders.product[graft.functions.VecSample])
-    def centroid(gen: Int, side: String): DataFrame = vecs
-      .filter(col(genCol) === gen)
-      .select(col(labelCol).as("label"), col(vecCol))
-      .groupBy("label")
-      .agg(vsum(col(vecCol)).as("__fs"))
-      .select(col("label"), col("__fs.n").as(s"n_$side"), expr(
-        """transform(__fs.sums, s -> CAST(CAST(s AS DOUBLE)
-          |  / CAST(__fs.n AS DOUBLE) / CAST(1048576 AS DOUBLE) AS FLOAT))"""
-          .stripMargin).as(s"__c$side"))
+    // n is the centroid aggregate's member count
+    def centroid(gen: Int, side: String): DataFrame = FixedPointVecSum.centroids(
+      vecs.filter(col(genCol) === gen)
+        .select(col(labelCol).as("label"), col(vecCol)),
+      Seq("label"), vecCol, s"__c$side", Some(s"n_$side"))
     centroid(0, "a").join(centroid(1, "b"), "label")
       .select(col("label"), col("n_a"), col("n_b"),
         round(expr("vec_dot(__ca, __cb) / (sqrt(vec_dot(__ca, __ca)) * sqrt(vec_dot(__cb, __cb)))"),

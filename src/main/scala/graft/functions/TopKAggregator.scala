@@ -1,7 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.functions.{col, expr, udaf}
+import graft.Exact
 
 /** One scored neighbor candidate flowing into the top-k aggregate.
   * (Top-level public case class: Janino-generated encoder code cannot access
@@ -92,9 +94,11 @@ case class VecSumState(sums: Seq[Long], n: Long)
   * groupBy(c_id, i) fixed-point mean and a second collect_list shuffle:
   * dim× the rows through the exchange machinery and one extra shuffle per
   * Lloyd iteration. Long addition is exact and order-independent, so the
-  * sums — and the centroids derived as CAST(sums/n/2²⁰ AS FLOAT) in the
-  * caller, the identical IEEE division sequence — are bit-identical to the
-  * exploded formula; the unrolled-CTE k-means oracles are unchanged.
+  * sums — and the centroids derived as CAST(sums/n/2²⁰ AS FLOAT) by
+  * [[FixedPointVecSum.centroids]], the identical IEEE division sequence —
+  * are bit-identical to the exploded formula; the unrolled-CTE k-means
+  * oracles are unchanged. The scale-in here and the scale-out in
+  * `centroids` are the two halves of the `graft.Exact` grid rule.
   * Mutates its own buffer array in place (aggregator buffers are
   * single-owner between serialization points, the TypedImperative rule). */
 class FixedPointVecSum extends Aggregator[VecSample, VecSumState, VecSumState] {
@@ -111,7 +115,7 @@ class FixedPointVecSum extends Aggregator[VecSample, VecSumState, VecSumState] {
       val s = new Array[Long](v.length)
       var i = 0
       while (i < v.length) {
-        s(i) = math.floor(v(i).toDouble * 1048576.0).toLong; i += 1
+        s(i) = math.floor(v(i).toDouble * Exact.GridD).toLong; i += 1
       }
       VecSumState(scala.collection.immutable.ArraySeq.unsafeWrapArray(s), 1L)
     } else {
@@ -120,7 +124,7 @@ class FixedPointVecSum extends Aggregator[VecSample, VecSumState, VecSumState] {
       val s = intoArray(b.sums)
       var i = 0
       while (i < v.length) {
-        s(i) += math.floor(v(i).toDouble * 1048576.0).toLong; i += 1
+        s(i) += math.floor(v(i).toDouble * Exact.GridD).toLong; i += 1
       }
       VecSumState(scala.collection.immutable.ArraySeq.unsafeWrapArray(s), b.n + 1L)
     }
@@ -142,4 +146,22 @@ class FixedPointVecSum extends Aggregator[VecSample, VecSumState, VecSumState] {
 
   override def bufferEncoder: Encoder[VecSumState] = Encoders.product[VecSumState]
   override def outputEncoder: Encoder[VecSumState] = Encoders.product[VecSumState]
+}
+
+object FixedPointVecSum {
+  private val vsum = udaf(new FixedPointVecSum, Encoders.product[VecSample])
+
+  /** The fixed-point centroid of `vecCol` per `keys` group (one global
+    * centroid when `keys` is empty): one [[FixedPointVecSum]] aggregate,
+    * then each dimension's sum divided by the member count and by 2²⁰ in
+    * DOUBLE and cast to FLOAT. Columns: `keys`, the member count as
+    * `countCol` when given, and the centroid as `centroidCol`. */
+  def centroids(rows: DataFrame, keys: Seq[String], vecCol: String,
+      centroidCol: String = "centroid", countCol: Option[String] = None): DataFrame =
+    rows.groupBy(keys.map(col): _*)
+      .agg(vsum(col(vecCol)).as("__fs"))
+      .select(keys.map(col) ++ countCol.map(col("__fs.n").as(_)) :+ expr(
+        s"""transform(__fs.sums, s -> CAST(CAST(s AS DOUBLE)
+           |  / CAST(__fs.n AS DOUBLE) / CAST(${Exact.Grid} AS DOUBLE) AS FLOAT))"""
+          .stripMargin).as(centroidCol): _*)
 }

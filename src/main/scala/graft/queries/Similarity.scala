@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Exact, Tables}
 import graft.functions.VectorFunctions
 
 /** Vector-similarity search over the embeddings table (driver-mandated
@@ -474,8 +474,7 @@ object Similarity {
           .stripMargin))
       .groupBy("list_id")
       .agg(count(lit(1)).as("n_vectors"),
-        round(sum(floor(col("res_norm") * 1048576.0)).cast("double")
-          / count(lit(1)).cast("double") / 1048576.0, 4).as("avg_res_norm"))
+        Exact.gridMean4(col("res_norm")).as("avg_res_norm"))
       .orderBy("list_id")
   }
 
@@ -912,9 +911,9 @@ object Similarity {
     val wFused = Window.partitionBy("q_id").orderBy(col("rrf_q").desc, col("c_id").asc)
     dense.join(lex, Seq("q_id", "c_id"), "left")
       .withColumn("rrf_q", expr(
-        """CAST(floor(1048576.0 / (60 + r_dense)) AS BIGINT)
+        s"""CAST(floor(${Exact.GridDec} / (60 + r_dense)) AS BIGINT)
           |  + CASE WHEN r_lex IS NULL THEN 0L
-          |         ELSE CAST(floor(1048576.0 / (60 + r_lex)) AS BIGINT) END""".stripMargin))
+          |         ELSE CAST(floor(${Exact.GridDec} / (60 + r_lex)) AS BIGINT) END""".stripMargin))
       .withColumn("rn", row_number().over(wFused))
       .filter(col("rn") <= 5)
       .select(col("q_id"), col("rn"), col("c_id"), col("rrf_q"),

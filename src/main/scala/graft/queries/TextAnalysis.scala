@@ -109,17 +109,17 @@ object TextAnalysis {
       .filter(size(col("__toks")) > 0)
       .withColumn("__n", size(col("__toks")).cast("long"))
       .withColumn("__hq", expr(
-        """aggregate(
+        s"""aggregate(
           |  transform(array_distinct(__toks),
           |    t -> size(filter(__toks, x -> x = t)) *
           |         CAST(floor(ln(CAST(__n AS DOUBLE)
           |           / CAST(size(filter(__toks, x -> x = t)) AS DOUBLE))
-          |           * 1048576.0) AS BIGINT)),
+          |           * ${Exact.GridDec}) AS BIGINT)),
           |  0L, (acc, v) -> acc + v)""".stripMargin))
       .select(col("doc_id"), col("__n").as("n_tokens"),
         size(expr("array_distinct(__toks)")).cast("long").as("n_distinct"),
         round(col("__hq").cast("double")
-          / col("__n").cast("double") / 1048576.0, 6).as("entropy"))
+          / col("__n").cast("double") / Exact.GridD, 6).as("entropy"))
       .withColumn("low_entropy", col("entropy") < 2.0)
       .orderBy("doc_id")
 
@@ -361,8 +361,7 @@ object TextAnalysis {
       .groupBy("source", "lang")
       .agg(count(lit(1)).as("n_docs"),
         sum("__nt").as("tok_volume"),
-        round(sum(floor(col("__q") * 1048576.0)).cast("double")
-          / count(lit(1)).cast("double") / 1048576.0, 4).as("mean_quality"),
+        Exact.gridMean4(col("__q")).as("mean_quality"),
         expr(Exact.ratio4("count_if(__q >= 0.5D)", "count(1)"))
           .as("keep_share"))
       .orderBy("source", "lang")

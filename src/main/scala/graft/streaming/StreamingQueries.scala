@@ -415,7 +415,7 @@ object StreamingQueries {
           .select(col("source"), col("text")),
         "text", out = "__q")
       .select(col("source"),
-        least(floor(col("__q") * 4096).cast("long"), lit(4095L)).as("bin"))
+        Exact.scoreBin(col("__q"), 4096).as("bin"))
     val agg = scored.groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("bin") >= lit(thrBin), 1L).otherwise(0L)).as("n_kept"))
@@ -532,7 +532,7 @@ object StreamingQueries {
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("tok_volume"),
         round(sum("llr_q").cast("double") / count(lit(1)).cast("double")
-          / 1048576.0, 4).as("avg_llr"))
+          / Exact.GridD, 4).as("avg_llr"))
       .orderBy("lang")
   }
 

@@ -66,26 +66,62 @@ class ExactSpec extends SparkSpec {
     }
   }
 
-  test("the rounding rule is spelled only in graft/Exact.scala " +
-      "(the oracle SQL in graft/SparkEntry.scala keeps its own copies)") {
+  /** Lines of `src/main/scala` matching `rule`, outside graft/Exact.scala
+    * and the oracle SQL in graft/SparkEntry.scala. */
+  private def copiesOutsideExact(rule: scala.util.matching.Regex): List[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root.resolve("graft")),
       s"sources not found under ${root.toAbsolutePath}")
-    assertThrows[ClassNotFoundException](Class.forName("graft.queries.Exact$"))
     val allowed = Set("graft/Exact.scala", "graft/SparkEntry.scala")
-    val rule = """20000L|ELSE -\(\(|DIV \(2L \*""".r
     val walk = Files.walk(root)
     val files: List[Path] =
       try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
     assert(files.exists(_.endsWith(Paths.get("graft/Exact.scala"))))
-    val hits = for {
+    for {
       f <- files
       rel = root.relativize(f).iterator.asScala.mkString("/")
       if !allowed(rel)
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
       if rule.findFirstIn(line).isDefined
     } yield s"$rel:${i + 1}: ${line.trim}"
+  }
+
+  test("the rounding rule is spelled only in graft/Exact.scala " +
+      "(the oracle SQL in graft/SparkEntry.scala keeps its own copies)") {
+    assertThrows[ClassNotFoundException](Class.forName("graft.queries.Exact$"))
+    val hits = copiesOutsideExact("""20000L|ELSE -\(\(|DIV \(2L \*""".r)
     assert(hits.isEmpty, hits.mkString(s"\n${hits.size} copies:\n", "\n", ""))
+  }
+
+  test("the 2^20 scale and the score-grid bin are spelled only in graft/Exact.scala") {
+    val hits = copiesOutsideExact("""1048576|least\(floor\(""".r)
+    assert(hits.isEmpty, hits.mkString(s"\n${hits.size} copies:\n", "\n", ""))
+  }
+
+  test("onGrid, gridMean4 and scoreBin equal their exact models") {
+    val rnd = new scala.util.Random(17L)
+    val xs = Seq(0.0, 1.0, -1.0, 0.5, -0.3, 1.0 / 3.0) ++
+      Seq.fill(2000)((rnd.nextDouble() - 0.5) * 1000.0)
+    val grid = math.pow(2, 20)
+    def floorGrid(x: Double): Long = math.floor(x * grid).toLong
+    val onGrid = xs.toDF("x").select(Exact.onGrid(col("x"))).as[Double].collect()
+    xs.zip(onGrid).foreach { case (x, g) =>
+      assert(g == floorGrid(x) / grid, s"onGrid($x) = $g")
+      assert(g <= x && x - g < 1.0 / grid, s"onGrid($x) = $g is not x floored onto the grid")
+    }
+    val mean = xs.toDF("x").repartition(5)
+      .agg(Exact.gridMean4(col("x"))).as[Double].head()
+    // an exact Long sum, then the same two IEEE divides and HALF_UP
+    val model = BigDecimal(xs.map(floorGrid).sum.toDouble / xs.size / grid)
+      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    assert(mean == model, s"gridMean4 = $mean, model $model")
+    val qs = Seq(0.0, 0.0999, 0.1, 0.5, 0.99999, 1.0) ++ Seq.fill(500)(rnd.nextDouble())
+    for (bins <- Seq(10, 4096)) {
+      val got = qs.toDF("q").select(Exact.scoreBin(col("q"), bins)).as[Long].collect()
+      qs.zip(got).foreach { case (q, b) =>
+        assert(b == math.min(math.floor(q * bins).toLong, bins - 1L), s"scoreBin($q, $bins) = $b")
+      }
+    }
   }
 }

@@ -31,16 +31,8 @@ class Round17Spec extends SparkSpec {
       .select(col("g"),
         expr("transform(__pairs, x -> CAST(x.__m AS FLOAT))").as("centroid"))
 
-    // the NEW shape: one FixedPointVecSum aggregation
-    val vsum = udaf(new graft.functions.FixedPointVecSum,
-      Encoders.product[graft.functions.VecSample])
-    val newMeans = df
-      .groupBy("g")
-      .agg(vsum(col("vec")).as("__fs"))
-      .select(col("g"), expr(
-        """transform(__fs.sums, s -> CAST(CAST(s AS DOUBLE)
-          |  / CAST(__fs.n AS DOUBLE) / CAST(1048576 AS DOUBLE) AS FLOAT))"""
-          .stripMargin).as("centroid"))
+    // the NEW shape: the centroid builder every Graft operator calls
+    val newMeans = graft.functions.FixedPointVecSum.centroids(df, Seq("g"), "vec")
 
     val a = oldMeans.orderBy("g").collect().map(r =>
       (r.getLong(0), r.getSeq[Float](1)))
