@@ -27,7 +27,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.wordCount(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "word_count"        -> Relational.wordCount _,
     "q1_pricing_summary" -> Relational.q1PricingSummary _,
     "q3_shipping_priority" -> Relational.q3ShippingPriority _,
@@ -3837,7 +3837,7 @@ object SparkEntry {
     sb.toString
   }
 
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     oracleSqlRaw.map { case (k, v) => k -> materializeCtes(v) }
 
   private[graft] def oracleSqlRaw: Map[String, String] = Map(

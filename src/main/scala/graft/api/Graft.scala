@@ -989,56 +989,119 @@ object Graft {
     df.groupBy(md5(lower(trim(col(textCol)))).as("fp"))
       .agg(min(idCol).as("keep_id"), count(lit(1)).as("n_copies"))
 
+  // ---------- bucket occupancy: the bound every dedup pair stage keeps ----------
+  //
+  // Every candidate generator below pairs rows that share a key (a shingle,
+  // a fingerprint, a band bucket, a block, a cluster). A key held by m rows
+  // makes m·(m−1)/2 pairs, so pair volume is Σ|bucket|² over keys: linear
+  // while buckets stay small, quadratic in the one viral key (boilerplate
+  // shingle, shallow band, coarse block) that holds most of the corpus. The
+  // two helpers below are the two ways an operator bounds it.
+
+  /** Drop-cap self-join: keys held by more than `cap` rows leave the index
+    * before the self-join, and the survivors pair up as `a`/`b` on `key`
+    * with `a.<idCol> < b.<idCol>`. Pair volume is then at most cap·|rows|,
+    * linear. The cost is recall: a pair whose every shared key
+    * is over the cap is never proposed (the LSH-family tradeoff; raise the
+    * cap or refine the key). Scores computed afterwards are unaffected, as
+    * they re-read the full rows. `cap == Long.MaxValue` means no cap and
+    * runs no occupancy count. The occupancy is an aggregate joined back,
+    * not a window, so a hot key streams through map-side combine instead
+    * of buffering in one task. */
+  private def cappedSelfJoin(rows: DataFrame, key: Seq[String], idCol: String,
+      cap: Long): DataFrame = {
+    val kept =
+      if (cap == Long.MaxValue) rows
+      else {
+        val occ = rows.groupBy(key.map(col): _*).agg(count(lit(1)).as("__occ"))
+        rows.join(occ, key).filter(col("__occ") <= cap).drop("__occ")
+      }
+    kept.as("a").join(kept.as("b"),
+      key.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+        col(s"a.$idCol") < col(s"b.$idCol"))
+  }
+
+  /** Fail-fast occupancy guard: `rows` unchanged when every `key` holds at
+    * most `max` rows, else the job aborts with `message`, which names the
+    * operator and the remedy. Where dropping a key would silently lose
+    * pairs the operator promises (every block of an edit-distance or
+    * entity-resolution pass, every cluster of SemDeDup), failing is the
+    * honest form of the bound: at scale a silently quadratic stage is an
+    * outage, and the caller knows which knob refines the key. Same
+    * aggregate-and-join shape as the drop cap; the filter is always true
+    * when the guard passes and is data-driven, so it is never pruned. */
+  private def occupancyGuard(rows: DataFrame, key: Seq[String], max: Long,
+      message: String): DataFrame = {
+    val occ = rows.groupBy(key.map(col): _*).agg(count(lit(1)).as("__occ"))
+    rows.join(occ, key)
+      .filter(expr(s"assert_true(__occ <= ${max}L, '$message') IS NULL"))
+      .drop("__occ")
+  }
+
+  /** The capped inverted shingle index shared by the n-gram operators and
+    * the screen-evaluation harness: the `n`-gram shingle explode of `docs`
+    * (idCol, blockCols…, shingle), materialized once because the sizes, the
+    * index and both sides of the exact re-join all read it; the shingle
+    * count per document (idCol, __n_sh); and the distinct (id_a, id_b)
+    * pairs that share a `blockCols` block and a shingle held by at most
+    * `maxPostings` rows of it. */
+  private def ngramIndex(docs: DataFrame, idCol: String, textCol: String,
+      blockCols: Seq[String], n: Int, maxPostings: Long)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val sh = shingles(docs.select(col(idCol) +: blockCols.map(col) :+ col(textCol): _*),
+      idCol, textCol, n).localCheckpoint(true)
+    val sizes = sh.groupBy(idCol).agg(count(lit(1)).as("__n_sh"))
+    val cand = cappedSelfJoin(sh, blockCols :+ "shingle", idCol, maxPostings)
+      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
+      .distinct()
+    (sh, sizes, cand)
+  }
+
+  /** Exact shingle overlap of (id_a, id_b) `pairs` from the FULL (uncapped)
+    * shingle sets: explode id_a's shingles onto the pair and join on
+    * (id_b, shingle), so the work is |pairs|·shingles/doc, never doc×doc.
+    * Adds n_common and both set sizes (__sa, __sb). Pairs that share no
+    * shingle drop out, unless `keepDisjoint`, which keeps them at
+    * n_common = 0. */
+  private def shingleOverlap(pairs: DataFrame, sh: DataFrame, sizes: DataFrame,
+      idCol: String, keepDisjoint: Boolean = false): DataFrame = {
+    val inter = pairs
+      .join(sh.select(col(idCol).as("id_a"), col("shingle")), "id_a")
+      .join(sh.select(col(idCol).as("id_b"), col("shingle")), Seq("id_b", "shingle"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
+    val counted =
+      if (keepDisjoint) pairs.join(inter, Seq("id_a", "id_b"), "left")
+        .withColumn("n_common", coalesce(col("n_common"), lit(0L)))
+      else inter
+    counted
+      .join(sizes.select(col(idCol).as("id_a"), col("__n_sh").as("__sa")), "id_a")
+      .join(sizes.select(col(idCol).as("id_b"), col("__n_sh").as("__sb")), "id_b")
+  }
+
+  /** |A∩B| / |A∪B| rounded to 4 places, over `shingleOverlap`'s columns. */
+  private def jaccard4: Column =
+    round(col("n_common").cast("double") /
+      (col("__sa") + col("__sb") - col("n_common")), 4)
+
   /** N-gram Jaccard near-dup via a capped inverted shingle index: candidate
     * pairs must share every `blockCols` value AND at least one shingle whose
     * postings list (within the block) is no longer than `maxPostings`; exact
     * Jaccard over the FULL shingle sets then filters the survivors. Output:
     * (id_a, id_b, n_common, jaccard) with id_a < id_b.
     *
-    * The cap is the scale control the plain inverted-index join lacks: pair
-    * volume is Σ|postings|² over shingles, and ONE viral boilerplate shingle
-    * (or a dense synthetic vocabulary) makes that quadratic. Dropping
-    * ultra-common shingles from the INDEX bounds it by
-    * maxPostings·Σ|postings| — linear in data — while the Jaccard numerator
+    * The cap is the scale control the plain inverted-index join lacks (see
+    * `cappedSelfJoin`): ONE viral boilerplate shingle (or a dense synthetic
+    * vocabulary) makes Σ|postings|² quadratic, while the Jaccard numerator
     * stays exact (it re-joins the full shingle sets, candidates-bounded).
     * Recall caveat: a pair whose every shared shingle exceeds the cap is
-    * missed — that's the LSH-family tradeoff; raise the cap or add blockCols
-    * granularity when precision of the index matters more than its size. */
+    * missed; raise the cap or add blockCols granularity when precision of
+    * the index matters more than its size. */
   def ngramJaccardCandidates(df: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String] = Nil, n: Int = 3, minJaccard: Double = 0.2,
       maxPostings: Long = 128L): DataFrame = {
-    // materialized ONCE: five consumers read the shingle explode (sizes,
-    // postings, the index join, and both sides of the exact-score re-join)
-    // and none can reuse another's exchange — without the barrier the
-    // tokenize+slice+join explode runs per consumer
-    val sh = shingles(df.select(col(idCol) +: blockCols.map(col) :+ col(textCol): _*),
-      idCol, textCol, n).localCheckpoint(true)
-    val sizes = sh.groupBy(idCol).agg(count(lit(1)).as("__n_sh"))
-    // postings length per (block, shingle); the index keeps only short lists
-    val postingKey = blockCols :+ "shingle"
-    val postings = sh.groupBy(postingKey.map(col): _*)
-      .agg(count(lit(1)).as("__df"))
-    val idx = sh.join(postings, postingKey).filter(col("__df") <= maxPostings)
-      .drop("__df")
-    val a = idx.as("a"); val b = idx.as("b")
-    val cond = blockCols.foldLeft(
-      col("a.shingle") === col("b.shingle") && col(s"a.$idCol") < col(s"b.$idCol")) {
-        (acc, c) => acc && col(s"a.$c") === col(s"b.$c") }
-    val cand = a.join(b, cond)
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .distinct()
-    // exact Jaccard on surviving candidates from the FULL (uncapped) shingle
-    // sets: explode id_a's shingles onto the pair, inner-join on (id_b,
-    // shingle) — work bounded by |candidates|·shingles/doc, never doc×doc
-    val inter = cand
-      .join(sh.select(col(idCol).as("id_a"), col("shingle")), "id_a")
-      .join(sh.select(col(idCol).as("id_b"), col("shingle")), Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
-    inter
-      .join(sizes.select(col(idCol).as("id_a"), col("__n_sh").as("__sa")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("__n_sh").as("__sb")), "id_b")
-      .withColumn("jaccard", round(col("n_common").cast("double") /
-        (col("__sa") + col("__sb") - col("n_common")), 4))
+    val (sh, sizes, cand) = ngramIndex(df, idCol, textCol, blockCols, n, maxPostings)
+    shingleOverlap(cand, sh, sizes, idCol)
+      .withColumn("jaccard", jaccard4)
       .filter(col("jaccard") >= minJaccard)
       .select("id_a", "id_b", "n_common", "jaccard")
   }
@@ -1056,29 +1119,8 @@ object Graft {
   def ngramContainmentCandidates(df: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String] = Nil, n: Int = 3, minContainment: Double = 0.8,
       maxPostings: Long = 128L): DataFrame = {
-    // five-consumer barrier — same rationale as ngramJaccardCandidates
-    val sh = shingles(df.select(col(idCol) +: blockCols.map(col) :+ col(textCol): _*),
-      idCol, textCol, n).localCheckpoint(true)
-    val sizes = sh.groupBy(idCol).agg(count(lit(1)).as("__n_sh"))
-    val postingKey = blockCols :+ "shingle"
-    val postings = sh.groupBy(postingKey.map(col): _*)
-      .agg(count(lit(1)).as("__df"))
-    val idx = sh.join(postings, postingKey).filter(col("__df") <= maxPostings)
-      .drop("__df")
-    val a = idx.as("a"); val b = idx.as("b")
-    val cond = blockCols.foldLeft(
-      col("a.shingle") === col("b.shingle") && col(s"a.$idCol") < col(s"b.$idCol")) {
-        (acc, c) => acc && col(s"a.$c") === col(s"b.$c") }
-    val cand = a.join(b, cond)
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .distinct()
-    val inter = cand
-      .join(sh.select(col(idCol).as("id_a"), col("shingle")), "id_a")
-      .join(sh.select(col(idCol).as("id_b"), col("shingle")), Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
-    inter
-      .join(sizes.select(col(idCol).as("id_a"), col("__n_sh").as("__sa")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("__n_sh").as("__sb")), "id_b")
+    val (sh, sizes, cand) = ngramIndex(df, idCol, textCol, blockCols, n, maxPostings)
+    shingleOverlap(cand, sh, sizes, idCol)
       .withColumn("containment", expr(
         Exact.ratio4("n_common", "least(__sa, __sb)")))
       .filter(col("containment") >= minContainment)
@@ -1132,12 +1174,8 @@ object Graft {
       // the aggregate's exchange — without the barrier the hash explode
       // runs twice
       .localCheckpoint(true)
-    val postings = grams.groupBy("fp").agg(count(lit(1)).as("__df"))
-    val idx = grams.join(postings, "fp").filter(col("__df") <= maxPostings)
-      .drop("__df")
-    idx.as("a").join(idx.as("b"),
-        col("a.fp") === col("b.fp") && col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"), col("a.fp"))
+    cappedSelfJoin(grams, Seq("fp"), idCol, maxPostings)
+      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
       // plain count IS the distinct-span count: grams are array_distinct'd
       // per document, so each (pair, fp) row is already unique — a
       // countDistinct here would pay the two-phase expand for nothing
@@ -1343,11 +1381,7 @@ object Graft {
       // two-consumer barrier (postings aggregate + index join) — the
       // winnow selection's per-gram hashing is the expensive part
       .localCheckpoint(true)
-    val postings = sel.groupBy("fp").agg(count(lit(1)).as("__df"))
-    val idx = sel.join(postings, "fp").filter(col("__df") <= maxPostings)
-      .drop("__df")
-    idx.as("a").join(idx.as("b"),
-        col("a.fp") === col("b.fp") && col(s"a.$idCol") < col(s"b.$idCol"))
+    cappedSelfJoin(sel, Seq("fp"), idCol, maxPostings)
       .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
       // (pair, fp) rows are unique (per-doc distinct selection), so the
       // plain count is the shared-fingerprint count
@@ -1424,24 +1458,11 @@ object Graft {
     val docs = df.select(col(idCol) +: blockCols.map(col) :+
       substring(col(textCol), 1, blockPrefixLen).as("__blk") :+
       substring(col(textCol), 1, headLen).as("__head"): _*)
-    // occupancy guard via aggregate + join, NOT a partition-wide window: a
-    // window count would buffer the whole block in one task — the hot-bucket
-    // shape this guard exists to catch — while the aggregate streams with
-    // map-side combine and its exchange co-partitions with the self-join.
-    // The filter is always-true when the guard passes and throws when it
-    // doesn't — data-driven, not prunable.
+    // the aggregate's exchange co-partitions with the self-join
     val occKey = blockCols :+ "__blk"
-    val occ = docs.groupBy(occKey.map(col): _*).agg(count(lit(1)).as("__bcnt"))
-    val guarded = docs.join(occ, occKey)
-      .filter(expr(
-        s"""assert_true(__bcnt <= ${maxBlockOccupancy}L,
-           |  'editDistanceDedup: a block exceeds maxBlockOccupancy=$maxBlockOccupancy rows; lengthen blockPrefixLen or add blockCols') IS NULL""".stripMargin))
-      .drop("__bcnt")
-    val a = guarded.as("a"); val b = guarded.as("b")
-    val cond = blockCols.foldLeft(
-      col("a.__blk") === col("b.__blk") && col(s"a.$idCol") < col(s"b.$idCol")) {
-        (acc, c) => acc && col(s"a.$c") === col(s"b.$c") }
-    a.join(b, cond)
+    val guarded = occupancyGuard(docs, occKey, maxBlockOccupancy,
+      s"editDistanceDedup: a block exceeds maxBlockOccupancy=$maxBlockOccupancy rows; lengthen blockPrefixLen or add blockCols")
+    cappedSelfJoin(guarded, occKey, idCol, Long.MaxValue)
       .withColumn("dist", levenshtein(col("a.__head"), col("b.__head")))
       .filter(col("dist") <= maxDist)
       .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
@@ -1565,21 +1586,11 @@ object Graft {
       posexplode(expr(
         s"transform(sequence(0, ${bands - 1}), b -> slice(sig, b * $rowsPerBand + 1, $rowsPerBand))"))
         .as(Seq("band", "bandsig")))
+    // three consumers in the capped branch (occupancy + both join sides) —
+    // barrier the explode like the sweep does
     val banded =
-      if (maxBandBucket == Long.MaxValue) bandedRaw
-      else {
-        // three consumers in the capped branch (occupancy + both join
-        // sides) — barrier the explode like the sweep does
-        val bc = bandedRaw.localCheckpoint(true)
-        val occ = bc.groupBy("band", "bandsig")
-          .agg(count(lit(1)).as("__occ"))
-        bc.join(occ, Seq("band", "bandsig"))
-          .filter(col("__occ") <= maxBandBucket).drop("__occ")
-      }
-    val a = banded.as("a"); val b = banded.as("b")
-    a.join(b,
-        col("a.band") === col("b.band") && col("a.bandsig") === col("b.bandsig") &&
-        col(s"a.$idCol") < col(s"b.$idCol"))
+      if (maxBandBucket == Long.MaxValue) bandedRaw else bandedRaw.localCheckpoint(true)
+    cappedSelfJoin(banded, Seq("band", "bandsig"), idCol, maxBandBucket)
       .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
         round(expr(s"size(filter(zip_with(a.sig, b.sig, (x, y) -> x = y), v -> v))")
           / numHashes.toDouble, 4).as("est"))
@@ -1685,19 +1696,7 @@ object Graft {
       else df.filter(substring(md5(col(idCol).cast("string")), 1, 1)
         .isin(sampleHexDigits: _*))
     val docs = base.select(col(idCol), col(textCol))
-    // four consumers of the shingle explode (postings, index join, both
-    // exact-score sides) — same barrier rationale as ngramJaccardCandidates
-    val sh = shingles(docs, idCol, textCol, shingleN).localCheckpoint(true)
-    val sizes = sh.groupBy(idCol).agg(count(lit(1)).as("__n_sh"))
-    val postings = sh.groupBy("shingle").agg(count(lit(1)).as("__df"))
-    val idx = sh.join(postings, "shingle").filter(col("__df") <= maxPostings)
-      .drop("__df")
-    val a = idx.as("a"); val b = idx.as("b")
-    val candSh = a.join(b,
-        col("a.shingle") === col("b.shingle") &&
-        col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .distinct()
+    val (sh, sizes, candSh) = ngramIndex(docs, idCol, textCol, Nil, shingleN, maxPostings)
     (docs, sh, sizes, candSh)
   }
 
@@ -1707,21 +1706,9 @@ object Graft {
     * from the full shingle sets, zero-common pairs kept via the left join,
     * round-4 like every consumer's gate. Returns (id_a, id_b, __j). */
   private def exactPairJaccard(uni: DataFrame, sh: DataFrame,
-      sizes: DataFrame, idCol: String): DataFrame = {
-    val inter = uni
-      .join(sh.select(col(idCol).as("id_a"), col("shingle")), "id_a")
-      .join(sh.select(col(idCol).as("id_b"), col("shingle")),
-        Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("__nc"))
-    uni
-      .join(inter, Seq("id_a", "id_b"), "left")
-      .join(sizes.select(col(idCol).as("id_a"), col("__n_sh").as("__sa")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("__n_sh").as("__sb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(coalesce(col("__nc"), lit(0L)).cast("double") /
-          (col("__sa") + col("__sb") - coalesce(col("__nc"), lit(0L))), 4)
-          .as("__j"))
-  }
+      sizes: DataFrame, idCol: String): DataFrame =
+    shingleOverlap(uni, sh, sizes, idCol, keepDisjoint = true)
+      .select(col("id_a"), col("id_b"), jaccard4.as("__j"))
 
   def minhashScreenEval(df: DataFrame, idCol: String, textCol: String,
       tau: Double = 0.2, shingleN: Int = 3, numHashes: Int = 32,
@@ -1802,27 +1789,18 @@ object Graft {
       .select(col(idCol), col("sig"), explode(expr(bandExpr)).as("__cb"))
       .select(col(idCol), col("sig"), col("__cb.bands"),
         col("__cb.rows_per_band"), col("__cb.band"), col("__cb.bandsig"))
-      // the capped-inverted-index rule applied to band buckets: the
-      // shallow-banding end of the sweep (rowsPerBand = 2) collides whole
-      // weak-similarity neighborhoods into one bucket, and bucket pair
-      // volume is Σ|bucket|² — a viral bucket (> maxBandBucket members)
-      // carries no per-pair signal and is dropped from candidate
-      // generation, exactly like maxPostings on shingle postings
       .localCheckpoint(true)
-    val bucketSizes = bandedAll.groupBy("bands", "band", "bandsig")
-      .agg(count(lit(1)).as("__occ"))
-    val banded = bandedAll.join(bucketSizes, Seq("bands", "band", "bandsig"))
-      .filter(col("__occ") <= maxBandBucket).drop("__occ")
-    val ba = banded.as("ba"); val bb = banded.as("bb")
-    val bandedPerCfg = ba.join(bb,
-        col("ba.bands") === col("bb.bands") &&
-        col("ba.band") === col("bb.band") &&
-        col("ba.bandsig") === col("bb.bandsig") &&
-        col(s"ba.$idCol") < col(s"bb.$idCol"))
-      .select(col("ba.bands").as("bands"),
-        col("ba.rows_per_band").as("rows_per_band"),
-        col(s"ba.$idCol").as("id_a"), col(s"bb.$idCol").as("id_b"),
-        round(expr(s"size(filter(zip_with(ba.sig, bb.sig, (x, y) -> x = y), v -> v))")
+    // the capped-inverted-index rule applied to band buckets: the
+    // shallow-banding end of the sweep (rowsPerBand = 2) collides whole
+    // weak-similarity neighborhoods into one bucket — a viral bucket
+    // (> maxBandBucket members) carries no per-pair signal and is dropped
+    // from candidate generation, exactly like maxPostings on shingle postings
+    val bandedPerCfg = cappedSelfJoin(bandedAll, Seq("bands", "band", "bandsig"),
+        idCol, maxBandBucket)
+      .select(col("a.bands").as("bands"),
+        col("a.rows_per_band").as("rows_per_band"),
+        col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
+        round(expr(s"size(filter(zip_with(a.sig, b.sig, (x, y) -> x = y), v -> v))")
           / numHashes.toDouble, 4).as("__est"))
       .groupBy("bands", "rows_per_band", "id_a", "id_b")
       .agg(max("__est").as("est_jaccard"))
@@ -2205,16 +2183,9 @@ object Graft {
     VectorFunctions.register(df.sparkSession)
     val assign = kmeans(df, idCol, vecCol, k, iters,
       trainHexDigits = trainHexDigits).assignments
-    // FAIL-FAST occupancy guard (the editDistanceDedup contract): within-
-    // cluster pair volume is Σ|cluster|², so a cluster past the declared
-    // bound must abort with the remedy (grow k) rather than silently go
-    // quadratic — at 100 TB "silently quadratic" is an outage, not slowness
-    val occ = assign.groupBy("list_id").agg(count(lit(1)).as("__ccnt"))
-    val guarded = assign.join(occ, "list_id")
-      .filter(expr(
-        s"""assert_true(__ccnt <= ${maxClusterOccupancy}L,
-           |  'semanticDedup: a cluster exceeds maxClusterOccupancy=$maxClusterOccupancy rows; grow k (clusters must stay bounded for the pair stage to stay linear)') IS NULL""".stripMargin))
-      .drop("__ccnt")
+    // within-cluster pair volume is Σ|cluster|²: fail fast past the bound
+    val guarded = occupancyGuard(assign, Seq("list_id"), maxClusterOccupancy,
+      s"semanticDedup: a cluster exceeds maxClusterOccupancy=$maxClusterOccupancy rows; grow k (clusters must stay bounded for the pair stage to stay linear)")
     val withVec = guarded.join(df.select(col(idCol), col(vecCol)), Seq(idCol))
     val a = withVec.select(col("list_id"),
       col(idCol).as("id_a"), col(vecCol).as("__va"))
@@ -2565,18 +2536,22 @@ object Graft {
 
   // ---------- time series ----------
 
-  /** AS-OF (point-in-time) join: for every `left` row, attach `rightValCol`
-    * from the `right` row with the greatest `tsCol` ≤ the left row's `tsCol`
-    * and the same `keyCol` (inclusive at equal timestamps — DuckDB ASOF
-    * semantics). Adds `<rightValCol>_asof` and `<tsCol>_asof` columns; left
-    * rows with no prior right row are dropped.
-    *
-    * Scale shape: union both sides, ONE shuffle on the key, and a running
-    * `last(_, ignoreNulls)` window per key — no range self-join, no candidate
-    * blow-up; O(n log n) per key partition. Right rows are pre-deduped to one
-    * per (key, ts) via max(rightValCol), which also makes ties deterministic. */
-  def asofJoin(left: DataFrame, right: DataFrame, keyCol: String,
-      tsCol: String, rightValCol: String): DataFrame = {
+  /** The as-of family's shared prelude: right rows deduped to one per
+    * (key, ts) via max(rightValCol), which also makes ties deterministic,
+    * tagged `__kind` 0, unioned with the left rows, tagged 1, both aligned to
+    * (key, ts, rightValCol, __kind, left payload…). `__b` is each row's
+    * latest right row at or before it, as a (t, v) struct: one running
+    * `last(_, ignoreNulls)` window per key, with right rows sorted before
+    * left rows at equal ts so an equal-ts right row is visible (DuckDB ASOF
+    * is inclusive). (ts, value) travel together in ONE struct: two separate
+    * ignoreNulls windows could pair a value from one right row with the
+    * timestamp of a later NULL-valued right row — a (value, ts) observation
+    * that never existed. The struct is non-null for every right row (even a
+    * NULL value), so the latest right row wins regardless of its value's
+    * nullness. Returns the timeline, the payload columns and the right-row
+    * struct (NULL on left rows). */
+  private def asofTimeline(left: DataFrame, right: DataFrame, keyCol: String,
+      tsCol: String, rightValCol: String): (DataFrame, Seq[String], Column) = {
     val payload = left.columns.filterNot(c => c == keyCol || c == tsCol).toSeq
     val r = right.groupBy(col(keyCol), col(tsCol))
       .agg(max(rightValCol).as(rightValCol))
@@ -2587,23 +2562,33 @@ object Graft {
     val leftAligned = left.select(
       Seq(col(keyCol), col(tsCol), lit(null).cast(rValType).as(rightValCol),
         lit(1).as("__kind")) ++ payload.map(col): _*)
-    val w = Window.partitionBy(keyCol)
+    val wb = Window.partitionBy(keyCol)
       .orderBy(col(tsCol), col("__kind"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // (ts, value) travel together in ONE running struct: tracking them in two
-    // separate ignoreNulls windows could pair a value from one right row with
-    // the timestamp of a later NULL-valued right row — a (value, ts)
-    // observation that never existed. The struct is non-null for every right
-    // row (even a NULL value), matching ASOF semantics: the latest right row
-    // wins regardless of its value's nullness.
-    rightAligned.unionByName(leftAligned)
-      .withColumn("__asof", last(
-        when(col("__kind") === 0, struct(col(tsCol).as("t"), col(rightValCol).as("v"))),
-        ignoreNulls = true).over(w))
-      .filter(col("__kind") === 1 && col("__asof").isNotNull)
+    val rightStruct = when(col("__kind") === 0,
+      struct(col(tsCol).as("t"), col(rightValCol).as("v")))
+    val timeline = rightAligned.unionByName(leftAligned)
+      .withColumn("__b", last(rightStruct, ignoreNulls = true).over(wb))
+    (timeline, payload, rightStruct)
+  }
+
+  /** AS-OF (point-in-time) join: for every `left` row, attach `rightValCol`
+    * from the `right` row with the greatest `tsCol` ≤ the left row's `tsCol`
+    * and the same `keyCol` (inclusive at equal timestamps — DuckDB ASOF
+    * semantics). Adds `<rightValCol>_asof` and `<tsCol>_asof` columns; left
+    * rows with no prior right row are dropped.
+    *
+    * Scale shape: union both sides, ONE shuffle on the key, and a running
+    * `last(_, ignoreNulls)` window per key (`asofTimeline`) — no range
+    * self-join, no candidate blow-up; O(n log n) per key partition. */
+  def asofJoin(left: DataFrame, right: DataFrame, keyCol: String,
+      tsCol: String, rightValCol: String): DataFrame = {
+    val (timeline, payload, _) = asofTimeline(left, right, keyCol, tsCol, rightValCol)
+    timeline
+      .filter(col("__kind") === 1 && col("__b").isNotNull)
       .select(Seq(col(keyCol), col(tsCol)) ++ payload.map(col) ++
-        Seq(col("__asof.v").as(s"${rightValCol}_asof"),
-          col("__asof.t").as(s"${tsCol}_asof")): _*)
+        Seq(col("__b.v").as(s"${rightValCol}_asof"),
+          col("__b.t").as(s"${tsCol}_asof")): _*)
   }
 
   /** Tolerance-bounded as-of join (pandas merge_asof `tolerance=`): the
@@ -2629,29 +2614,14 @@ object Graft {
     * survive with NULLs (left-join semantics). */
   def asofJoinNearest(left: DataFrame, right: DataFrame, keyCol: String,
       tsCol: String, rightValCol: String): DataFrame = {
-    val payload = left.columns.filterNot(c => c == keyCol || c == tsCol).toSeq
-    val r = right.groupBy(col(keyCol), col(tsCol))
-      .agg(max(rightValCol).as(rightValCol))
-    val rValType = r.schema(rightValCol).dataType
-    val rightAligned = r.select(
-      Seq(col(keyCol), col(tsCol), col(rightValCol), lit(0).as("__kind")) ++
-        payload.map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
-    val leftAligned = left.select(
-      Seq(col(keyCol), col(tsCol), lit(null).cast(rValType).as(rightValCol),
-        lit(1).as("__kind")) ++ payload.map(col): _*)
-    // backward: right rows sort BEFORE left at equal ts (equal-ts right is
-    // at distance 0 and must be visible); forward: right rows sort AFTER
-    // left at equal ts so [currentRow, +∞) still contains them
-    val wb = Window.partitionBy(keyCol)
-      .orderBy(col(tsCol), col("__kind"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val (timeline, payload, rightStruct) =
+      asofTimeline(left, right, keyCol, tsCol, rightValCol)
+    // forward: right rows sort AFTER left at equal ts so [currentRow, +∞)
+    // still contains them
     val wf = Window.partitionBy(keyCol)
       .orderBy(col(tsCol), lit(1) - col("__kind"))
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val rightStruct = when(col("__kind") === 0,
-      struct(col(tsCol).as("t"), col(rightValCol).as("v")))
-    rightAligned.unionByName(leftAligned)
-      .withColumn("__b", last(rightStruct, ignoreNulls = true).over(wb))
+    timeline
       .withColumn("__f", first(rightStruct, ignoreNulls = true).over(wf))
       .filter(col("__kind") === 1)
       .withColumn("__n", // micros distances; tie → backward (earlier)
@@ -5256,13 +5226,8 @@ object Graft {
     val base = df.select(
       (blockCols.map(col) :+ col(reportCol) :+ col(idCol).as("__id")
         :+ col(nameCol).as("__nm")): _*)
-    val occ = base.groupBy(blockCols.map(col): _*)
-      .agg(count(lit(1)).as("__bcnt"))
-    val guarded = base.join(occ, blockCols)
-      .filter(expr(
-        s"""assert_true(__bcnt <= ${maxBlock}L,
-           |  'entityResolution: a block exceeds maxBlock=$maxBlock rows; refine blockCols (blocks must stay bounded for the pair stage to stay linear)') IS NULL""".stripMargin))
-      .drop("__bcnt")
+    val guarded = occupancyGuard(base, blockCols, maxBlock,
+      s"entityResolution: a block exceeds maxBlock=$maxBlock rows; refine blockCols (blocks must stay bounded for the pair stage to stay linear)")
     val a = guarded.select((blockCols.map(col) :+ col(reportCol)
       :+ col("__id").as("__ia") :+ col("__nm").as("__na")): _*)
     val b = guarded.select((blockCols.map(col)

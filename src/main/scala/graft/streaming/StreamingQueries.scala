@@ -144,11 +144,18 @@ object StreamingQueries {
     // dominates the extra parallelism even on that row's ~0.5M exploded
     // rows; SCALE.md Round-16.) On a cluster this stays whatever the
     // session sets — state partitioning is the scale mechanism.
-    capShuffle(s, 2) {
-      val q = stream.writeStream.outputMode(mode).format("memory").queryName(name).start()
+    // the checkpoint lives under Scoped.dir, not in a `temporary-*` dir
+    // under java.io.tmpdir that Spark keeps whenever a query fails; removed
+    // before the start too, or a second run of the row in this session
+    // would resume from its committed offsets and write an empty table
+    val ckpt = Scoped.dir(s, "graft_stream_memory", name)
+    Scoped.rm(ckpt)
+    try capShuffle(s, 2) {
+      val q = stream.writeStream.outputMode(mode).format("memory").queryName(name)
+        .option("checkpointLocation", ckpt).start()
       try { q.processAllAvailable() } finally { q.stop() }
       q.awaitTermination()
-    }
+    } finally Scoped.rm(ckpt)
     s.table(name)
   }
 

@@ -66,13 +66,15 @@ class ExactSpec extends SparkSpec {
     }
   }
 
-  /** Lines of `src/main/scala` matching `rule`, outside graft/Exact.scala
-    * and the oracle SQL in graft/SparkEntry.scala. */
-  private def copiesOutsideExact(rule: scala.util.matching.Regex): List[String] = {
+  /** Lines of `src/main/scala` matching `rule`, outside the `allowed`
+    * files (by default graft/Exact.scala and the oracle SQL in
+    * graft/SparkEntry.scala). */
+  private def copiesOutsideExact(rule: scala.util.matching.Regex,
+      allowed: Set[String] = Set("graft/Exact.scala", "graft/SparkEntry.scala"))
+      : List[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root.resolve("graft")),
       s"sources not found under ${root.toAbsolutePath}")
-    val allowed = Set("graft/Exact.scala", "graft/SparkEntry.scala")
     val walk = Files.walk(root)
     val files: List[Path] =
       try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
@@ -97,6 +99,19 @@ class ExactSpec extends SparkSpec {
   test("the 2^20 scale and the score-grid bin are spelled only in graft/Exact.scala") {
     val hits = copiesOutsideExact("""1048576|least\(floor\(""".r)
     assert(hits.isEmpty, hits.mkString(s"\n${hits.size} copies:\n", "\n", ""))
+  }
+
+  test("each bucket-occupancy rule of the dedup pair stages is spelled once") {
+    // the drop-cap filter, the fail-fast occupancy guard and the exact
+    // shingle-intersection re-join each have one home in graft.api.Graft
+    val rules = Seq(
+      "drop-cap filter" -> """filter\(col\("__(?:df|occ)"\) <=""".r,
+      "occupancy guard" -> """assert_true\(__\w+ <=""".r,
+      "exact-intersection re-join" -> """Seq\("id_b", "shingle"\)""".r)
+    for ((what, rule) <- rules) {
+      val hits = copiesOutsideExact(rule, allowed = Set("graft/SparkEntry.scala"))
+      assert(hits.size == 1, hits.mkString(s"\n$what: ${hits.size} copies:\n", "\n", ""))
+    }
   }
 
   test("onGrid, gridMean4 and scoreBin equal their exact models") {

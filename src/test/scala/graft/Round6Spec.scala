@@ -41,6 +41,52 @@ class Round6Spec extends SparkSpec {
     assert(j == ((3L, 0.6)))
   }
 
+  test("every capped operator: the cap prunes candidates but never changes scores") {
+    // docs 1/2 are near-duplicates through rare keys; docs 3..8 are one text,
+    // so each of their shingles, grams and band buckets is held by 6 rows —
+    // over a cap of 5, under one of 1000
+    val rare = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val docs = (Seq((1L, rare + " one"), (2L, rare + " two"), (9L, "lone words here now")) ++
+      (3L to 8L).map(i => (i, "p q r s t"))).toDF("doc_id", "text")
+    val G = api.Graft
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+      df.collect().map(_.toSeq).toSet
+    def idPair(r: Seq[Any]): (Long, Long) = (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long])
+    val common = (for (a <- 3L to 8L; b <- a + 1 to 8L) yield (a, b)).toSet
+    val ops: Seq[(String, Long => org.apache.spark.sql.DataFrame)] = Seq(
+      "ngramJaccardCandidates" -> (cap => G.ngramJaccardCandidates(docs, "doc_id", "text",
+        minJaccard = 0.1, maxPostings = cap)),
+      "ngramContainmentCandidates" -> (cap => G.ngramContainmentCandidates(docs,
+        "doc_id", "text", minContainment = 0.1, maxPostings = cap)),
+      "substringOverlapCandidates" -> (cap => G.substringOverlapCandidates(docs,
+        "doc_id", "text", spanTokens = 3, maxPostings = cap)),
+      "winnowOverlapCandidates" -> (cap => G.winnowOverlapCandidates(docs,
+        "doc_id", "text", k = 3, w = 1, minShared = 1L, maxPostings = cap)),
+      "minhashCandidates" -> { cap =>
+        val sig = G.minhashSignatures(docs, "doc_id", "text")
+        G.minhashCandidates(sig, "doc_id", bands = 16, rowsPerBand = 2,
+          minEstJaccard = 0.1, maxBandBucket = cap)
+      })
+    for ((name, op) <- ops) {
+      val uncapped = rows(op(1000L))
+      val capped = rows(op(5L))
+      assert(uncapped.map(idPair) == common + ((1L, 2L)), s"$name uncapped: $uncapped")
+      // same rows, same scores: the cap only removes the viral-key pairs
+      assert(capped == uncapped.filter(r => idPair(r) == ((1L, 2L))), s"$name capped: $capped")
+    }
+    // the evaluation harnesses cap their pair universe the same way: 16
+    // pairs (all true at tau 0.2) without the cap, the one rare pair with it
+    def universe(n: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      n.select("n_pairs", "n_true").as[(Long, Long)].collect().toSet
+    for (cap <- Seq(5L, 1000L)) {
+      val expect = if (cap == 5L) Set((1L, 1L)) else Set((16L, 16L))
+      assert(universe(G.minhashScreenEval(docs, "doc_id", "text", maxPostings = cap,
+        maxBandBucket = cap)) == expect, s"minhashScreenEval at cap $cap")
+      assert(universe(G.minhashScreenSweep(docs, "doc_id", "text", maxPostings = cap,
+        maxBandBucket = cap)) == expect, s"minhashScreenSweep at cap $cap")
+    }
+  }
+
   // ---------- editDistanceDedup: parameterized blocking + guard ----------
 
   test("editDistanceDedup finds near-identical heads within a block") {

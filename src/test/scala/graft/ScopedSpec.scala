@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.{Files, LinkOption, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.GraftShims
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** graft.Scoped: where a row's scratch lives, how it is removed, and how a
   * borrowed session conf is given back. */
@@ -37,6 +39,38 @@ class ScopedSpec extends SparkSpec {
     val before = state
     queries.Modern.sqlScripting(spark, sf).collect()
     assert(state == before)
+  }
+
+  test("a memory-sink row run twice in a session gives the same rows and " +
+      "keeps its checkpoint out of java.io.tmpdir") {
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    // a query's start event is posted on its own thread while its checkpoint
+    // exists; a temporary checkpoint is the `temporary-*` dir under tmpdir
+    // whose metadata file names the query's id (other JVMs' dirs do not)
+    def tempCheckpointsOf(id: String): Seq[String] = {
+      val ls = Files.list(tmp)
+      try ls.iterator.asScala.filter(_.getFileName.toString.startsWith("temporary-"))
+        .filter(d => scala.util.Try(new String(Files.readAllBytes(d.resolve("metadata")),
+          "UTF-8").contains(id)).getOrElse(false))
+        .map(_.toString).toList
+      finally ls.close()
+    }
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        seen.addAll(tempCheckpointsOf(e.id.toString).asJava)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    def run(): Seq[String] = SparkEntry.queries("stream_wordcount")(spark, sf)
+      .collect().map(_.toString).toSeq
+    spark.streams.addListener(listener)
+    val (first, second) = try (run(), run()) finally spark.streams.removeListener(listener)
+    assert(first.nonEmpty)
+    assert(second == first, "the second run in the session wrote other rows")
+    assert(seen.isEmpty, s"temporary checkpoints: ${seen.asScala.mkString(", ")}")
+    assert(!Files.exists(Paths.get(Scoped.dir(spark, "graft_stream_memory",
+      "graft_stream_wordcount"))), "the checkpoint outlived its query")
   }
 
   test("Scoped.conf restores a set key and unsets an unset one when body throws") {
