@@ -3,7 +3,7 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Exact
+import graft.{Exact, Tokens}
 import graft.functions.{FixedPointVecSum, MinhashSigs, VectorFunctions}
 
 /** The engine's user-facing API: every operator generalized over
@@ -21,7 +21,10 @@ object Graft {
   // ---------- text ----------
 
   /** Single-space tokenization (the reference's `split(" ")` semantics,
-    * StreamSocket.scala:15) with empty tokens dropped: one row per token. */
+    * StreamSocket.scala:15) with empty tokens dropped: one row per token.
+    * The exploded form of the token rule; `graft.Tokens` holds its
+    * per-document array form and count. This plan (explode, then a
+    * filter) is fully codegen'd, and is the paper's word count. */
   def tokenize(df: DataFrame, textCol: String, out: String = "word"): DataFrame =
     df.select(explode(split(col(textCol), " ", -1)).as(out))
       .filter(length(col(out)) > 0)
@@ -230,8 +233,7 @@ object Graft {
   def spanCorruptionPlan(df: DataFrame, idCol: String, textCol: String,
       everyK: Int = 20, spanLen: Int = 3): DataFrame = {
     graft.functions.VectorFunctions.register(df.sparkSession)
-    df.select(col(idCol), expr(
-        s"filter(split(`$textCol`, ' ', -1), x -> length(x) > 0)").as("__ts"))
+    df.select(col(idCol), expr(Tokens.array(textCol)).as("__ts"))
       .filter(size(col("__ts")) >= 1)
       .withColumn("__n", size(col("__ts")))
       .withColumn("__starts", expr(
@@ -367,7 +369,7 @@ object Graft {
   def lmPerplexity(docs: DataFrame, idCol: String, textCol: String,
       addK: Int = 1): DataFrame = {
     val toks = docs.select(col(idCol),
-      expr(s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)").as("__ts"))
+      expr(Tokens.array(textCol)).as("__ts"))
     val bigrams = toks.filter(size(col("__ts")) >= 2)
       .select(col(idCol), explode(expr(
         """transform(sequence(2, size(__ts)),
@@ -431,8 +433,7 @@ object Graft {
   def dsirModel(docs: DataFrame, textCol: String, isTarget: Column,
       buckets: Int = 256): DataFrame = {
     val toks = docs.select(isTarget.cast("long").as("__t"),
-        explode(expr(s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)"))
-          .as("__tok"))
+        explode(expr(Tokens.array(textCol))).as("__tok"))
       .withColumn("__b", pmod(md5Hash60(col("__tok")), lit(buckets.toLong)))
     val observed = toks.groupBy("__b")
       .agg(sum(col("__t")).as("__ct"), count(lit(1)).as("__cs"))
@@ -466,8 +467,7 @@ object Graft {
   def dsirScore(docs: DataFrame, idCol: String, textCol: String,
       model: DataFrame, buckets: Int = 256): DataFrame =
     docs.select(col(idCol),
-        explode(expr(s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)"))
-          .as("__tok"))
+        explode(expr(Tokens.array(textCol))).as("__tok"))
       .withColumn("__b", pmod(md5Hash60(col("__tok")), lit(buckets.toLong)))
       .join(broadcast(model), "__b")
       .groupBy(col(idCol))
@@ -495,8 +495,7 @@ object Graft {
   def sourceDivergence(docs: DataFrame, textCol: String,
       strataCol: String): DataFrame = {
     val toks = docs.select(col(strataCol).as("__g"),
-      explode(expr(s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)"))
-        .as("__tok"))
+      explode(expr(Tokens.array(textCol))).as("__tok"))
     val cgw = toks.groupBy("__g", "__tok").agg(count(lit(1)).as("__c"))
     val cg = cgw.groupBy("__g").agg(sum("__c").as("__cg"))
     val cw = cgw.groupBy("__tok").agg(sum("__c").as("__cw"))
@@ -525,10 +524,7 @@ object Graft {
   def qualityScore(df: DataFrame, textCol: String, out: String = "quality"): DataFrame = {
     val nTokens = size(split(col(textCol), " ", -1)).cast("double")
     val punct = length(regexp_replace(col(textCol), "[a-z0-9 ]", "")).cast("double")
-    // backticks: textCol is a caller-supplied name spliced into a SQL lambda
-    // (filter() needs expr); without quoting, names with spaces/dashes break
-    val stop = size(expr(
-      s"filter(split(`$textCol`, ' '), t -> t IN ('the','a','of','and','is'))")).cast("double")
+    val stop = expr(Tokens.stopCount(textCol)).cast("double")
     df.withColumn(out,
       least(nTokens / 100.0, lit(1.0)) * 0.5
         + (lit(1.0) - punct / length(col(textCol))) * 0.3
@@ -555,8 +551,7 @@ object Graft {
     val spark = docs.sparkSession
     val w = Option(weights).getOrElse(defaultHashedWeights(spark, buckets))
     val toks = docs
-      .select(col(idCol), explode(expr(
-        s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)")).as("__t"))
+      .select(col(idCol), explode(expr(Tokens.array(textCol))).as("__t"))
       .withColumn("bucket", pmod(md5Hash60(col("__t")), lit(buckets.toLong)))
     toks.join(broadcast(w), "bucket")
       .groupBy(idCol)
@@ -590,8 +585,7 @@ object Graft {
     * with c_ab ≥ `minCount` by (pmi desc, a asc, b asc). */
   def pmiBigrams(docs: DataFrame, textCol: String, minCount: Long = 5L,
       topK: Int = 20): DataFrame = {
-    val toks = docs.select(expr(
-      s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)").as("__ts"))
+    val toks = docs.select(expr(Tokens.array(textCol)).as("__ts"))
     val uni = toks.select(explode(col("__ts")).as("__t"))
       .groupBy("__t").agg(count(lit(1)).as("__c"))
     val total = uni.agg(sum("__c").as("__n"))
@@ -640,8 +634,7 @@ object Graft {
     * Isolated words (no edges) don't participate, as in the paper. */
   def textRank(docs: DataFrame, textCol: String, iters: Int = 5,
       damping: Double = 0.85, topK: Int = 20): DataFrame = {
-    val toks = docs.select(expr(
-      s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)").as("__ts"))
+    val toks = docs.select(expr(Tokens.array(textCol)).as("__ts"))
     val pairs = toks.filter(size(col("__ts")) >= 2)
       .select(explode(expr(
         """transform(sequence(2, size(__ts)), i -> struct(
@@ -1162,8 +1155,7 @@ object Graft {
     // with md5+conv there); after the explode it runs under whole-stage
     // codegen. distinct-on-gram-string, hash once per surviving gram.
     val grams = df
-      .withColumn("__toks", expr(
-        s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)"))
+      .withColumn("__toks", expr(Tokens.array(textCol)))
       .filter(size(col("__toks")) >= n)
       .select(col(idCol), explode(expr(
         s"""array_distinct(transform(sequence(1, size(__toks) - ${n - 1}),
@@ -1205,8 +1197,7 @@ object Graft {
     val n = spanTokens
     // hash after the explode (codegen'd), same as substringOverlapCandidates
     val grams = df
-      .withColumn("__toks", expr(
-        s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)"))
+      .withColumn("__toks", expr(Tokens.array(textCol)))
       .filter(size(col("__toks")) >= n)
       .select(col(idCol), explode(expr(
         s"""array_distinct(transform(sequence(1, size(__toks) - ${n - 1}),
@@ -1251,14 +1242,12 @@ object Graft {
     // cheap aggregations, so checkpointing measured 2× SLOWER (0.51 s →
     // 1.06-1.10 s at sf0.1) than recomputing the codegen'd explodes.
     val toks = df
-      .withColumn("__toks", expr(
-        s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)"))
+      .withColumn("__toks", expr(Tokens.array(textCol)))
       .select(col(idCol), posexplode(col("__toks")).as(Seq("__i", "__tok")))
     // position-grams, NOT distinct: within-doc repetition counts as
     // duplication, exactly as in the paper
     val grams = df
-      .withColumn("__toks", expr(
-        s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)"))
+      .withColumn("__toks", expr(Tokens.array(textCol)))
       .filter(size(col("__toks")) >= n)
       .select(col(idCol), posexplode(expr(
         s"""transform(sequence(1, size(__toks) - ${n - 1}),
@@ -1332,8 +1321,7 @@ object Graft {
       k: Int = 4, w: Int = 5,
       gramHash: String => String = xxhashGramSql): DataFrame = {
     df
-      .withColumn("__ts", expr(
-        s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)"))
+      .withColumn("__ts", expr(Tokens.array(textCol)))
       .filter(size(col("__ts")) >= k)
       .withColumn("__hs", expr(winnowGramHashes(df, k, gramHash)))
       // fewer grams than the window → one window over all of them (the
@@ -1357,8 +1345,7 @@ object Graft {
       textCol: String, k: Int = 4, w: Int = 5,
       gramHash: String => String = xxhashGramSql): DataFrame =
     df
-      .withColumn("__ts", expr(
-        s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)"))
+      .withColumn("__ts", expr(Tokens.array(textCol)))
       .filter(size(col("__ts")) >= k)
       .withColumn("__hs", expr(winnowGramHashes(df, k, gramHash)))
       .select(col(idCol), explode(expr(
@@ -1419,7 +1406,7 @@ object Graft {
     graft.functions.VectorFunctions.register(df.sparkSession)
     df
       .withColumn("__gs", expr(
-        s"gopher_stats(split(`$textCol`, ' ', -1), array('the','a','of','and','is'))"))
+        s"gopher_stats(split(`$textCol`, ' ', -1), array(${Tokens.StopWords}))"))
       .withColumn("n_words", col("__gs.n_words"))
       .filter(col("n_words") >= 1L)
       // mean token length in [3,10] ⇔ 3·n ≤ Σlen ≤ 10·n (integer compare)
@@ -3456,8 +3443,7 @@ object Graft {
       tokensPerShard: Long): DataFrame = {
     require(tokensPerShard > 0, "tokensPerShard must be positive")
     val base = docs.select(col(idCol),
-        expr(s"CAST(size(filter(split(`$textCol`, ' ', -1), " +
-          "x -> length(x) > 0)) AS BIGINT)").as("__nt"),
+        expr(Tokens.count(textCol)).as("__nt"),
         md5(col(idCol).cast("string")).as("__hk"),
         md5Hash60(col(idCol).cast("string")).as("__h"))
       .withColumn("__b", substring(col("__hk"), 1, 1))
@@ -3733,8 +3719,7 @@ object Graft {
     val spark = docs.sparkSession
     val w = defaultHashedWeights(spark, buckets)
     val dom = docs
-      .select(col(domainCol), col(idCol), explode(expr(
-        s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)")).as("__t"))
+      .select(col(domainCol), col(idCol), explode(expr(Tokens.array(textCol))).as("__t"))
       .withColumn("bucket", pmod(md5Hash60(col("__t")), lit(buckets.toLong)))
       .join(broadcast(w), "bucket")
       .groupBy(domainCol)
@@ -3773,9 +3758,7 @@ object Graft {
   def lengthBucketPlan(docs: DataFrame, idCol: String, textCol: String,
       bucketTokens: Int = 64, batchTokens: Int = 16384): DataFrame =
     docs
-      .select(expr(
-        s"size(filter(split(`$textCol`, ' ', -1), t -> length(t) > 0))")
-        .cast("long").as("__nt"))
+      .select(expr(Tokens.count(textCol)).as("__nt"))
       .filter(col("__nt") > 0L)
       // all-integer bucket arithmetic (DIV, never `/` — Column./ is double)
       .withColumn("cap", expr(
@@ -4059,8 +4042,7 @@ object Graft {
       groupCol: String): DataFrame = {
     val t = col(textCol)
     docs.select(col(groupCol),
-        expr(s"CAST(size(filter(split(`$textCol`, ' ', -1), " +
-          "x -> length(x) > 0)) AS BIGINT)").as("__w"),
+        expr(Tokens.count(textCol)).as("__w"),
         greatest(lit(1L),
           (length(t) - length(regexp_replace(t, "[.!?]", ""))).cast("long"))
           .as("__s"),
@@ -4092,8 +4074,7 @@ object Graft {
   def lengthMadOutliers(docs: DataFrame, textCol: String,
       groupCol: String, k: Double = 3.0): DataFrame = {
     val lens = docs.select(col(groupCol),
-      expr(s"CAST(size(filter(split(`$textCol`, ' ', -1), " +
-        "x -> length(x) > 0)) AS BIGINT)").as("__n"))
+      expr(Tokens.count(textCol)).as("__n"))
     val med = lens.groupBy(groupCol)
       .agg(expr("percentile(__n, 0.5D)").as("med"))
     // medians of integer counts land on the exact-half grid, so |n − med|,
@@ -4123,8 +4104,7 @@ object Graft {
   def distinctNgramDiversity(docs: DataFrame, textCol: String,
       groupCol: String, maxN: Int = 3): DataFrame = {
     val toks = docs.select(col(groupCol),
-      expr(s"filter(split(`$textCol`, ' ', -1), x -> length(x) > 0)")
-        .as("__ts"))
+      expr(Tokens.array(textCol)).as("__ts"))
     (1 to maxN).map { n =>
       toks
         .select(col(groupCol), explode(expr(
@@ -4206,9 +4186,7 @@ object Graft {
     // token array hoisted to a column BEFORE the fingerprint pass; the
     // per-doc array_distinct trims repeated grams ahead of the shuffle
     def grams(df: DataFrame, cols: Column*): DataFrame = df
-      .select(cols :+ expr(
-        s"filter(split(`$textCol`, ' ', -1), x -> length(x) > 0)")
-        .as("__ts"): _*)
+      .select(cols :+ expr(Tokens.array(textCol)).as("__ts"): _*)
       .select(cols :+ expr(
         s"array_distinct(ngram_fps(md5h60_array(__ts), $n))").as("__fps"): _*)
       .select(cols :+ explode(col("__fps")).as("__fp"): _*)
@@ -4242,8 +4220,7 @@ object Graft {
     import s.implicits._
     val grid = budgetExponents.toDF("budget_exp")
     val supply = docs.agg(
-      sum(expr(s"CAST(size(filter(split(`$textCol`, ' ', -1), " +
-        "x -> length(x) > 0)) AS BIGINT)")).as("corpus_tokens"))
+      sum(expr(Tokens.count(textCol))).as("corpus_tokens"))
     grid.crossJoin(broadcast(supply))
       .withColumn("n_params", expr(
         s"CAST(floor(sqrt(power(10.0D, budget_exp) / ${6L * tokensPerParam}.0D)) AS BIGINT)"))
@@ -4362,9 +4339,7 @@ object Graft {
   def qualityLengthJoint(docs: DataFrame, textCol: String,
       bins: Int = 10, bucketTokens: Int = 64): DataFrame = {
     val cells = qualityScore(docs.select(col(textCol)), textCol, out = "__q")
-      .withColumn("__nt", expr(
-        s"CAST(size(filter(split(`$textCol`, ' ', -1), " +
-          "x -> length(x) > 0)) AS BIGINT)"))
+      .withColumn("__nt", expr(Tokens.count(textCol)))
       .withColumn("q_bin", Exact.scoreBin(col("__q"), bins))
       .withColumn("len_bucket",
         expr(s"(__nt DIV ${bucketTokens}L) * ${bucketTokens}L"))
@@ -4406,8 +4381,7 @@ object Graft {
       "lexicon terms must be distinct")
     val lex = lexicon.toDF("__term", "__w")
     val toks = docs.select(col(idCol), col(groupCol),
-        expr(s"filter(split(`$textCol`, ' ', -1), x -> length(x) > 0)")
-          .as("__ts"))
+        expr(Tokens.array(textCol)).as("__ts"))
       .select(col(idCol), col(groupCol),
         size(col("__ts")).cast("long").as("__nt"),
         explode_outer(col("__ts")).as("__tok"))
@@ -4562,8 +4536,7 @@ object Graft {
       groupCol: String, reps: Int = 32): DataFrame = {
     require(reps >= 2 && reps <= 256, "reps is a fixed small grid")
     val perDoc = docs.select(col(groupCol), col(idCol),
-      expr(s"CAST(size(filter(split(`$textCol`, ' ', -1), " +
-        "x -> length(x) > 0)) AS BIGINT)").as("__w"))
+      expr(Tokens.count(textCol)).as("__w"))
     val repd = perDoc
       .select(col(groupCol), col(idCol), col("__w"),
         explode(expr(s"sequence(0, ${reps - 1})")).as("__r"))
@@ -4605,9 +4578,7 @@ object Graft {
   def corpusConcentration(docs: DataFrame, textCol: String,
       groupCol: String, gridMaxRows: Int = 1000000): DataFrame = {
     val perSrc = docs
-      .select(col(groupCol), expr(
-        s"CAST(size(filter(split(`$textCol`, ' ', -1), " +
-          "x -> length(x) > 0)) AS BIGINT)").as("__w"))
+      .select(col(groupCol), expr(Tokens.count(textCol)).as("__w"))
       .groupBy(groupCol).agg(sum("__w").as("__t"), count(lit(1)).as("__d"))
     // grid-sized window: rank sources by token mass (ties by name). The
     // window input is the DISTINCT-group grid, not the corpus — and the
@@ -4748,8 +4719,7 @@ object Graft {
   def reservoirKeys(docs: DataFrame, idCol: String,
       textCol: String): DataFrame =
     docs.select(col(idCol).cast("long").as("__id"),
-        expr(s"CAST(size(filter(split(`$textCol`, ' ', -1), " +
-          "x -> length(x) > 0)) AS BIGINT) + 1L").as("__w"))
+        expr(s"${Tokens.count(textCol)} + 1L").as("__w"))
       .withColumn("__u",
         md5Hash60(col("__id").cast("string")).cast("double")
           / lit(1.152921504606846976e18))
@@ -4788,9 +4758,7 @@ object Graft {
   def packingEfficiency(docs: DataFrame, textCol: String,
       lengths: Seq[Int] = Seq(64, 128, 256, 512)): DataFrame = {
     require(lengths.nonEmpty && lengths.forall(_ > 0))
-    val perDoc = docs.select(expr(
-      s"CAST(size(filter(split(`$textCol`, ' ', -1), " +
-        "x -> length(x) > 0)) AS BIGINT)").as("__w"))
+    val perDoc = docs.select(expr(Tokens.count(textCol)).as("__w"))
     perDoc
       .select(col("__w"), explode(expr(
         s"array(${lengths.map(_ + "L").mkString(", ")})")).as("max_len"))
@@ -4866,9 +4834,7 @@ object Graft {
   def negativeSamplingTable(docs: DataFrame, textCol: String,
       k: Int = 64): DataFrame = {
     val vocab = docs
-      .select(explode(expr(
-        s"filter(split(`$textCol`, ' ', -1), x -> length(x) > 0)"))
-        .as("token"))
+      .select(explode(expr(Tokens.array(textCol))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("c"))
       .withColumn("__wq", expr(
         s"""CAST(floor(${Exact.GridDbl} * sqrt(sqrt(
@@ -4931,9 +4897,7 @@ object Graft {
     val s = docs.sparkSession
     import s.implicits._
     val grid = docs
-      .select(col(groupCol).cast("string").as("__g"), expr(
-        s"CAST(size(filter(split(`$textCol`, ' ', -1), " +
-          "x -> length(x) > 0)) AS BIGINT)").as("__w"))
+      .select(col(groupCol).cast("string").as("__g"), expr(Tokens.count(textCol)).as("__w"))
       .groupBy("__g").agg(sum("__w").as("__t"))
       .orderBy(col("__t").desc, col("__g").asc)
       .limit(solverMaxRows + 1)
@@ -5284,8 +5248,7 @@ object Graft {
   def bigramEntropy(docs: DataFrame, textCol: String,
       strataCol: String): DataFrame = {
     val pairs = docs
-      .select(col(strataCol).as("__g"), expr(
-        s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)").as("__t"))
+      .select(col(strataCol).as("__g"), expr(Tokens.array(textCol)).as("__t"))
       .filter(size(col("__t")) >= 2)
       .select(col("__g"), explode(expr(
         "transform(sequence(0, size(__t) - 2), i -> struct(__t[i] AS w1, __t[i + 1] AS w2))"))
@@ -5320,8 +5283,7 @@ object Graft {
   def vocabSizeSweep(docs: DataFrame, textCol: String,
       sizes: Seq[Int] = Seq(1024, 4096, 16384, 65536)): DataFrame = {
     val types = docs
-      .select(explode(expr(
-        s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)")).as("__tok"))
+      .select(explode(expr(Tokens.array(textCol))).as("__tok"))
       .groupBy("__tok").agg(count(lit(1)).as("__c"))
     // count-of-counts: the Zipf-bounded grid everything below runs on
     val cc = types.groupBy("__c").agg(count(lit(1)).as("__n"))
@@ -5521,8 +5483,7 @@ object Graft {
     * screens and the streaming gate: (token) rows, rank by count desc /
     * token asc — deterministic at the boundary frequency. */
   def topVocab(docs: DataFrame, textCol: String, v: Int): DataFrame =
-    docs.select(explode(expr(
-        s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)")).as("__tok"))
+    docs.select(explode(expr(Tokens.array(textCol))).as("__tok"))
       .groupBy("__tok").agg(count(lit(1)).as("__cnt"))
       .orderBy(col("__cnt").desc, col("__tok").asc)
       .limit(v)
@@ -5540,49 +5501,62 @@ object Graft {
     * n_pairs, r1_p6, r1_r6, r1_f6, r2_p6, r2_r6, r2_f6). */
   def rougeOverlap(pairs: DataFrame, idCol: String, candCol: String,
       refCol: String, strataCol: String): DataFrame = {
-    def grams(textCol: String, n: Int, side: String): DataFrame = {
-      val toks = pairs.select(col(idCol).as("__id"), expr(
-        s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)").as("__t"))
-      val g =
-        if (n == 1) toks.select(col("__id"), explode(col("__t")).as("__g"))
-        else toks.filter(size(col("__t")) >= n)
-          .select(col("__id"), explode(expr(
-            s"transform(sequence(0, size(__t) - $n), i -> concat_ws(' ', slice(__t, i + 1, $n)))"))
-            .as("__g"))
-      g.groupBy("__id", "__g").agg(count(lit(1)).as(s"__c$side"))
-    }
-    def sideTotals(n: Int): DataFrame = {
-      val ov = grams(candCol, n, "c").join(grams(refCol, n, "r"),
-          Seq("__id", "__g"))
-        .select(col("__id"),
-          least(col("__cc"), col("__cr")).as("__ov"))
-        .groupBy("__id").agg(sum("__ov").as(s"__ov$n"))
-      val lens = pairs.select(col(idCol).as("__id"),
-        col(strataCol).as("__s"),
-        expr(s"greatest(size(filter(split(`$candCol`, ' ', -1), t -> length(t) > 0)) - ${n - 1}, 0)")
-          .cast("long").as(s"__lc$n"),
-        expr(s"greatest(size(filter(split(`$refCol`, ' ', -1), t -> length(t) > 0)) - ${n - 1}, 0)")
-          .cast("long").as(s"__lr$n"))
-      lens.join(ov, Seq("__id"), "left")
-        .select(col("__id"), col("__s"), col(s"__lc$n"), col(s"__lr$n"),
-          coalesce(col(s"__ov$n"), lit(0L)).as(s"__ov$n"))
-    }
-    val j = sideTotals(1).join(sideTotals(2).drop("__s"), "__id")
-    j.groupBy(col("__s"))
-      .agg(count(lit(1)).as("n_pairs"),
-        sum("__ov1").as("__o1"), sum("__lc1").as("__c1"),
-        sum("__lr1").as("__r1"),
-        sum("__ov2").as("__o2"), sum("__lc2").as("__c2"),
-        sum("__lr2").as("__r2"))
+    def order(n: Int): DataFrame = clippedOverlap(tokenGrams(pairs, idCol),
+      candCol, refCol, n, pairs.select(col(idCol).as("__id"), col(strataCol).as("__s"),
+        tokenGramCount(candCol, n).as(s"__c$n"), tokenGramCount(refCol, n).as(s"__r$n")))
+    def f6(n: Int): Column = round(lit(2.0) * col(s"__O$n").cast("double")
+      / (col(s"__C$n") + col(s"__R$n")).cast("double"), 6)
+    orderSums(order(1).join(order(2).drop("__s"), "__id"), 2)
       .select(col("__s").as(strataCol), col("n_pairs"),
-        round(col("__o1").cast("double") / col("__c1").cast("double"), 6).as("r1_p6"),
-        round(col("__o1").cast("double") / col("__r1").cast("double"), 6).as("r1_r6"),
-        round(lit(2.0) * col("__o1").cast("double")
-          / (col("__c1") + col("__r1")).cast("double"), 6).as("r1_f6"),
-        round(col("__o2").cast("double") / col("__c2").cast("double"), 6).as("r2_p6"),
-        round(col("__o2").cast("double") / col("__r2").cast("double"), 6).as("r2_r6"),
-        round(lit(2.0) * col("__o2").cast("double")
-          / (col("__c2") + col("__r2")).cast("double"), 6).as("r2_f6"))
+        round(col("__O1").cast("double") / col("__C1").cast("double"), 6).as("r1_p6"),
+        round(col("__O1").cast("double") / col("__R1").cast("double"), 6).as("r1_r6"),
+        f6(1).as("r1_f6"),
+        round(col("__O2").cast("double") / col("__C2").cast("double"), 6).as("r2_p6"),
+        round(col("__O2").cast("double") / col("__R2").cast("double"), 6).as("r2_r6"),
+        f6(2).as("r2_f6"))
+  }
+
+  /** One side's (`__id`, `__g`) gram rows for the token n-gram metrics: each
+    * run of n consecutive tokens of `textCol`, joined by single spaces (the
+    * tokens themselves at n = 1). */
+  private def tokenGrams(pairs: DataFrame, idCol: String)(textCol: String,
+      n: Int): DataFrame = {
+    val toks = pairs.select(col(idCol).as("__id"), expr(Tokens.array(textCol)).as("__t"))
+    if (n == 1) toks.select(col("__id"), explode(col("__t")).as("__g"))
+    else toks.filter(size(col("__t")) >= n)
+      .select(col("__id"), explode(expr(
+        s"transform(sequence(0, size(__t) - $n), i -> concat_ws(' ', slice(__t, i + 1, $n)))"))
+        .as("__g"))
+  }
+
+  /** The number of order-n token grams of `textCol`, as BIGINT. */
+  private def tokenGramCount(textCol: String, n: Int): Column =
+    expr(s"greatest(size(${Tokens.array(textCol)}) - ${n - 1}, 0)").cast("long")
+
+  /** Per-pair clipped n-gram overlap, the one body of [[rougeOverlap]],
+    * [[bleuCorpus]] and [[chrfScore]]. `grams(text, n)` gives a side's
+    * (`__id`, `__g`) rows (token or character grams). Each side collapses to
+    * (pair, gram, count) in one pass, the sides inner-join on (pair, gram),
+    * and Σ_g min(c_cand, c_ref) is summed per pair as `__o<n>`, an exact
+    * integer; the per-pair gram `totals` (keyed by `__id`) then left-join it,
+    * with 0 for a pair that shares no gram. Linear in gram volume. */
+  private def clippedOverlap(grams: (String, Int) => DataFrame, candCol: String,
+      refCol: String, n: Int, totals: DataFrame): DataFrame = {
+    def counted(textCol: String, c: String): DataFrame =
+      grams(textCol, n).groupBy("__id", "__g").agg(count(lit(1)).as(c))
+    val ov = counted(candCol, "__cc").join(counted(refCol, "__cr"), Seq("__id", "__g"))
+      .groupBy("__id").agg(sum(least(col("__cc"), col("__cr"))).as(s"__o$n"))
+    totals.join(ov, Seq("__id"), "left").na.fill(0L, Seq(s"__o$n"))
+  }
+
+  /** Per stratum `__s`: `n_pairs` and, for n = 1..maxN, the summed clipped
+    * overlap `__O<n>`, candidate grams `__C<n>` and reference grams `__R<n>`
+    * of the per-pair columns `__o<n>`, `__c<n>`, `__r<n>`. */
+  private def orderSums(j: DataFrame, maxN: Int): DataFrame = {
+    val aggs = count(lit(1)).as("n_pairs") +: (1 to maxN).flatMap(n => Seq(
+      sum(s"__o$n").as(s"__O$n"), sum(s"__c$n").as(s"__C$n"),
+      sum(s"__r$n").as(s"__R$n")))
+    j.groupBy(col("__s")).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Corpus BLEU (Papineni '02) between paired candidate/reference texts,
@@ -5602,36 +5576,13 @@ object Graft {
     * p2_6, p3_6, p4_6, bp6, bleu6). */
   def bleuCorpus(pairs: DataFrame, idCol: String, candCol: String,
       refCol: String, strataCol: String): DataFrame = {
-    def toks(textCol: String): DataFrame = pairs.select(col(idCol).as("__id"),
-      expr(s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)").as("__t"))
-    // (pair, gram, count) for one side at one order; linear in token volume
-    def grams(textCol: String, n: Int, side: String): DataFrame = {
-      val t = toks(textCol)
-      val g =
-        if (n == 1) t.select(col("__id"), explode(col("__t")).as("__g"))
-        else t.filter(size(col("__t")) >= n)
-          .select(col("__id"), explode(expr(
-            s"transform(sequence(0, size(__t) - $n), i -> concat_ws(' ', slice(__t, i + 1, $n)))"))
-            .as("__g"))
-      g.groupBy("__id", "__g").agg(count(lit(1)).as(s"__c$side"))
-    }
     // per-pair clipped overlap and candidate gram total at one order
-    def order(n: Int): DataFrame = {
-      val ov = grams(candCol, n, "c").join(grams(refCol, n, "r"),
-          Seq("__id", "__g"))
-        .groupBy("__id")
-        .agg(sum(least(col("__cc"), col("__cr"))).as(s"__o$n"))
-      pairs.select(col(idCol).as("__id"),
-        expr(s"greatest(size(filter(split(`$candCol`, ' ', -1), t -> length(t) > 0)) - ${n - 1}, 0)")
-          .cast("long").as(s"__c$n"))
-        .join(ov, Seq("__id"), "left")
-        .na.fill(0L, Seq(s"__o$n"))
-    }
+    def order(n: Int): DataFrame = clippedOverlap(tokenGrams(pairs, idCol),
+      candCol, refCol, n,
+      pairs.select(col(idCol).as("__id"), tokenGramCount(candCol, n).as(s"__c$n")))
     val lens = pairs.select(col(idCol).as("__id"), col(strataCol).as("__s"),
-      expr(s"size(filter(split(`$candCol`, ' ', -1), t -> length(t) > 0))")
-        .cast("long").as("__lc"),
-      expr(s"size(filter(split(`$refCol`, ' ', -1), t -> length(t) > 0))")
-        .cast("long").as("__lr"))
+      expr(Tokens.count(candCol)).as("__lc"),
+      expr(Tokens.count(refCol)).as("__lr"))
     val j = (1 to 4).map(order).foldLeft(lens)((acc, o) => acc.join(o, "__id"))
     val g = j.groupBy(col("__s"))
       .agg(count(lit(1)).as("n_pairs"),
@@ -5677,32 +5628,20 @@ object Graft {
       refCol: String, strataCol: String, maxN: Int = 3): DataFrame = {
     def chars(textCol: String): Column =
       regexp_replace(col(textCol), " ", "")
-    def grams(textCol: String, n: Int, side: String): DataFrame =
+    def grams(textCol: String, n: Int): DataFrame =
       pairs.select(col(idCol).as("__id"), chars(textCol).as("__s"))
         .filter(length(col("__s")) >= n)
         .select(col("__id"), explode(expr(
           s"transform(sequence(1, length(__s) - ${n - 1}), i -> substring(__s, i, $n))"))
           .as("__g"))
-        .groupBy("__id", "__g").agg(count(lit(1)).as(s"__c$side"))
-    def order(n: Int): DataFrame = {
-      val ov = grams(candCol, n, "c").join(grams(refCol, n, "r"),
-          Seq("__id", "__g"))
-        .groupBy("__id")
-        .agg(sum(least(col("__cc"), col("__cr"))).as(s"__o$n"))
+    def total(textCol: String, n: Int): Column =
+      greatest(length(chars(textCol)) - lit(n - 1), lit(0)).cast("long")
+    def order(n: Int): DataFrame = clippedOverlap(grams, candCol, refCol, n,
       pairs.select(col(idCol).as("__id"),
-        greatest(length(chars(candCol)) - lit(n - 1), lit(0))
-          .cast("long").as(s"__c$n"),
-        greatest(length(chars(refCol)) - lit(n - 1), lit(0))
-          .cast("long").as(s"__r$n"))
-        .join(ov, Seq("__id"), "left")
-        .na.fill(0L, Seq(s"__o$n"))
-    }
+        total(candCol, n).as(s"__c$n"), total(refCol, n).as(s"__r$n")))
     val base = pairs.select(col(idCol).as("__id"), col(strataCol).as("__s"))
     val j = (1 to maxN).map(order).foldLeft(base)((acc, o) => acc.join(o, "__id"))
-    val aggs = count(lit(1)).as("n_pairs") +: (1 to maxN).flatMap(n => Seq(
-      sum(s"__o$n").as(s"__O$n"), sum(s"__c$n").as(s"__C$n"),
-      sum(s"__r$n").as(s"__R$n")))
-    val g = j.groupBy(col("__s")).agg(aggs.head, aggs.tail: _*)
+    val g = orderSums(j, maxN)
     // arithmetic mean over orders of the per-order integer-ratio P and R;
     // the fold fixes the addition order left-to-right for both engines
     def mean(num: Int => Column, den: Int => Column): Column =
@@ -5977,7 +5916,7 @@ object Graft {
   def datasetCard(docs: DataFrame, idCol: String, textCol: String,
       langCol: String, strataCol: String): DataFrame = {
     val base = docs
-      .withColumn("__t", expr(s"filter(split(`$textCol`, ' ', -1), t -> length(t) > 0)"))
+      .withColumn("__t", expr(Tokens.array(textCol)))
       .select(col(strataCol).as("__s"), col(langCol).as("__l"),
         md5(col(textCol)).as("__fp"),
         expr("size(__t)").cast("long").as("__ntok"),

@@ -181,16 +181,28 @@ class JdbcKeyValueStore(url: String, table: String, orderCol: String)
 }
 
 object KeyValueSink {
-  /** Attaches a keyed-upsert foreachBatch sink to a streaming DataFrame. */
+  /** The query's checkpoint: under `graft.Scoped.dir`, not in a
+    * `temporary-*` dir under java.io.tmpdir that Spark keeps whenever the
+    * query fails. */
+  def checkpoint(s: SparkSession, queryName: String): String =
+    graft.Scoped.dir(s, "graft_kv_sink", queryName)
+
+  /** Attaches a keyed-upsert foreachBatch sink to a streaming DataFrame. Its
+    * [[checkpoint]] is removed before the start, so each start reads the
+    * stream from its beginning; the caller removes it after the stop. */
   def start(stream: DataFrame, store: KeyValueStore, keyCol: String,
-      queryName: String): StreamingQuery =
+      queryName: String): StreamingQuery = {
+    val ckpt = checkpoint(stream.sparkSession, queryName)
+    graft.Scoped.rm(ckpt)
     stream.writeStream
       .queryName(queryName)
       .outputMode("update")
+      .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         store.upsert(batch.toDF(), keyCol)
       }
       .start()
+  }
 }
 
 /** Kafka-connector stand-in (D1): the source format is a parameter; offline

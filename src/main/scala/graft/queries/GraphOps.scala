@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Tables, Tokens}
 
 /** Graph analytics over corpus-derived graphs (extension surface, round 9):
   * the word-adjacency graph — nodes are words, edges carry adjacent-position
@@ -35,7 +35,7 @@ object GraphOps {
     * integer ratio4 grid. */
   def graphTriangles(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d).filter(col("lang") === "en")
-      .select(expr("filter(split(text, ' ', -1), t -> length(t) > 0)").as("__ts"))
+      .select(expr(Tokens.array("text")).as("__ts"))
     val weighted = toks.filter(size(col("__ts")) >= 2)
       .select(explode(expr(
         """transform(sequence(2, size(__ts)), i -> struct(

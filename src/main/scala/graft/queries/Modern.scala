@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{expr, sum}
-import graft.Tables
+import graft.{Tables, Tokens}
 
 /** Modern-SQL surface (Spark 4.x): semi-structured VARIANT, recursive CTEs,
   * ordered-set string aggregation, mode/median, XML and AES round-trips,
@@ -311,7 +311,7 @@ object Modern {
     // sf0.1 → 0.9 s materialized); localCheckpoint pins the ~10³-row
     // histogram, so each WHILE step is a grid-only job
     Tables.documents(s, d)
-      .withColumn("__t", expr("filter(split(text, ' ', -1), t -> length(t) > 0)"))
+      .withColumn("__t", expr(Tokens.array("text")))
       .select(expr("(1000000L * size(array_distinct(__t))) div size(__t)").as("score"),
         expr("size(__t)").cast("long").as("ntok"))
       .groupBy("score").agg(sum("ntok").as("tokens"))

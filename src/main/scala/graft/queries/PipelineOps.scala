@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Exact, Tables}
+import graft.{Exact, Tables, Tokens}
 
 /** Round-4 pipeline operators: the cross-document / cross-run machinery a
   * training-data pipeline runs AFTER the per-document scoring and candidate
@@ -1140,7 +1140,7 @@ object PipelineOps {
     * an EQUI join on doc_id+1, never a window over documents. */
   def preferenceStats(s: SparkSession, d: String): DataFrame = {
     val scored = Tables.documents(s, d)
-      .withColumn("__t", expr("filter(split(text, ' ', -1), t -> length(t) > 0)"))
+      .withColumn("__t", expr(Tokens.array("text")))
       .select(col("doc_id"), col("source"), col("n_chars"),
         expr("(1000000L * size(array_distinct(__t))) div size(__t)").as("score"))
     val a = scored.filter(col("doc_id") % 2 === 0)
@@ -1168,7 +1168,7 @@ object PipelineOps {
     * token share, ends-on-assistant rate per source. */
   def dialogStats(s: SparkSession, d: String): DataFrame = {
     val dialogs = Tables.documents(s, d)
-      .withColumn("__t", expr("filter(split(text, ' ', -1), t -> length(t) > 0)"))
+      .withColumn("__t", expr(Tokens.array("text")))
       .withColumn("__nt", expr("CAST(ceil(size(__t) / 8.0) AS INT)"))
       .select(col("source"),
         to_json(expr("""transform(sequence(1, __nt),
@@ -1192,7 +1192,7 @@ object PipelineOps {
     * integer uniqueness score beside the stored n_chars. */
   private def uniqScored(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .withColumn("__t", expr("filter(split(text, ' ', -1), t -> length(t) > 0)"))
+      .withColumn("__t", expr(Tokens.array("text")))
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
         expr("(1000000L * size(array_distinct(__t))) div size(__t)").as("score"))
 

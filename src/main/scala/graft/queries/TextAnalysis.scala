@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Exact, Tables}
+import graft.{Exact, Tables, Tokens}
 
 /** Text-analysis operators for an LLM-training-data pipeline (driver-mandated
   * extension surface, SURVEY.md §2.C): per-corpus stats, token counting,
@@ -104,8 +104,7 @@ object TextAnalysis {
     * the end), so the value hash-matches cross-engine. */
   def tokenEntropy(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .withColumn("__toks", expr(
-        "filter(split(text, ' ', -1), t -> length(t) > 0)"))
+      .withColumn("__toks", expr(Tokens.array("text")))
       .filter(size(col("__toks")) > 0)
       .withColumn("__n", size(col("__toks")).cast("long"))
       .withColumn("__hq", expr(
@@ -129,12 +128,11 @@ object TextAnalysis {
     * n-gram profiles; the operator shape (per-row scoring → argmax CASE) is
     * identical and embarrassingly parallel. */
   def langId(s: SparkSession, d: String): DataFrame = {
-    val score = (langTokens: String) =>
-      size(expr(s"filter(split(text, ' '), t -> t IN ($langTokens))"))
+    val score = (langTokens: String) => expr(Tokens.stopCount("text", langTokens))
     Tables.documents(s, d)
       .select(
         col("doc_id"), col("lang").as("labeled_lang"),
-        score("'the','a','of','and','is'").as("score_en"),
+        score(Tokens.StopWords).as("score_en"),
         score("'der','die','das','und','ist'").as("score_de"),
         score("'le','la','et','les','est'").as("score_fr"),
         score("'el','los','las','es','y'").as("score_es"))
@@ -151,7 +149,7 @@ object TextAnalysis {
   def qualityScore(s: SparkSession, d: String): DataFrame = {
     val nTokens = size(tokens).cast("double")
     val punct = length(regexp_replace(col("text"), "[a-z0-9 ]", "")).cast("double")
-    val stop = size(expr("filter(split(text, ' '), t -> t IN ('the','a','of','and','is'))")).cast("double")
+    val stop = expr(Tokens.stopCount("text")).cast("double")
     // the combined score comes from the ONE formula in Graft.qualityScore
     // (pipeline_clean_corpus thresholds the same column); only the display
     // ratios are computed locally
@@ -788,7 +786,7 @@ object TextAnalysis {
   def bleuCorpus(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).filter(col("doc_id") % 17 =!= 3)
     val pairs = docs
-      .withColumn("__t", expr("filter(split(text, ' ', -1), t -> length(t) > 0)"))
+      .withColumn("__t", expr(Tokens.array("text")))
       .withColumn("__k", expr("greatest((size(__t) * 4) div 5, 1L)"))
       .withColumn("__ct", when(col("doc_id") % 3 === 0,
         reverse(expr("slice(__t, 1, __k)"))).otherwise(expr("slice(__t, 1, __k)")))
@@ -852,7 +850,7 @@ object TextAnalysis {
     // shuffle; the only exchange in the whole plan is the (lang, score)
     // AUC grid
     val per = Tables.documents(s, d)
-      .withColumn("__t", expr("filter(split(text, ' ', -1), t -> length(t) > 0)"))
+      .withColumn("__t", expr(Tokens.array("text")))
       .select(col("lang"),
         expr("size(__t)").cast("long").as("__tot"),
         expr("size(array_distinct(__t))").cast("long").as("__dist"),

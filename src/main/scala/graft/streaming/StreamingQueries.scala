@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
-import graft.{Exact, Scoped}
+import graft.{Exact, Scoped, Tokens}
 
 /** Per-key running count+sum on the Spark 4.x transformWithState API — the
   * reference's I6 rolling keyed aggregate as typed arbitrary state, emitting a
@@ -467,8 +467,7 @@ object StreamingQueries {
       graft.Tables.documents(s, d).select(col("text")), "text", 4096)
     val toks = readStreamTable(s, d, "documents")
       .select(col("doc_id"), col("source"),
-        explode(expr("filter(split(text, ' ', -1), t -> length(t) > 0)"))
-          .as("__tok"))
+        explode(expr(Tokens.array("text"))).as("__tok"))
     val perDoc = toks.join(broadcast(vocab), Seq("__tok"), "left")
       .groupBy("doc_id", "source")
       .agg(count(lit(1)).as("n_tokens"),
@@ -731,11 +730,12 @@ object StreamingQueries {
     val agg = readStreamTable(s, d, "events")
       .groupBy("user_id")
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total"))
-    capShuffle(s, 4) {
-      val q = graft.connectors.KeyValueSink.start(agg, store, "user_id",
-        "graft_stream_kv_upsert")
+    val sink = graft.connectors.KeyValueSink
+    val name = "graft_stream_kv_upsert"
+    try capShuffle(s, 4) {
+      val q = sink.start(agg, store, "user_id", name)
       try q.processAllAvailable() finally q.stop()
-    }
+    } finally Scoped.rm(sink.checkpoint(s, name))
     store.snapshot(s).orderBy("user_id")
   }
 
@@ -1353,7 +1353,7 @@ object StreamingQueries {
     * pinned identical to skyline_select and shares its oracle verbatim. */
   def streamSkyline(s: SparkSession, d: String): DataFrame = {
     val docs = readStreamTable(s, d, "documents")
-      .withColumn("__t", expr("filter(split(text, ' ', -1), t -> length(t) > 0)"))
+      .withColumn("__t", expr(Tokens.array("text")))
       .select(col("source").as("__s"), col("doc_id").as("__id"),
         col("n_chars").cast("long").as("__y"),
         expr("(1000000L * size(array_distinct(__t))) div size(__t)").as("__x"))

@@ -114,6 +114,55 @@ class ExactSpec extends SparkSpec {
     }
   }
 
+  test("the token array and count are spelled only in graft/Tokens.scala") {
+    val hits = copiesOutsideExact("""filter\(split\(.*' ', -1\)""".r,
+      allowed = Set("graft/Tokens.scala", "graft/SparkEntry.scala"))
+    assert(hits.isEmpty, hits.mkString(s"\n${hits.size} copies:\n", "\n", ""))
+  }
+
+  test("the stop list and the clipped-overlap body are each spelled once") {
+    val rules = Seq(
+      "stop list" -> """'the','a','of','and','is'""".r,
+      "clipped overlap" -> """least\(col\("__cc"\), col\("__cr"\)\)""".r)
+    for ((what, rule) <- rules) {
+      val hits = copiesOutsideExact(rule, allowed = Set("graft/SparkEntry.scala"))
+      assert(hits.size == 1, hits.mkString(s"\n$what: ${hits.size} copies:\n", "\n", ""))
+    }
+  }
+
+  test("Tokens.array and Tokens.count equal split(\" \", -1) without empty tokens") {
+    // pieces that make leading, trailing and repeated spaces
+    val piece = Gen.oneOf(" ", "  ", "a", "bc", "the", "x\ty", "é")
+    val texts = Seq("", " ", "   ", "a", " a", "a ", "a  b", "  a b  ") ++
+      Gen.listOfN(500, Gen.listOf(piece).map(_.mkString))
+        .apply(Gen.Parameters.default, Seed(11L)).get
+    val got = texts.toDF("s")
+      .selectExpr("s", Tokens.array("s"), Tokens.count("s"))
+      .as[(String, Seq[String], Long)].collect()
+    assert(got.length == texts.size)
+    got.foreach { case (text, toks, n) =>
+      val model = text.split(" ", -1).filter(_.nonEmpty).toSeq
+      assert(toks == model, s"Tokens.array(\"$text\") = $toks, model $model")
+      assert(n == model.size.toLong, s"Tokens.count(\"$text\") = $n")
+    }
+  }
+
+  test("Tokens.count equals Graft.tokenize's rows per document on documents") {
+    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+    // tag every maximal non-space run with its doc id: a token stays empty
+    // or non-empty as it was, so tokenize's rows can be counted per doc
+    val tagged = docs.select(regexp_replace(col("text"), lit("([^ ]+)"),
+      concat(lit("$1\u0001"), col("doc_id").cast("string"))).as("text"))
+    val exploded = graft.api.Graft.tokenize(tagged, "text")
+      .groupBy(substring_index(col("word"), "\u0001", -1).cast("long").as("doc_id"))
+      .agg(count(lit(1)).as("rows"))
+    val diff = docs.select(col("doc_id"), expr(Tokens.count("text")).as("n"))
+      .join(exploded, Seq("doc_id"), "left")
+      .filter(col("n") =!= coalesce(col("rows"), lit(0L)))
+    assert(docs.count() > 0)
+    assert(diff.count() == 0L, diff.take(5).mkString("; "))
+  }
+
   test("onGrid, gridMean4 and scoreBin equal their exact models") {
     val rnd = new scala.util.Random(17L)
     val xs = Seq(0.0, 1.0, -1.0, 0.5, -0.3, 1.0 / 3.0) ++

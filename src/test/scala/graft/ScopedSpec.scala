@@ -41,12 +41,13 @@ class ScopedSpec extends SparkSpec {
     assert(state == before)
   }
 
-  test("a memory-sink row run twice in a session gives the same rows and " +
-      "keeps its checkpoint out of java.io.tmpdir") {
+  /** Runs registry row `row` twice in the session; returns both results and
+    * the temporary checkpoints seen while its queries ran. A query's start
+    * event is posted on its own thread while its checkpoint exists; a
+    * temporary checkpoint is the `temporary-*` dir under java.io.tmpdir
+    * whose metadata file names the query's id (other JVMs' dirs do not). */
+  private def runTwice(row: String): (Seq[String], Seq[String], Set[String]) = {
     val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
-    // a query's start event is posted on its own thread while its checkpoint
-    // exists; a temporary checkpoint is the `temporary-*` dir under tmpdir
-    // whose metadata file names the query's id (other JVMs' dirs do not)
     def tempCheckpointsOf(id: String): Seq[String] = {
       val ls = Files.list(tmp)
       try ls.iterator.asScala.filter(_.getFileName.toString.startsWith("temporary-"))
@@ -62,15 +63,31 @@ class ScopedSpec extends SparkSpec {
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
-    def run(): Seq[String] = SparkEntry.queries("stream_wordcount")(spark, sf)
+    def run(): Seq[String] = SparkEntry.queries(row)(spark, sf)
       .collect().map(_.toString).toSeq
     spark.streams.addListener(listener)
     val (first, second) = try (run(), run()) finally spark.streams.removeListener(listener)
+    (first, second, seen.asScala.toSet)
+  }
+
+  test("a memory-sink row run twice in a session gives the same rows and " +
+      "keeps its checkpoint out of java.io.tmpdir") {
+    val (first, second, seen) = runTwice("stream_wordcount")
     assert(first.nonEmpty)
     assert(second == first, "the second run in the session wrote other rows")
-    assert(seen.isEmpty, s"temporary checkpoints: ${seen.asScala.mkString(", ")}")
+    assert(seen.isEmpty, s"temporary checkpoints: ${seen.mkString(", ")}")
     assert(!Files.exists(Paths.get(Scoped.dir(spark, "graft_stream_memory",
       "graft_stream_wordcount"))), "the checkpoint outlived its query")
+  }
+
+  test("stream_kv_upsert run twice in a session gives the same snapshot and " +
+      "keeps its checkpoint out of java.io.tmpdir") {
+    val (first, second, seen) = runTwice("stream_kv_upsert")
+    assert(first.nonEmpty)
+    assert(second == first, "the second run in the session gave another snapshot")
+    assert(seen.isEmpty, s"temporary checkpoints: ${seen.mkString(", ")}")
+    assert(!Files.exists(Paths.get(connectors.KeyValueSink.checkpoint(spark,
+      "graft_stream_kv_upsert"))), "the checkpoint outlived its query")
   }
 
   test("Scoped.conf restores a set key and unsets an unset one when body throws") {
