@@ -6,8 +6,8 @@ import java.nio.file.attribute.BasicFileAttributes
 import org.apache.spark.sql.{GraftShims, SparkSession}
 
 /** Everything a registry row borrows from its session and must give back:
-  * scratch directories (where they live and how they are removed) and
-  * session conf overrides. */
+  * scratch directories (where they live, how they are removed, and how a
+  * build-once artifact in one is committed) and session conf overrides. */
 private[graft] object Scoped {
   private val cleanupRoots = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -29,6 +29,32 @@ private[graft] object Scoped {
     val pathHash = java.security.MessageDigest.getInstance("MD5")
       .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
     s"$root/${d.replaceAll("[^A-Za-z0-9.]", "_")}_$pathHash"
+  }
+
+  /** The commit marker `once` writes into an artifact directory. */
+  val built = "_BUILT"
+
+  private val buildLock = new Object
+
+  /** Build-once artifact `dir(s, name, d)`: state a registry row trains once
+    * per (session, dataset) and then serves at rest. Under one JVM lock
+    * (other sessions never share the path, see `dir`), a directory without
+    * the `built` marker is removed, `build` fills it, and the marker is
+    * written only after `build` returns. A build that throws or is cut off
+    * leaves no marker, so the next call starts again from an empty
+    * directory and a torn artifact is never served. Returns the directory. */
+  def once(s: SparkSession, name: String, d: String)(build: String => Unit): String = {
+    val path = dir(s, name, d)
+    buildLock.synchronized {
+      val marker = Paths.get(path, built)
+      if (!Files.exists(marker)) {
+        rm(path)
+        Files.createDirectories(Paths.get(path))
+        build(path)
+        Files.createFile(marker)
+      }
+    }
+    path
   }
 
   /** Recursive delete that never follows symlinks: a link is removed, its

@@ -1,5 +1,8 @@
 package graft.queries
 
+import java.io.IOException
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -178,6 +181,25 @@ object Dedup {
       .orderBy("id_a", "id_b")
   }
 
+  /** Train-once build of the at-rest md5-MinHash SIGNATURE TABLE for
+    * (session, dataset) — `ensurePersistedIvf`'s keying pattern applied to
+    * the dedup side (VERDICT r11 tasks 4/5): 32-hash md5Hash60 signatures
+    * for EVERY document, computed ONCE per session per dataset and persisted;
+    * the incremental/fold-in lifecycle queries then source their index
+    * generations as pushdown-pruned filters of this one artifact instead of
+    * each re-running the shingle→minhash pass over 80–90% of the corpus.
+    * Committed by `Scoped.once` (a crash mid-write can never serve a torn
+    * table). Signatures are integers, so the parquet round trip is
+    * value-exact and every consumer's oracle is unchanged. */
+  private[graft] def ensureSignatureTable(s: SparkSession, d: String): String =
+    graft.Scoped.once(s, "graft_minhash_sigs", d) { dir =>
+      graft.api.Graft.minhashSignatures(
+          Tables.documents(s, d).select(col("doc_id"), col("text")),
+          "doc_id", "text", numHashes = 32,
+          baseHash = graft.api.Graft.md5Hash60)
+        .write.parquet(dir + "/sigs")
+    } + "/sigs"
+
   /** INCREMENTAL MinHash dedup (Graft.minhashCandidatesAgainst): the daily-
     * increment shape — documents with doc_id ≡ 9 (mod 10) play the NEW batch,
     * the rest the existing INDEX, and the banded-LSH join runs new × index
@@ -196,38 +218,6 @@ object Dedup {
     * clobber) and cleaned at JVM exit. Signatures are integers (md5Hash60
     * minima) so the parquet round-trip is value-exact → the oracle is
     * unchanged and stays green. */
-  /** Train-once build of the at-rest md5-MinHash SIGNATURE TABLE for
-    * (session, dataset) — `ensurePersistedIvf`'s keying pattern applied to
-    * the dedup side (VERDICT r11 tasks 4/5): 32-hash md5Hash60 signatures
-    * for EVERY document, computed ONCE per session per dataset and persisted;
-    * the incremental/fold-in lifecycle queries then source their index
-    * generations as pushdown-pruned filters of this one artifact instead of
-    * each re-running the shingle→minhash pass over 80–90% of the corpus.
-    * `_SUCCESS`-guarded like the IVF index (a crash mid-write can never
-    * serve a torn table). Signatures are integers, so the parquet round
-    * trip is value-exact and every consumer's oracle is unchanged. */
-  private[graft] def ensureSignatureTable(s: SparkSession, d: String): String =
-    // JVM-level lock: the exists→write guard alone is check-then-act — two
-    // session threads racing it would run overlapping overwrite jobs into
-    // the same path (the second deleting files the first just committed).
-    // Cross-SESSION writers are already isolated by Scoped.dir's
-    // application-id scoping; this lock closes the same-session window.
-    buildLock.synchronized {
-      val path = graft.Scoped.dir(s, "graft_minhash_sigs", d) + "/sigs"
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS"))) {
-        graft.api.Graft.minhashSignatures(
-            Tables.documents(s, d).select(col("doc_id"), col("text")),
-            "doc_id", "text", numHashes = 32,
-            baseHash = graft.api.Graft.md5Hash60)
-          .write.mode("overwrite").parquet(path)
-      }
-      path
-    }
-
-  private val buildLock = new Object
-
   def dedupIncremental(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     // The at-rest index IS the shared signature artifact, filter-pruned to
@@ -253,12 +243,12 @@ object Dedup {
     * (doc_id % 10 ∈ 0..7) is persisted; the first increment (% 10 = 8) is
     * folded in as an anti-join append — only ids not already present are
     * written, which is "dedup on doc id" done incrementally (the new batch
-    * is the small side; no index rewrite, no index self-join); a marker
-    * file commits the fold (append jobs rewrite _SUCCESS, so the marker —
-    * written only after the append returns — is the crash-safe generation
-    * boundary: a crash mid-fold rebuilds from scratch instead of serving a
-    * half-folded index). The second increment (% 10 = 9) then screens
-    * against the FOLDED index read back from parquet. Oracle: the screen
+    * is the small side; no index rewrite, no index self-join); `Scoped.once`
+    * commits the fold (its marker, written only after the append returns,
+    * is the crash-safe generation boundary: a crash mid-fold rebuilds from
+    * scratch instead of serving a half-folded index). The second increment
+    * (% 10 = 9) then screens against the FOLDED index read back from
+    * parquet. Oracle: the screen
     * over the folded two-generation index must equal a from-scratch build
     * over all non-batch docs — dedup_incremental's oracle verbatim. */
   def dedupIndexFoldin(s: SparkSession, d: String): DataFrame = {
@@ -273,42 +263,34 @@ object Dedup {
     // Scoped.dir carries the raw-path md5 disambiguation — without it,
     // /data/sf1 and /data_sf1 sanitize to one key and the second dataset
     // silently screens against the first one's fold-in index
-    val base = graft.Scoped.dir(s, "graft_minhash_foldin", d)
-    val indexPath = base + "/index"
-    val marker = new org.apache.hadoop.fs.Path(base, "_FOLDIN_DONE")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
-      fs.delete(new org.apache.hadoop.fs.Path(indexPath), true)
+    val indexPath = graft.Scoped.once(s, "graft_minhash_foldin", d) { base =>
+      val indexPath = base + "/index"
       // generation 0: initial index
-      storedSigs().filter(col("doc_id") % 10 <= 7)
-        .write.mode("overwrite").parquet(indexPath)
+      storedSigs().filter(col("doc_id") % 10 <= 7).write.parquet(indexPath)
       // generation 1: fold in the screened batch — anti-join against the
       // index's own id column keeps the append id-unique without rewriting
       // the index. The delta is STAGED and its files moved in (ADVICE r11):
       // a direct append would make one job read and write indexPath
       // simultaneously — undefined in Spark, working only because the file
-      // listing snapshots at read time. Staging also leaves generation-0's
-      // _SUCCESS untouched; the fold is committed by the marker alone.
+      // listing snapshots at read time.
       val staging = base + "/staging"
       storedSigs().filter(col("doc_id") % 10 === 8)
         .join(s.read.parquet(indexPath).select("doc_id"), Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(staging)
-      val idx = new org.apache.hadoop.fs.Path(indexPath)
-      fs.listStatus(new org.apache.hadoop.fs.Path(staging))
-        .filter(_.getPath.getName.endsWith(".parquet"))
+        .write.parquet(staging)
+      val ls = Files.list(Paths.get(staging))
+      try ls.iterator.asScala.filter(_.getFileName.toString.endsWith(".parquet"))
         .foreach { f =>
-          val dest = new org.apache.hadoop.fs.Path(idx, f.getPath.getName)
-          // rename reports failure by RETURNING false on several
-          // FileSystems (collision, cross-device, object-store connectors)
-          // — ignoring it would commit the marker over a half-folded index
-          // and generation-1 near-dups would silently never be flagged
-          if (!fs.rename(f.getPath, dest))
-            throw new java.io.IOException(
-              s"fold-in staging move failed: ${f.getPath} -> $dest")
+          val dest = Paths.get(indexPath).resolve(f.getFileName)
+          // a failed move (collision, cross-device) must fail the build:
+          // committing the marker over a half-folded index would mean
+          // generation-1 near-dups are silently never flagged
+          try Files.move(f, dest)
+          catch { case e: IOException =>
+            throw new IOException(s"fold-in staging move failed: $f -> $dest", e) }
         }
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-      fs.create(marker, true).close()
-    }
+      finally ls.close()
+      graft.Scoped.rm(staging)
+    } + "/index"
     graft.api.Graft.minhashCandidatesAgainst(
         graft.api.Graft.minhashSignatures(
           docs.filter(col("doc_id") % 10 === 9), "doc_id", "text",

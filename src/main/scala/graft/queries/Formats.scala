@@ -8,9 +8,6 @@ import graft.{Exact, Tables}
   * structured JSON parse (`from_json`), typed field extraction, and
   * re-serialization (`to_json`) — round-tripping inside one codegen stage. */
 object Formats {
-  /** Serializes schemaEvolution's generation writes (ADVICE r12). */
-  private val evoLock = new Object
-
   def jsonRoundtrip(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
       .select(
@@ -59,26 +56,16 @@ object Formats {
     * a metastore/catalog and evolves it there; this row demonstrates the
     * file-level mechanics the catalog automates. */
   def schemaEvolution(s: SparkSession, d: String): DataFrame = {
-    val base = graft.Scoped.dir(s, "graft_schema_evo", d)
-    // build-once guard (ADVICE r12): exists→write alone is check-then-act —
-    // two same-session invocations racing it would run overlapping
-    // overwrite jobs into the same generations while a concurrent
-    // mergeSchema read lists the files (the ensureSignatureTable pattern:
-    // JVM lock + a marker written only after both generations committed;
-    // cross-session writers are isolated by Scoped.dir's app-id scoping)
-    evoLock.synchronized {
-      val marker = new org.apache.hadoop.fs.Path(base, "_GENS_DONE")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        val docs = Tables.documents(s, d)
-        docs.filter(col("doc_id") % 3 === 0)
-          .select(col("doc_id"), col("lang"))
-          .write.mode("overwrite").parquet(s"$base/gen1")
-        docs.filter(col("doc_id") % 3 =!= 0)
-          .select(col("doc_id"), col("lang"), col("n_chars"))
-          .write.mode("overwrite").parquet(s"$base/gen2")
-        fs.create(marker, true).close()
-      }
+    // build-once (ADVICE r12): both generations are committed together, so
+    // a concurrent mergeSchema read never lists a half-written generation
+    val base = graft.Scoped.once(s, "graft_schema_evo", d) { base =>
+      val docs = Tables.documents(s, d)
+      docs.filter(col("doc_id") % 3 === 0)
+        .select(col("doc_id"), col("lang"))
+        .write.parquet(s"$base/gen1")
+      docs.filter(col("doc_id") % 3 =!= 0)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+        .write.parquet(s"$base/gen2")
     }
     s.read.option("mergeSchema", "true").parquet(s"$base/gen1", s"$base/gen2")
       .groupBy("lang")

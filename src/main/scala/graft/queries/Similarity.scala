@@ -18,7 +18,8 @@ import graft.functions.VectorFunctions
   */
 object Similarity {
 
-  private val cos =
+  /** Cosine of query vector `qv` and candidate vector `cv`. */
+  private[graft] val cos =
     "vec_dot(qv, cv) / (sqrt(vec_dot(qv, qv)) * sqrt(vec_dot(cv, cv)))"
 
   /** Brute-force cosine top-5 neighbors for the first 10 query vectors.
@@ -188,41 +189,22 @@ object Similarity {
     * returns (centroidsPath, postingsPath). Shared by the batch serving row
     * (`knnIvfPersisted`) and the streaming probe row
     * (`StreamingQueries.streamKnnIvf`) — the index is one artifact with two
-    * consumers, which is the production relationship. */
-  /** One lock for every at-rest index builder in this object (ADVICE r15):
-    * the _SUCCESS check-then-build is a same-session race — two threads
-    * (e.g. parallel suite cases) could both miss the marker and run
-    * overlapping overwrite jobs into one path. Same pattern as
-    * Dedup.ensureSignatureTable / TextAnalysis.ensureDsirModel; a single
-    * coarse lock is fine because builds are per-(session, dataset)
-    * one-offs and consumers only read. */
-  private val indexBuildLock = new Object
-
-  private[graft] def ensurePersistedIvf(s: SparkSession, d: String): (String, String) =
-    indexBuildLock.synchronized {
+    * consumers, which is the production relationship. `Scoped.once`
+    * commits the two tables together. */
+  private[graft] def ensurePersistedIvf(s: SparkSession, d: String): (String, String) = {
     VectorFunctions.register(s)
-    val base = graft.Scoped.dir(s, "graft_ivf_index", d)
-    val cPath = base + "/centroids"; val pPath = base + "/postings"
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    // train-once guard checks the LAST-written table's _SUCCESS marker, not
-    // the directory: Spark creates the output dir at job start, so a crash
-    // DURING the postings write leaves pPath present with partial files — a
-    // directory check would silently serve the incomplete index. _SUCCESS is
-    // committed only after every task's output lands (centroids write first,
-    // postings second, so postings' marker implies both are whole).
-    if (!fs.exists(new org.apache.hadoop.fs.Path(pPath, "_SUCCESS"))) {
+    val base = graft.Scoped.once(s, "graft_ivf_index", d) { base =>
       val e = Tables.embeddings(s, d)
       val km = graft.api.Graft.kmeans(
         e.select(col("vec_id"), col("embedding")), "vec_id", "embedding",
         k = 10, iters = 3)
-      km.centroids.write.mode("overwrite").parquet(cPath)
+      km.centroids.write.parquet(base + "/centroids")
       e.join(km.assignments, "vec_id")
         .select(col("vec_id"), col("embedding"), col("label"), col("list_id"))
-        .write.mode("overwrite").partitionBy("list_id").parquet(pPath)
+        .write.partitionBy("list_id").parquet(base + "/postings")
     }
-    (cPath, pPath)
-    }
+    (base + "/centroids", base + "/postings")
+  }
 
   /** At-rest IVF index REFRESH (VERDICT r10 task 6, ANN side): the
     * lifecycle step knnIvfPersisted leaves open — new vectors should join
@@ -232,30 +214,26 @@ object Similarity {
     * back from parquet (one broadcast nearest-centroid pass — the same
     * distance + c_id tie-break the training assignment uses, so a
     * fold-in assignment is bit-identical to what training would have
-    * produced for that vector) and appended to the postings. A marker
-    * file commits the refresh (appends rewrite _SUCCESS, so the marker is
-    * the generation boundary; a crash mid-refresh rebuilds). Queries then
-    * search the refreshed index covering ALL vectors. Oracle: closed-form
+    * produced for that vector) and appended to the postings. `Scoped.once`
+    * commits the refresh (its marker is the generation boundary; a crash
+    * mid-refresh rebuilds). Queries then search the refreshed index
+    * covering ALL vectors. Oracle: closed-form
     * kmeans unroll TRAINED ON THE BASE SUBSET, assignment of every vector
     * against those centroids, same IVF search — proving the incremental
     * fold-in equals the from-scratch assignment. */
   def knnIvfRefresh(s: SparkSession, d: String): DataFrame = {
     VectorFunctions.register(s)
-    val base = graft.Scoped.dir(s, "graft_ivf_refresh", d)
-    val cPath = base + "/centroids"; val pPath = base + "/postings"
-    val marker = new org.apache.hadoop.fs.Path(base, "_REFRESH_DONE")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = graft.Scoped.once(s, "graft_ivf_refresh", d) { base =>
+      val cPath = base + "/centroids"; val pPath = base + "/postings"
       val e = Tables.embeddings(s, d)
       val baseVecs = e.filter(col("vec_id") % 10 =!= 9)
       val km = graft.api.Graft.kmeans(
         baseVecs.select(col("vec_id"), col("embedding")), "vec_id", "embedding",
         k = 10, iters = 3)
-      km.centroids.write.mode("overwrite").parquet(cPath)
+      km.centroids.write.parquet(cPath)
       baseVecs.join(km.assignments, "vec_id")
         .select(col("vec_id"), col("embedding"), col("label"), col("list_id"))
-        .write.mode("overwrite").partitionBy("list_id").parquet(pPath)
+        .write.partitionBy("list_id").parquet(pPath)
       // refresh: assign ONLY the new batch against the frozen persisted
       // centroids — no Lloyd iteration, no touch of existing postings
       val frozen = s.read.parquet(cPath)
@@ -271,9 +249,8 @@ object Similarity {
         .select(col("vec_id"), col("embedding"), col("label"),
           col("c_id").as("list_id"))
         .write.mode("append").partitionBy("list_id").parquet(pPath)
-      fs.create(marker, true).close()
     }
-    ivfSearch(s, s.read.parquet(cPath), s.read.parquet(pPath),
+    ivfSearch(s, s.read.parquet(base + "/centroids"), s.read.parquet(base + "/postings"),
       Tables.embeddings(s, d).filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv")))
   }
@@ -325,24 +302,17 @@ object Similarity {
     * consumers' oracles are unchanged. Serves knn_pq, knn_refine, and
     * ann_recall (which reranks knn_pq's answers); production amortizes
     * the Lloyd training the same way. */
-  private[graft] def ensurePersistedPq(s: SparkSession, d: String): (String, String) =
-    indexBuildLock.synchronized {
+  private[graft] def ensurePersistedPq(s: SparkSession, d: String): (String, String) = {
     VectorFunctions.register(s)
-    val base = graft.Scoped.dir(s, "graft_pq_model", d)
-    val cbPath = base + "/codebooks"; val cdPath = base + "/codes"
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    // _SUCCESS of the LAST-written table guards the build (codebooks
-    // write first — see ensurePersistedIvf's crash-mid-write rationale)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(cdPath, "_SUCCESS"))) {
+    val base = graft.Scoped.once(s, "graft_pq_model", d) { base =>
       val pq = graft.api.Graft.productQuantize(
         Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
         "vec_id", "embedding", dim = 64, m = 4, k = 16, iters = 2)
-      pq.codebooks.write.mode("overwrite").parquet(cbPath)
-      pq.codes.write.mode("overwrite").parquet(cdPath)
+      pq.codebooks.write.parquet(base + "/codebooks")
+      pq.codes.write.parquet(base + "/codes")
     }
-    (cbPath, cdPath)
-    }
+    (base + "/codebooks", base + "/codes")
+  }
 
   /** The ADC core shared by knnPq / knnPqSampled / knnRefine: the product
     * quantizer comes from the at-rest artifact (full-corpus training —
@@ -588,6 +558,42 @@ object Similarity {
       .orderBy("nprobe")
   }
 
+  /** Train-once build of the at-rest IVF-PQ index for (session, dataset):
+    * coarse centroids, per-vector list assignments, residual-PQ codebooks,
+    * and codes persist as four parquet tables (same lifecycle and
+    * exactness argument as ensurePersistedPq — the artifact answers
+    * bit-identically to the in-memory model, oracle unchanged). The
+    * per-run cost of the serving row is then the pure query path, which
+    * is what production pays — codebook training amortizes at rest. */
+  private[graft] def ensurePersistedIvfPq(s: SparkSession, d: String)
+      : (String, String, String, String) = {
+    VectorFunctions.register(s)
+    val base = graft.Scoped.once(s, "graft_ivfpq_index", d) { base =>
+      val e = Tables.embeddings(s, d)
+      val km = graft.api.Graft.kmeans(
+        e.select(col("vec_id"), col("embedding")), "vec_id", "embedding",
+        k = 10, iters = 3)
+      // exact residuals: float→double subtract is exact, the float
+      // round-back is IEEE round-to-nearest — bit-identical in any engine
+      val resExpr =
+        "zip_with(%s, centroid, (x, y) -> CAST(CAST(x AS DOUBLE) - CAST(y AS DOUBLE) AS FLOAT))"
+      val assigned = e.join(km.assignments, "vec_id")
+        .join(broadcast(km.centroids
+          .select(col("c_id").as("list_id"), col("centroid"))), "list_id")
+        .withColumn("residual", expr(resExpr.format("embedding")))
+        .select(col("vec_id"), col("list_id"), col("residual"))
+        .localCheckpoint(true) // consumed by PQ training AND the write
+      val pq = graft.api.Graft.productQuantize(
+        assigned.select(col("vec_id"), col("residual")), "vec_id", "residual",
+        dim = 64, m = 4, k = 16, iters = 2)
+      km.centroids.write.parquet(base + "/centroids")
+      assigned.write.parquet(base + "/assigned")
+      pq.codebooks.write.parquet(base + "/codebooks")
+      pq.codes.write.parquet(base + "/codes")
+    }
+    (base + "/centroids", base + "/assigned", base + "/codebooks", base + "/codes")
+  }
+
   /** ANN via IVF-PQ — the COMPOSED index (Jégou '11 §IV, "IVFADC"): the tier
     * between knnIvf (exact rerank inside probed lists — still touches raw
     * vectors) and knnPq (PQ over the whole corpus — no list pruning).
@@ -609,47 +615,6 @@ object Similarity {
     * Lloyd means, exact residual subtraction, left-to-right double dot
     * products, ordered ADC fold), so the ENTIRE two-level index unrolls
     * into DuckDB CTEs — the registry row is fully oracled. */
-  /** Train-once build of the at-rest IVF-PQ index for (session, dataset):
-    * coarse centroids, per-vector list assignments, residual-PQ codebooks,
-    * and codes persist as four parquet tables (same lifecycle and
-    * exactness argument as ensurePersistedPq — the artifact answers
-    * bit-identically to the in-memory model, oracle unchanged). The
-    * per-run cost of the serving row is then the pure query path, which
-    * is what production pays — codebook training amortizes at rest. */
-  private[graft] def ensurePersistedIvfPq(s: SparkSession, d: String)
-      : (String, String, String, String) = indexBuildLock.synchronized {
-    VectorFunctions.register(s)
-    val base = graft.Scoped.dir(s, "graft_ivfpq_index", d)
-    val cPath = base + "/centroids"; val aPath = base + "/assigned"
-    val cbPath = base + "/codebooks"; val cdPath = base + "/codes"
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(cdPath, "_SUCCESS"))) {
-      val e = Tables.embeddings(s, d)
-      val km = graft.api.Graft.kmeans(
-        e.select(col("vec_id"), col("embedding")), "vec_id", "embedding",
-        k = 10, iters = 3)
-      // exact residuals: float→double subtract is exact, the float
-      // round-back is IEEE round-to-nearest — bit-identical in any engine
-      val resExpr =
-        "zip_with(%s, centroid, (x, y) -> CAST(CAST(x AS DOUBLE) - CAST(y AS DOUBLE) AS FLOAT))"
-      val assigned = e.join(km.assignments, "vec_id")
-        .join(broadcast(km.centroids
-          .select(col("c_id").as("list_id"), col("centroid"))), "list_id")
-        .withColumn("residual", expr(resExpr.format("embedding")))
-        .select(col("vec_id"), col("list_id"), col("residual"))
-        .localCheckpoint(true) // consumed by PQ training AND the write
-      val pq = graft.api.Graft.productQuantize(
-        assigned.select(col("vec_id"), col("residual")), "vec_id", "residual",
-        dim = 64, m = 4, k = 16, iters = 2)
-      km.centroids.write.mode("overwrite").parquet(cPath)
-      assigned.write.mode("overwrite").parquet(aPath)
-      pq.codebooks.write.mode("overwrite").parquet(cbPath)
-      pq.codes.write.mode("overwrite").parquet(cdPath)
-    }
-    (cPath, aPath, cbPath, cdPath)
-  }
-
   def knnIvfPq(s: SparkSession, d: String): DataFrame = {
     VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)

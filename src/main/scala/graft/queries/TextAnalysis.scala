@@ -416,27 +416,19 @@ object TextAnalysis {
       .limit(50)
   }
 
-  private val dsirBuildLock = new Object
-
   /** Train-once build of the at-rest DSIR model for (session, dataset):
     * the 256-row (bucket, integer log-ratio) table — a versioned artifact
     * in production (the fit-once/apply-anywhere seam streamDsir's scaladoc
-    * already names), persisted with the ensureSignatureTable lifecycle.
-    * Integer columns round-trip parquet exactly, so the at-rest model
-    * scores bit-identically and every consumer's oracle is unchanged.
-    * Serves dsir_select, stream_dsir, and stream_online_curate. */
+    * already names), committed by `Scoped.once`. Integer columns
+    * round-trip parquet exactly, so the at-rest model scores
+    * bit-identically and every consumer's oracle is unchanged. Serves
+    * dsir_select, stream_dsir, and stream_online_curate. */
   private[graft] def ensureDsirModel(s: SparkSession, d: String): String =
-    dsirBuildLock.synchronized {
-      val path = graft.Scoped.dir(s, "graft_dsir_model", d) + "/model"
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS"))) {
-        graft.api.Graft.dsirModel(Tables.documents(s, d), "text",
-            col("lang") === "en", buckets = 256)
-          .write.mode("overwrite").parquet(path)
-      }
-      path
-    }
+    graft.Scoped.once(s, "graft_dsir_model", d) { dir =>
+      graft.api.Graft.dsirModel(Tables.documents(s, d), "text",
+          col("lang") === "en", buckets = 256)
+        .write.parquet(dir + "/model")
+    } + "/model"
 
   /** Per-document novelty (Graft.docNovelty): share of each document's
     * distinct 8-token grams that no other document contains — the

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
@@ -159,21 +160,51 @@ object StreamingQueries {
     s.table(name)
   }
 
-  /** Drains `stream` through `fn` as real micro-batches: Trigger.AvailableNow
-    * with its checkpoint under `base`/ckpt, returning once every staged file
-    * is committed. The shared runner of the staged-batch loops; `fn` keeps
-    * each batch exactly-once by writing batch_id-keyed overwrites. Same
-    * local-mode knob as runToMemory: each per-batch job shuffles a slice of
-    * a bounded table, so the shuffle width is capped at 4 (on a cluster the
-    * session value stands). */
-  private def runBatches(s: SparkSession, stream: DataFrame, base: String)(
-      fn: (DataFrame, Long) => Unit): Unit = capShuffle(s, 4) {
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", base + "/ckpt")
-      .foreachBatch(fn)
-      .start()
-    try q.awaitTermination() finally q.stop()
+  /** The staged micro-batch loop, EXACTLY-ONCE: `df` is staged by
+    * `stageOrderedBatches` (`n` ordered files under `base`/src) and drained
+    * through `fn` as real micro-batches — Trigger.AvailableNow, one file per
+    * trigger, checkpoint under `base`/ckpt — returning once every batch is
+    * committed. A foreachBatch may RETRY a batch after a failure, so `fn`
+    * writes only `BatchKeyed` partitions, each derived from the batch's own
+    * rows and strictly-earlier partitions (`batch_id < id`, or the version
+    * carried at `id - 1`): a retry rewrites its partitions byte-for-byte,
+    * and the result does not depend on when or how often a batch runs.
+    * Same local-mode knob as runToMemory: each per-batch job shuffles a
+    * slice of a bounded table, so the shuffle width is capped at 4 (on a
+    * cluster the session value stands). */
+  private def runStaged(s: SparkSession, df: DataFrame, base: String,
+      bucketCol: String, n: Int)(fn: (DataFrame, Long) => Unit): Unit = {
+    val stream = stagedStream(s, df, base, bucketCol, n)
+    capShuffle(s, 4) {
+      val q = stream.writeStream
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", base + "/ckpt")
+        .foreachBatch(fn)
+        .start()
+      try q.awaitTermination() finally q.stop()
+    }
+  }
+
+  /** `df` staged by `stageOrderedBatches` and read back as a stream of one
+    * staged file per trigger. */
+  private def stagedStream(s: SparkSession, df: DataFrame, base: String,
+      bucketCol: String, n: Int): DataFrame =
+    s.readStream.schema(df.schema).option("maxFilesPerTrigger", "1")
+      .parquet(stageOrderedBatches(df, base, bucketCol, n))
+
+  /** A table at `path` kept as one `batch_id=<id>` partition per staged
+    * micro-batch — the only form `runStaged`'s batches write. */
+  private final case class BatchKeyed(path: String) {
+    private val key = "batch_id="
+    private def at(id: Long) = s"$path/$key$id"
+    /** Overwrites batch `id`'s partition: a retried batch replaces it. */
+    def write(df: DataFrame, id: Long): Unit = df.write.mode("overwrite").parquet(at(id))
+    def read(s: SparkSession, id: Long): DataFrame = s.read.parquet(at(id))
+    /** The partition of the highest batch id written. */
+    def last(s: SparkSession): DataFrame = read(s,
+      Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
+        .map(_.getName).filter(_.startsWith(key))
+        .map(_.stripPrefix(key).toLong).max)
   }
 
   /** Runs `body` with spark.sql.shuffle.partitions capped at `n`. */
@@ -196,7 +227,6 @@ object StreamingQueries {
     * which is the file's memoized one from graft.Tables; events
     * additionally needs the ns→NTZ conversion from graft.Tables. */
   private def readStreamTable(s: SparkSession, d: String, name: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val file = Paths.get(s"$d/$name.parquet")
     val dir = Paths.get(Scoped.dir(s, "graft_stream_src", d), name)
     Files.createDirectories(dir)
@@ -251,13 +281,6 @@ object StreamingQueries {
       .orderBy("lang")
   }
 
-  /** Linear-classifier INFERENCE on a stream — the SAME Graft.linearClassify
-    * call as the batch quality_classifier query, unchanged, over the
-    * documents stream: the (bucket, weight) model is a static side table
-    * (stream-static broadcast join), per-doc scores incrementalize as
-    * grouped state, and the output rolls up to per-label counts + token
-    * volume (integer tally + exact long sum — no float aggregation).
-    * Batch/stream polymorphism pinned on model inference. */
   /** Boilerplate scrubbing at INGEST — the streaming twin of
     * boilerplate_scrub with the production division of labor: the
     * boilerplate fingerprint set is an AT-REST artifact (built once from
@@ -507,6 +530,13 @@ object StreamingQueries {
       .orderBy("p_brand")
   }
 
+  /** Linear-classifier INFERENCE on a stream — the SAME Graft.linearClassify
+    * call as the batch quality_classifier query, unchanged, over the
+    * documents stream: the (bucket, weight) model is a static side table
+    * (stream-static broadcast join), per-doc scores incrementalize as
+    * grouped state, and the output rolls up to per-label counts + token
+    * volume (integer tally + exact long sum — no float aggregation).
+    * Batch/stream polymorphism pinned on model inference. */
   def streamClassify(s: SparkSession, d: String): DataFrame = {
     // ONE streaming aggregation (per-doc scores — chained streaming aggs are
     // unsupported); the per-label rollup reads the final in-memory state as
@@ -651,21 +681,8 @@ object StreamingQueries {
   /** Stream-stream time-interval join: clicks matched to same-user purchases
     * within the following hour — both sides unbounded, state bounded by the
     * watermarks (Spark evicts rows once they can no longer match). */
-  def streamStreamJoin(s: SparkSession, d: String): DataFrame = {
-    def side(tpe: String, idAs: String, tsAs: String) =
-      readStreamTable(s, d, "events")
-        .filter(col("event_type") === tpe)
-        .select(col("event_id").as(idAs), col("user_id").as(s"${idAs}_uid"),
-          col("ts").cast("timestamp").as(tsAs))
-        .withWatermark(tsAs, "2 hours")
-    val clicks = side("click", "click_id", "cts")
-    val buys = side("purchase", "purchase_id", "bts")
-    val joined = clicks.join(buys,
-        expr("click_id_uid = purchase_id_uid AND bts BETWEEN cts AND cts + INTERVAL 1 HOUR"))
-      .select(col("click_id"), col("purchase_id"), col("click_id_uid").as("user_id"))
-    runToMemory(s, joined, "graft_stream_stream_join", "append")
-      .orderBy("click_id", "purchase_id")
-  }
+  def streamStreamJoin(s: SparkSession, d: String): DataFrame =
+    clickPurchaseJoin(s, d, "inner", "graft_stream_stream_join")
 
   /** LEFT-OUTER stream-stream join (the registry row for the semantics
     * Round6Spec pins): matches emit eagerly; a click with no purchase in its
@@ -675,7 +692,13 @@ object StreamingQueries {
     * of the bounded input: 2 h delay + 1 h join upper bound) are still in
     * state when the stream ends and do NOT emit — exactly the online
     * semantics, which the oracle mirrors with the same watermark cutoff. */
-  def streamStreamJoinLeft(s: SparkSession, d: String): DataFrame = {
+  def streamStreamJoinLeft(s: SparkSession, d: String): DataFrame =
+    clickPurchaseJoin(s, d, "left_outer", "graft_stream_stream_join_left")
+
+  /** Clicks joined (`joinType`) to the same user's purchases within the
+    * following hour, both sides streamed with a 2-hour watermark. */
+  private def clickPurchaseJoin(s: SparkSession, d: String, joinType: String,
+      name: String): DataFrame = {
     def side(tpe: String, idAs: String, tsAs: String) =
       readStreamTable(s, d, "events")
         .filter(col("event_type") === tpe)
@@ -686,9 +709,9 @@ object StreamingQueries {
     val buys = side("purchase", "purchase_id", "bts")
     val joined = clicks.join(buys,
         expr("click_id_uid = purchase_id_uid AND bts BETWEEN cts AND cts + INTERVAL 1 HOUR"),
-        "left_outer")
+        joinType)
       .select(col("click_id"), col("purchase_id"), col("click_id_uid").as("user_id"))
-    runToMemory(s, joined, "graft_stream_stream_join_left", "append")
+    runToMemory(s, joined, name, "append")
       .orderBy("click_id", "purchase_id")
   }
 
@@ -792,8 +815,7 @@ object StreamingQueries {
     val topk = udaf(new graft.functions.TopKNeighbors(5),
       Encoders.product[graft.functions.Neighbor])
     val scored = queries.join(corpus, col("q_id") =!= col("c_id"))
-      .withColumn("score6", round(
-        expr("vec_dot(qv, cv) / (sqrt(vec_dot(qv, qv)) * sqrt(vec_dot(cv, cv)))"), 6))
+      .withColumn("score6", round(expr(graft.queries.Similarity.cos), 6))
       .groupBy("q_id")
       .agg(topk(col("c_id"), col("label"), col("score6")).as("topk"))
     runToMemory(s, scored, "graft_stream_knn", "complete")
@@ -815,37 +837,45 @@ object StreamingQueries {
     * oracle is knn_bruteforce's verbatim, unchanged. Final-state readout:
     * n_seen is monotone per query, so max_by(n_seen) rows are the last
     * emission — the same update-mode pattern streamRollingSumTws pins. */
-  def streamKnnTtl(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    graft.functions.VectorFunctions.register(s)
+  def streamKnnTtl(s: SparkSession, d: String): DataFrame =
     onRocksDb(s) {
-      val corpus = graft.Tables.embeddings(s, d)
-        .select(col("vec_id").as("c_id"), col("embedding").as("cv"), col("label"))
       val queries = readStreamTable(s, d, "embeddings")
         .filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
           lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts"))
-        .withWatermark("ts", "0 seconds")
-      val cands = queries.join(corpus, col("q_id") =!= col("c_id"))
-        .withColumn("score6", round(
-          expr("vec_dot(qv, cv) / (sqrt(vec_dot(qv, qv)) * sqrt(vec_dot(cv, cv)))"), 6))
-        .select(col("q_id"), col("c_id"), col("label"),
-          col("score6").as("score"), col("ts"))
-        .as[KnnCand]
-      val served = cands.groupByKey(_.q_id)
-        .transformWithState(new KnnServingProcessor(5, ttlMs = 365L * 24 * 3600 * 1000),
-          TimeMode.EventTime(), OutputMode.Update(),
-          Encoders.product[(Long, Int, Long, Int, Double, Long, Long)])
-        .toDF("q_id", "rn", "c_id", "label", "score6", "n_seen", "last_ts")
-      runToMemory(s, served, "graft_stream_knn_ttl", "update")
-        .groupBy("q_id", "rn")
-        .agg(expr("max_by(c_id, n_seen)").as("c_id"),
-          expr("max_by(label, n_seen)").as("label"),
-          round(expr("max_by(score6, n_seen)"), 4).as("cos_sim"))
-        .select(col("q_id"), col("rn").cast("int").as("rn"), col("c_id"),
-          col("label"), col("cos_sim"))
+      knnServed(s, d, queries, ttlMs = 365L * 24 * 3600 * 1000,
+          "graft_stream_knn_ttl", readout = "n_seen")
         .orderBy("q_id", "rn")
     }
+
+  /** Probes (q_id, qv, ts) scored against every other embedding and served
+    * through KnnServingProcessor's top-5 with idle TTL `ttlMs`; returns the
+    * final top-5 per query, each slot read as its `max_by(_, readout)` row
+    * over the update-mode emissions. */
+  private def knnServed(s: SparkSession, d: String, probes: DataFrame,
+      ttlMs: Long, name: String, readout: String): DataFrame = {
+    import s.implicits._
+    graft.functions.VectorFunctions.register(s)
+    val corpus = graft.Tables.embeddings(s, d)
+      .select(col("vec_id").as("c_id"), col("embedding").as("cv"), col("label"))
+    val cands = probes.withWatermark("ts", "0 seconds")
+      .join(corpus, col("q_id") =!= col("c_id"))
+      .withColumn("score6", round(expr(graft.queries.Similarity.cos), 6))
+      .select(col("q_id"), col("c_id"), col("label"),
+        col("score6").as("score"), col("ts"))
+      .as[KnnCand]
+    val served = cands.groupByKey(_.q_id)
+      .transformWithState(new KnnServingProcessor(5, ttlMs),
+        TimeMode.EventTime(), OutputMode.Update(),
+        Encoders.product[(Long, Int, Long, Int, Double, Long, Long)])
+      .toDF("q_id", "rn", "c_id", "label", "score6", "n_seen", "last_ts")
+    runToMemory(s, served, name, "update")
+      .groupBy("q_id", "rn")
+      .agg(expr(s"max_by(c_id, $readout)").as("c_id"),
+        expr(s"max_by(label, $readout)").as("label"),
+        round(expr(s"max_by(score6, $readout)"), 4).as("cos_sim"))
+      .select(col("q_id"), col("rn").cast("int").as("rn"), col("c_id"),
+        col("label"), col("cos_sim"))
   }
 
   /** REGISTRY-VISIBLE TTL eviction (VERDICT r11 task 8): streamKnnTtl's
@@ -872,9 +902,7 @@ object StreamingQueries {
     * emissions. */
   def streamKnnTtlEvict(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     onRocksDb(s) {
-      val base = Scoped.dir(s, "graft_stream_ttl_evict", d)
       val emb = graft.Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val spec = ((0L to 9L).map(q => (q, q, "2024-01-01 00:00:00", 0)) ++
         Seq((10L, 10L, "2024-01-01 02:00:00", 1),
@@ -884,31 +912,11 @@ object StreamingQueries {
       val probes = spec.join(emb, col("src_id") === col("vec_id"))
         .select(col("q_id"), col("embedding").as("qv"),
           to_timestamp(col("ts_s")).as("ts"), col("batch"))
-      val srcDir = stageOrderedBatches(probes, base, "batch", 4)
-      val corpus = graft.Tables.embeddings(s, d)
-        .select(col("vec_id").as("c_id"), col("embedding").as("cv"), col("label"))
-      val stream = s.readStream.schema(probes.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        .withWatermark("ts", "0 seconds")
-      val cands = stream.join(corpus, col("q_id") =!= col("c_id"))
-        .withColumn("score6", round(
-          expr("vec_dot(qv, cv) / (sqrt(vec_dot(qv, qv)) * sqrt(vec_dot(cv, cv)))"), 6))
-        .select(col("q_id"), col("c_id"), col("label"),
-          col("score6").as("score"), col("ts"))
-        .as[KnnCand]
-      val served = cands.groupByKey(_.q_id)
-        .transformWithState(new KnnServingProcessor(5, ttlMs = 3600L * 1000),
-          TimeMode.EventTime(), OutputMode.Update(),
-          Encoders.product[(Long, Int, Long, Int, Double, Long, Long)])
-        .toDF("q_id", "rn", "c_id", "label", "score6", "n_seen", "last_ts")
-      runToMemory(s, served, "graft_stream_knn_ttl_evict", "update")
+      val staged = stagedStream(s, probes,
+        Scoped.dir(s, "graft_stream_ttl_evict", d), "batch", 4)
+      knnServed(s, d, staged, ttlMs = 3600L * 1000,
+          "graft_stream_knn_ttl_evict", readout = "last_ts")
         .filter(col("q_id") < 10)
-        .groupBy("q_id", "rn")
-        .agg(expr("max_by(c_id, last_ts)").as("c_id"),
-          expr("max_by(label, last_ts)").as("label"),
-          round(expr("max_by(score6, last_ts)"), 4).as("cos_sim"))
-        .select(col("q_id"), col("rn").cast("int").as("rn"), col("c_id"),
-          col("label"), col("cos_sim"))
         .orderBy("q_id", "rn")
     }
   }
@@ -936,19 +944,13 @@ object StreamingQueries {
     val base = Scoped.dir(s, "graft_stream_knn_ivf", d)
     val queries = graft.Tables.embeddings(s, d).filter(col("vec_id") < 10)
       .select(col("vec_id"), col("embedding"))
-    val srcDir = stageOrderedBatches(queries, base, "vec_id", 2)
-    val answers = base + "/answers"
-    val stream = s.readStream.schema(queries.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    runBatches(s, stream, base) { (batch, id) =>
-      // exactly-once: batch_id-keyed OVERWRITE, so a retried batch
-      // rewrites its own partition instead of double-appending answers
-      graft.queries.Similarity.ivfSearch(s,
+    val answers = BatchKeyed(base + "/answers")
+    runStaged(s, queries, base, "vec_id", 2) { (batch, id) =>
+      answers.write(graft.queries.Similarity.ivfSearch(s,
           s.read.parquet(cPath), s.read.parquet(pPath),
-          batch.select(col("vec_id").as("q_id"), col("embedding").as("qv")))
-        .write.mode("overwrite").parquet(answers + s"/batch_id=$id")
+          batch.select(col("vec_id").as("q_id"), col("embedding").as("qv"))), id)
     }
-    s.read.parquet(answers)
+    s.read.parquet(answers.path)
       .select("q_id", "rn", "c_id", "label", "cos_sim")
       .orderBy("q_id", "rn")
   }
@@ -968,49 +970,19 @@ object StreamingQueries {
     * screen against the STATIC eval index and a per-candidate-pair max —
     * state bounded by FLAGGED pairs (output-sized), not by corpus size.
     * Oracle: identical flagged set to streamDecontaminate, hash-matched. */
-  def streamDecontaminateStateless(s: SparkSession, d: String): DataFrame =
-    streamDecontaminateStateless(s, d, graft.api.Graft.md5GramSql,
-      graft.api.Graft.md5Hash60)
-
-  /** Hash-parameterized form (VERDICT r11 task 7): the registry row pays
-    * the interpreted in-lambda md5 gram hash so DuckDB can mirror the
-    * signatures; a production ingest passes `Graft.xx63GramSql` /
-    * `Graft.xxHash63` — the measured sf1 A/B for both is in SCALE.md. */
-  private[graft] def streamDecontaminateStateless(s: SparkSession, d: String,
-      gramHashSql: String => String,
-      baseHash: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
-    // eval index = the shared at-rest signature table, filter-pruned —
-    // but ONLY for the oracled md5 hash the table stores; the
-    // production-hash variant recomputes with its own base hash. The
-    // discriminator is the gram-hash VAL (reference equality is sound on
-    // a val; the baseHash def eta-expands to a fresh lambda per call) —
-    // the two hash parameters switch together by this method's contract,
-    // and the require below makes that contract a loud failure instead of
-    // a comment (ADVICE r15): a caller passing md5GramSql with a foreign
-    // baseHash would otherwise screen one hash family's stream signatures
-    // against the md5-built eval index — wrong flags, no error. `eq` on
-    // the def-typed baseHash never matches (eta-expansion), so the check
-    // compares the column trees the two hashes build on a probe column
-    // (Column.toString prints the unresolved expression deterministically).
-    require(!(gramHashSql eq graft.api.Graft.md5GramSql) || {
-      val probe = org.apache.spark.sql.functions.lit("__graft_probe__")
-      baseHash(probe).toString == graft.api.Graft.md5Hash60(probe).toString
-    }, "streamDecontaminateStateless: md5GramSql requires the md5Hash60 " +
-      "base hash — the eval-index shortcut assumes one hash family")
-    val evalSigs =
-      if (gramHashSql eq graft.api.Graft.md5GramSql)
-        s.read.parquet(graft.queries.Dedup.ensureSignatureTable(s, d))
-          .filter(col("doc_id") % 17 === 0)
-      else graft.api.Graft.minhashSignatures(
-        graft.Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .filter(col("doc_id") % 17 === 0), "doc_id", "text",
-        numHashes = 32, baseHash = baseHash)
+  def streamDecontaminateStateless(s: SparkSession, d: String): DataFrame = {
+    // eval index = the shared at-rest md5 signature table, filter-pruned;
+    // the stream side pays the interpreted in-lambda md5 gram hash so DuckDB
+    // can mirror the signatures (measured against xx63 at sf1: 1.00×,
+    // SCALE.md)
+    val evalSigs = s.read.parquet(graft.queries.Dedup.ensureSignatureTable(s, d))
+      .filter(col("doc_id") % 17 === 0)
     val streamSigs = graft.api.Graft.minhashSignatureRowLocal(
       readStreamTable(s, d, "documents")
         .filter(col("doc_id") % 17 =!= 0)
         .select(col("doc_id"), col("text")),
       "doc_id", "text", numHashes = 32,
-      gramHashSql = gramHashSql)
+      gramHashSql = graft.api.Graft.md5GramSql)
     val flagged = graft.api.Graft.minhashCandidatesAgainst(streamSigs, evalSigs,
         "doc_id", bands = 8, rowsPerBand = 4, minEstJaccard = 0.2)
       .select(col("new_id").as("doc_id"), col("index_id").as("eval_id"),
@@ -1019,30 +991,10 @@ object StreamingQueries {
       .orderBy("doc_id", "eval_id")
   }
 
-  /** The ONLINE INGEST LOOP closed end-to-end: a document stream arrives in
-    * REAL micro-batches (the corpus split into three tercile files by
-    * doc_id % 3, mod-times pinned so the file source ingests them in order,
-    * maxFilesPerTrigger = 1 + AvailableNow → three true batches), and each
-    * micro-batch (a) computes ROW-LOCAL minhash signatures (zero keyed
-    * state — minhashSignatureRowLocal), (b) SCREENS against the at-rest
-    * signature index (banded new×index, never index×index), (c) appends
-    * the flagged (doc, dup_of, est) pairs, and (d) FOLDS its signatures
-    * into the index — so batch N+1 is screened against everything ingested
-    * before it. This is dedup_index_foldin's lifecycle driven by a real
-    * stream: the keep-FIRST online dedup a 100 TB ingest pipeline runs.
-    *
-    * Contract (and what the oracle checks): a document is flagged iff some
-    * EARLIER-batch document is a banded near-dup (est ≥ 0.2) — within-batch
-    * pairs are deliberately not flagged (the fold happens at batch close;
-    * intra-batch dedup is the batch operator's job, and a production loop
-    * composes dedup_minhash per batch with this cross-batch screen). The
-    * tercile batch assignment makes "earlier" a closed form
-    * (doc_id % 3 ordering), so DuckDB mirrors the whole loop exactly. */
   /** Stage `df` as `n` ordered single-file parquet micro-batches under
     * `base`/src (mod-`n` buckets of `bucketCol`, pinned mod-times so the
     * file source's arrival order is deterministic), wiping `base` first —
-    * the REAL-micro-batch firehose harness shared by the online ingest
-    * loop and the streaming IVF probe. Returns the source directory. */
+    * the source `stagedStream` reads. Returns the source directory. */
   private[graft] def stageOrderedBatches(df: DataFrame, base: String,
       bucketCol: String, n: Int): String = {
     Scoped.rm(base)
@@ -1092,26 +1044,30 @@ object StreamingQueries {
     srcDir.toString
   }
 
-  def streamOnlineDedup(s: SparkSession, d: String): DataFrame =
-    streamOnlineDedup(s, d, graft.api.Graft.md5GramSql)
-
-  /** Hash-parameterized form (VERDICT r11 task 7): the registry row pays
-    * the in-lambda md5 gram hash (the oracle tax); production passes
-    * `Graft.xx63GramSql`. Measured sf1 A/B in SCALE.md. */
-  private[graft] def streamOnlineDedup(s: SparkSession, d: String,
-      gramHashSql: String => String): DataFrame = {
+  /** The ONLINE INGEST LOOP closed end-to-end: a document stream arrives in
+    * REAL micro-batches (the corpus staged by `runStaged` as two files by
+    * doc_id % 2, ingested in order as two true batches), and each
+    * micro-batch (a) computes ROW-LOCAL minhash signatures (zero keyed
+    * state — minhashSignatureRowLocal), (b) SCREENS against the at-rest
+    * signature index (banded new×index, never index×index), (c) appends
+    * the flagged (doc, dup_of, est) pairs, and (d) FOLDS its signatures
+    * into the index — so batch N+1 is screened against everything ingested
+    * before it. This is dedup_index_foldin's lifecycle driven by a real
+    * stream: the keep-FIRST online dedup a 100 TB ingest pipeline runs.
+    *
+    * Contract (and what the oracle checks): a document is flagged iff some
+    * EARLIER-batch document is a banded near-dup (est ≥ 0.2) — within-batch
+    * pairs are deliberately not flagged (the fold happens at batch close;
+    * intra-batch dedup is the batch operator's job, and a production loop
+    * composes dedup_minhash per batch with this cross-batch screen). The
+    * mod-2 batch assignment makes "earlier" a closed form
+    * (doc_id % 2 ordering), so DuckDB mirrors the whole loop exactly. */
+  def streamOnlineDedup(s: SparkSession, d: String): DataFrame = {
     val base = Scoped.dir(s, "graft_stream_online", d)
     val docs = graft.Tables.documents(s, d).select(col("doc_id"), col("text"))
-    // ordered ingest files; clean slate per run (same per-run hygiene
-    // as streamKvUpsert)
-    val srcDir = stageOrderedBatches(docs, base, "doc_id", 2)
     val indexPath = base + "/index"; val flagsPath = base + "/flags"
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    runBatches(s, stream, base)(onlineDedupBatch(s, indexPath, flagsPath, gramHashSql))
-    if (fs.exists(new org.apache.hadoop.fs.Path(flagsPath)))
+    runStaged(s, docs, base, "doc_id", 2)(onlineDedupBatch(s, indexPath, flagsPath))
+    if (Files.exists(Paths.get(flagsPath)))
       s.read.parquet(flagsPath)
         .select(col("new_id").as("doc_id"), col("index_id").as("dup_of"),
           col("est_jaccard"))
@@ -1122,41 +1078,32 @@ object StreamingQueries {
     }
   }
 
-  /** One ingest batch of the online dedup loop, EXACTLY-ONCE: a Structured
-    * Streaming foreachBatch may RETRY a batch after a failure, and the
-    * original append-mode writes were not retry-safe (a replayed batch
-    * would double-append its flags AND screen against an index already
-    * holding its own signatures — self-matches). Both writes are now keyed
-    * by `batch_id=<id>` partition directories in OVERWRITE mode, so a
-    * retry rewrites its own partition byte-for-byte, and the screen reads
-    * `batch_id < id` explicitly — strictly-earlier batches, the keep-first
-    * contract, independent of how many times this batch runs. Factored out
-    * so the suite can replay a batch and pin idempotence. */
+  /** One ingest batch of the online dedup loop, on `runStaged`'s
+    * exactly-once contract: the screen reads `batch_id < id` explicitly —
+    * strictly-earlier batches, the keep-first contract — so a replayed batch
+    * neither double-appends its flags nor matches its own signatures.
+    * Factored out so the suite can replay a batch and pin idempotence. */
   private[graft] def onlineDedupBatch(s: SparkSession, indexPath: String,
-      flagsPath: String,
-      gramHashSql: String => String = graft.api.Graft.md5GramSql)(
+      flagsPath: String)(
       batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long): Unit = {
     val sigs = graft.api.Graft.minhashSignatureRowLocal(batch,
       "doc_id", "text", numHashes = 32,
-      gramHashSql = gramHashSql)
+      gramHashSql = graft.api.Graft.md5GramSql)
     // Index fold-in FIRST, screen from the re-read artifact: the screen's
     // new side reads this batch's just-committed partition back instead of
     // recomputing the shingle→digest→minima pass a second time (the sig
     // plan had two actions — flags and fold-in — so the screened batch
     // paid the signature pass twice; r16 measured the re-read at ~40% off
-    // the row). Exactly-once is unchanged: both writes stay batch_id-keyed
-    // overwrites, the screen still reads strictly-earlier partitions
-    // (never its own — no self-matches), and a retry rewrites both
-    // partitions byte-for-byte whether the crash hit before or between
-    // the writes.
-    sigs.write.mode("overwrite").parquet(indexPath + s"/batch_id=$id")
+    // the row). The screen still reads strictly-earlier partitions (never
+    // its own — no self-matches), and a retry rewrites both partitions
+    // byte-for-byte whether the crash hit before or between the writes.
+    BatchKeyed(indexPath).write(sigs, id)
     if (id > 0) {
       val all = s.read.parquet(indexPath)
-      graft.api.Graft.minhashCandidatesAgainst(
+      BatchKeyed(flagsPath).write(graft.api.Graft.minhashCandidatesAgainst(
           all.filter(col("batch_id") === id).drop("batch_id"),
           all.filter(col("batch_id") < id).drop("batch_id"), "doc_id",
-          bands = 8, rowsPerBand = 4, minEstJaccard = 0.2)
-        .write.mode("overwrite").parquet(flagsPath + s"/batch_id=$id")
+          bands = 8, rowsPerBand = 4, minEstJaccard = 0.2), id)
     }
   }
 
@@ -1167,9 +1114,9 @@ object StreamingQueries {
     * (1) the Gopher quality gate — row-local, stateless; (2) EXACT
     * keep-first dedup — in-batch min-id per text hash, then a screen
     * against the at-rest hash index of earlier batches (`batch_id < id`),
-    * folding this batch's kept hashes in (the exactly-once batch-keyed
-    * overwrite contract of onlineDedupBatch); (3) fuzzy DECONTAMINATION —
-    * row-local MinHash signatures screened against the STATIC eval-split
+    * folding this batch's kept hashes in (`runStaged`'s exactly-once
+    * contract); (3) fuzzy DECONTAMINATION — row-local MinHash signatures
+    * screened against the STATIC eval-split
     * signatures fit once before ingest (zero keyed state, the
     * stream_decontaminate_stateless shape); (4) DSIR importance scoring
     * with the static-corpus model, also fit once. Survivors append
@@ -1186,7 +1133,6 @@ object StreamingQueries {
     val all = graft.Tables.documents(s, d)
     val stream0 = all.filter(col("doc_id") % 17 =!= 0)
       .select(col("doc_id"), col("text"))
-    val srcDir = stageOrderedBatches(stream0, base, "doc_id", 2)
     // static artifacts, fit ONCE before ingest and reused by every batch:
     // the eval-split signatures and the full-corpus DSIR model
     val evalSigs = s.read.parquet(
@@ -1196,24 +1142,20 @@ object StreamingQueries {
     val model = s.read.parquet(
       graft.queries.TextAnalysis.ensureDsirModel(s, d))
     val indexPath = base + "/index"; val keptPath = base + "/kept"
-    val stream = s.readStream.schema(stream0.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    runBatches(s, stream, base)(
+    runStaged(s, stream0, base, "doc_id", 2)(
       onlineCurateBatch(s, indexPath, keptPath, evalSigs, model))
     s.read.parquet(keptPath)
       .select("doc_id", "n_tokens", "llr")
       .orderBy("doc_id")
   }
 
-  /** One ingest batch of the online curation loop (see streamOnlineCurate);
-    * factored out on the same exactly-once contract as onlineDedupBatch —
-    * batch-keyed overwrites, screens read strictly-earlier partitions. */
+  /** One ingest batch of the online curation loop (see streamOnlineCurate),
+    * on `runStaged`'s exactly-once contract; factored out so the suite can
+    * replay a batch. */
   private[graft] def onlineCurateBatch(s: SparkSession, indexPath: String,
       keptPath: String, evalSigs: org.apache.spark.sql.DataFrame,
       model: org.apache.spark.sql.DataFrame)(
       batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
     // 1. Gopher gate — row-local
     val gated = graft.api.Graft.gopherRules(batch.toDF(), "text")
       .filter(col("passes")).select(col("doc_id"), col("text"))
@@ -1223,7 +1165,7 @@ object StreamingQueries {
     val inBatch = hashed.join(
       hashed.groupBy("__h").agg(min("doc_id").as("doc_id")),
       Seq("__h", "doc_id"))
-    val kept = (if (id > 0 && fs.exists(new org.apache.hadoop.fs.Path(indexPath)))
+    val kept = (if (id > 0 && Files.exists(Paths.get(indexPath)))
         inBatch.join(
           s.read.parquet(indexPath).filter(col("batch_id") < id).select("__h"),
           Seq("__h"), "left_anti")
@@ -1231,8 +1173,7 @@ object StreamingQueries {
       .localCheckpoint(true) // consumed by the index fold-in, sigs, and score
     // fold in: kept hashes cover every hash this batch saw (in-batch dups
     // share their keeper's hash; earlier-batch dups are already indexed)
-    kept.select("__h").distinct()
-      .write.mode("overwrite").parquet(indexPath + s"/batch_id=$id")
+    BatchKeyed(indexPath).write(kept.select("__h").distinct(), id)
     // 3. decontaminate: row-local signatures vs the static eval signatures
     val sigs = graft.api.Graft.minhashSignatureRowLocal(
       kept.select(col("doc_id"), col("text")), "doc_id", "text",
@@ -1242,9 +1183,9 @@ object StreamingQueries {
       .select(col("new_id").as("doc_id")).distinct()
     val clean = kept.join(flagged, Seq("doc_id"), "left_anti")
     // 4. DSIR score with the static model; survivors land batch-keyed
-    graft.api.Graft.dsirScore(clean, "doc_id", "text", model, buckets = 256)
-      .select(col("doc_id"), col("n_tokens"), col("llr"))
-      .write.mode("overwrite").parquet(keptPath + s"/batch_id=$id")
+    BatchKeyed(keptPath).write(
+      graft.api.Graft.dsirScore(clean, "doc_id", "text", model, buckets = 256)
+        .select(col("doc_id"), col("n_tokens"), col("llr")), id)
   }
 
   /** The reference's I6 exactly: per-key rolling sum over an unbounded keyed
@@ -1270,39 +1211,28 @@ object StreamingQueries {
     * at-rest snapshot: version v(id) = latestWins(v(id−1) ∪ batch id),
     * computed with `Graft.cdcApply(keepTombstones = true)` so a delete in
     * an intermediate version can never be resurrected by a late lower-seq
-    * row. Exactly-once: versions are batch_id-KEYED overwrites derived
-    * only from the previous version + this batch's rows, so a retried
-    * batch rewrites its version byte-for-byte. The final version filters
-    * tombstones and rolls up per priority — identical output to the batch
-    * row, so the ORACLE IS cdc_apply's verbatim. Scale: per-batch work is
-    * one key-shuffle of |snapshot| + |batch| (at 100 TB the snapshot join
-    * would bucket on the key, exactly the partitioned-write layout). */
+    * row. Versions are derived only from the previous version + this
+    * batch's rows (`runStaged`'s exactly-once contract). The final version
+    * filters tombstones and rolls up per priority — identical output to the
+    * batch row, so the ORACLE IS cdc_apply's verbatim. Scale: per-batch
+    * work is one key-shuffle of |snapshot| + |batch| (at 100 TB the
+    * snapshot join would bucket on the key, exactly the partitioned-write
+    * layout). */
   def streamCdcApply(s: SparkSession, d: String): DataFrame = {
     val base = Scoped.dir(s, "graft_stream_cdc", d)
     val log = graft.queries.PipelineOps.cdcLog(s, d)
       .withColumn("__bb", least(col("seq") - 1, lit(1L)))
-    val srcDir = stageOrderedBatches(log, base, "__bb", 2)
-    val snapBase = base + "/snap"
-    val stream = s.readStream.schema(log.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    runBatches(s, stream, base) { (batch, id) =>
+    val snap = BatchKeyed(base + "/snap")
+    runStaged(s, log, base, "__bb", 2) { (batch, id) =>
       val rows = batch.drop("__bb")
       val merged =
         if (id == 0) graft.api.Graft.cdcApply(rows, "k", "seq", "op",
           keepTombstones = true)
-        else graft.api.Graft.cdcApply(
-          s.read.parquet(snapBase + s"/batch_id=${id - 1}")
-            .unionByName(rows),
+        else graft.api.Graft.cdcApply(snap.read(s, id - 1).unionByName(rows),
           "k", "seq", "op", keepTombstones = true)
-      merged.write.mode("overwrite").parquet(snapBase + s"/batch_id=$id")
+      snap.write(merged, id)
     }
-    val last = Option(new java.io.File(snapBase).listFiles())
-      .getOrElse(Array.empty)
-      .filter(_.getName.startsWith("batch_id="))
-      .map(_.getName.stripPrefix("batch_id=").toInt).max
-    graft.queries.PipelineOps.cdcRollup(
-      s.read.parquet(snapBase + s"/batch_id=$last")
-        .filter(col("op") =!= "D"))
+    graft.queries.PipelineOps.cdcRollup(snap.last(s).filter(col("op") =!= "D"))
   }
 
   /** SEQUENCE PACKING AT INGEST — pack_sequences' global token cumsum run
@@ -1311,32 +1241,25 @@ object StreamingQueries {
     * streamOnlineDedup convention) and each batch packs FROM the running
     * token offset carried over all earlier batches
     * (`Graft.packSequences(startOffset)`): the carry is ONE number per
-    * batch, written batch_id-keyed beside the batch's assignments, so a
-    * retried batch re-derives byte-for-byte from carry(id−1) — exactly-once
-    * without any keyed state store. The union of batch assignments IS the
-    * global packing; oracle = the batch rollup's cumsum under the arrival
+    * batch, written batch-keyed beside the batch's assignments and
+    * re-derived from carry(id−1) (`runStaged`'s exactly-once contract) — no
+    * keyed state store. The union of batch assignments IS the global
+    * packing; oracle = the batch rollup's cumsum under the arrival
     * order. Scale: per-batch work is the two-phase prefix sum over the
     * BATCH only; the cross-batch dependency is one scalar. */
   def streamPackSequences(s: SparkSession, d: String): DataFrame = {
     val base = Scoped.dir(s, "graft_stream_pack", d)
     val docs = graft.Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val srcDir = stageOrderedBatches(docs, base, "doc_id", 2)
-    val asgBase = base + "/asg"; val carryBase = base + "/carry"
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    runBatches(s, stream, base) { (batch, id) =>
-      val carry =
-        if (id == 0) 0L
-        else s.read.parquet(carryBase + s"/batch_id=${id - 1}")
-          .head().getLong(0)
-      val asg = graft.api.Graft.packSequences(batch, "doc_id",
+    val asg = BatchKeyed(base + "/asg"); val carries = BatchKeyed(base + "/carry")
+    runStaged(s, docs, base, "doc_id", 2) { (batch, id) =>
+      val carry = if (id == 0) 0L else carries.read(s, id - 1).head().getLong(0)
+      val packed = graft.api.Graft.packSequences(batch, "doc_id",
         "text", seqLen = 2048, startOffset = carry)
         .localCheckpoint(true) // consumed twice: assignments + carry
-      asg.write.mode("overwrite").parquet(asgBase + s"/batch_id=$id")
-      asg.agg((sum("n_tokens") + lit(carry)).as("carry"))
-        .write.mode("overwrite").parquet(carryBase + s"/batch_id=$id")
+      asg.write(packed, id)
+      carries.write(packed.agg((sum("n_tokens") + lit(carry)).as("carry")), id)
     }
-    s.read.parquet(asgBase)
+    s.read.parquet(asg.path)
       .groupBy("seq_id")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("seq_tokens"),
         min("doc_id").as("first_doc"))
@@ -1372,9 +1295,9 @@ object StreamingQueries {
     * the fold is associative in the batch boundary, so two batches pin
     * the carry exactly as three did at one less scaffold unit)
     * and the integer recursion folds forward from a carried state of
-    * FOUR INTEGERS PER TYPE — `Graft.ewmaFold(state)` — written
-    * batch_id-keyed, so a retried batch re-derives byte-for-byte. A type
-    * with no rows in a batch carries its state forward untouched. Final
+    * FOUR INTEGERS PER TYPE — `Graft.ewmaFold(state)` — carried at
+    * `id - 1` (`runStaged`'s exactly-once contract). A type with no rows in
+    * a batch carries its state forward untouched. Final
     * state == the batch monitor (one fold, one grid), oracle verbatim. */
   def streamEwma(s: SparkSession, d: String): DataFrame = {
     val base = Scoped.dir(s, "graft_stream_ewma", d)
@@ -1388,14 +1311,9 @@ object StreamingQueries {
                | div greatest(unix_timestamp(__mx) - unix_timestamp(__mn) + 3600, 1)""".stripMargin),
         lit(1L)))
       .select(col("event_type"), col("hour"), col("c"), col("__bb"))
-    val srcDir = stageOrderedBatches(bucketed, base, "__bb", 2)
-    val stateBase = base + "/state"
-    val stream = s.readStream.schema(bucketed.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    runBatches(s, stream, base) { (batch, id) =>
-      val prevState =
-        if (id == 0) None
-        else Some(s.read.parquet(stateBase + s"/batch_id=${id - 1}"))
+    val state = BatchKeyed(base + "/state")
+    runStaged(s, bucketed, base, "__bb", 2) { (batch, id) =>
+      val prevState = if (id == 0) None else Some(state.read(s, id - 1))
       val folded = graft.api.Graft.ewmaFold(
           batch.select("event_type", "hour", "c"), prevState,
           warmupHours = 6)
@@ -1407,13 +1325,9 @@ object StreamingQueries {
           st.join(folded, Seq("event_type"), "left_anti"))
         case None => folded
       }
-      carried.write.mode("overwrite").parquet(stateBase + s"/batch_id=$id")
+      state.write(carried, id)
     }
-    val last = Option(new java.io.File(stateBase).listFiles())
-      .getOrElse(Array.empty)
-      .filter(_.getName.startsWith("batch_id="))
-      .map(_.getName.stripPrefix("batch_id=").toInt).max
-    s.read.parquet(stateBase + s"/batch_id=$last")
+    state.last(s)
       .select(col("event_type"), col("i").as("n_hours"),
         col("s").as("final_ewma"), col("hi").as("n_high"),
         col("lo").as("n_low"))

@@ -130,6 +130,22 @@ class ExactSpec extends SparkSpec {
     }
   }
 
+  test("the build-once guard and lock, the staged stream open and the " +
+      "batch-keyed partition name are each spelled once") {
+    // Scoped.once owns the build-once marker and its lock; StreamingQueries'
+    // stagedStream the one-file-per-trigger open of staged batches and
+    // BatchKeyed the batch_id partition (its write, read and last listing)
+    val rules = Seq(
+      "table-commit guard" -> "\"_SUCCESS\"".r,
+      "staged stream open" -> "\"maxFilesPerTrigger\"".r,
+      "build lock" -> """\.synchronized \{""".r,
+      "batch-keyed partition name" -> "\"batch_id=\"".r)
+    for ((what, rule) <- rules) {
+      val hits = copiesOutsideExact(rule, allowed = Set("graft/SparkEntry.scala"))
+      assert(hits.size <= 1, hits.mkString(s"\n$what: ${hits.size} copies:\n", "\n", ""))
+    }
+  }
+
   test("Tokens.array and Tokens.count equal split(\" \", -1) without empty tokens") {
     // pieces that make leading, trailing and repeated spaces
     val piece = Gen.oneOf(" ", "  ", "a", "bc", "the", "x\ty", "é")

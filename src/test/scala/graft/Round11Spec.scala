@@ -314,7 +314,7 @@ class Round11Spec extends SparkSpec {
     // run once to build both index generations and commit the marker
     val first = queries.Dedup.dedupIndexFoldin(spark, sf).collect()
     val base = new java.io.File(Scoped.dir(spark, "graft_minhash_foldin", sf))
-    val marker = new java.io.File(base, "_FOLDIN_DONE")
+    val marker = new java.io.File(base, Scoped.built)
     val index = new java.io.File(base, "index")
     assert(marker.exists(), "fold-in must commit its marker")
     val filesAfterBuild = index.listFiles().map(_.getName).toSet
@@ -336,7 +336,7 @@ class Round11Spec extends SparkSpec {
   test("IVF refresh marker: committed index served at rest, missing marker rebuilds") {
     val first = queries.Similarity.knnIvfRefresh(spark, sf).collect()
     val baseDir = new java.io.File(Scoped.dir(spark, "graft_ivf_refresh", sf))
-    val marker = new java.io.File(baseDir, "_REFRESH_DONE")
+    val marker = new java.io.File(baseDir, Scoped.built)
     assert(marker.exists(), "refresh must commit its marker")
     val second = queries.Similarity.knnIvfRefresh(spark, sf).collect()
     assert(second.toSeq == first.toSeq)

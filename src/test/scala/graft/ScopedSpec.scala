@@ -90,6 +90,99 @@ class ScopedSpec extends SparkSpec {
       "graft_stream_kv_upsert"))), "the checkpoint outlived its query")
   }
 
+  test("Scoped.once runs its build once; a second call serves the directory") {
+    val runs = new java.util.concurrent.atomic.AtomicInteger
+    def call() = Scoped.once(spark, "graft_scoped_spec", "once") { dir =>
+      runs.incrementAndGet()
+      Files.write(Paths.get(dir, "part-0"), Array[Byte](1))
+    }
+    val dir = call()
+    assert(dir == Scoped.dir(spark, "graft_scoped_spec", "once"))
+    assert(call() == dir)
+    assert(runs.get == 1)
+    assert(Files.exists(Paths.get(dir, Scoped.built)))
+  }
+
+  test("Scoped.once: a build that throws leaves no marker, and the next call " +
+      "starts from an empty directory") {
+    val name = "graft_scoped_spec"
+    intercept[IllegalStateException] {
+      Scoped.once(spark, name, "failed") { dir =>
+        Files.write(Paths.get(dir, "torn"), Array[Byte](1))
+        throw new IllegalStateException("build failed")
+      }
+    }
+    val dir = Paths.get(Scoped.dir(spark, name, "failed"))
+    assert(Files.exists(dir.resolve("torn")))
+    assert(!Files.exists(dir.resolve(Scoped.built)))
+    var seen = Seq.empty[String]
+    Scoped.once(spark, name, "failed") { d =>
+      val ls = Files.list(Paths.get(d))
+      try seen = ls.iterator.asScala.map(_.getFileName.toString).toList
+      finally ls.close()
+    }
+    assert(seen.isEmpty, s"the retried build found ${seen.mkString(", ")}")
+    assert(Files.exists(dir.resolve(Scoped.built)))
+  }
+
+  test("Scoped.once: two threads that call it at once run the build once") {
+    val runs = new java.util.concurrent.atomic.AtomicInteger
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    def call(): String = Scoped.once(spark, "graft_scoped_spec", "race") { _ =>
+      runs.incrementAndGet()
+      started.countDown()
+      assert(release.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    }
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val first = new Thread(() => got.add(call()))
+    first.start()
+    assert(started.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    val second = new Thread(() => got.add(call()))
+    second.start()
+    // the second caller waits on the lock while the first build runs
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (second.getState != Thread.State.BLOCKED && System.nanoTime() < deadline)
+      Thread.sleep(5)
+    assert(second.getState == Thread.State.BLOCKED)
+    release.countDown()
+    first.join(); second.join()
+    assert(runs.get == 1)
+    assert(got.asScala.toSet == Set(Scoped.dir(spark, "graft_scoped_spec", "race")))
+  }
+
+  /** Every file and directory under `dir`, with its mtime. */
+  private def tree(dir: String): Map[String, Long] = {
+    val root = Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator.asScala.map(p => root.relativize(p).toString ->
+      Files.getLastModifiedTime(p, LinkOption.NOFOLLOW_LINKS).toMillis).toMap
+    finally walk.close()
+  }
+
+  test("each build-once artifact row run twice in a session gives the same " +
+      "rows and leaves its artifact untouched") {
+    val artifacts = Seq(
+      "dedup_incremental" -> "graft_minhash_sigs",
+      "dedup_index_foldin" -> "graft_minhash_foldin",
+      "dsir_select" -> "graft_dsir_model",
+      "knn_ivf_persisted" -> "graft_ivf_index",
+      "knn_ivf_refresh" -> "graft_ivf_refresh",
+      "knn_pq" -> "graft_pq_model",
+      "knn_ivfpq" -> "graft_ivfpq_index",
+      "schema_evolution" -> "graft_schema_evo")
+    for ((row, name) <- artifacts) {
+      def run() = SparkEntry.queries(row)(spark, sf).collect().map(_.toString).toSeq
+      val first = run()
+      val dir = Scoped.dir(spark, name, sf)
+      assert(Files.exists(Paths.get(dir, Scoped.built)), s"$row: $dir has no marker")
+      val built = tree(dir)
+      assert(first.nonEmpty, s"$row gave no rows")
+      assert(run() == first, s"$row: the second run gave other rows")
+      assert(tree(dir) == built, s"$row: the second run touched $dir")
+    }
+  }
+
   test("Scoped.conf restores a set key and unsets an unset one when body throws") {
     val set = "spark.sql.shuffle.partitions"
     val unset = "spark.sql.streaming.stateStore.providerClass"
